@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints the full per-query JSON early, writes the same
   * JSON to bench_out.json in the cwd, and prints a SHORT total line LAST so
@@ -41,21 +40,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // bench contract runs local[32] (builder prompt); env still overrides
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The generated-class cache defaults to 100 entries; the 99-query
-      // registry holds ~10× that many codegen units, so INTERLEAVED sweeps
-      // (below) would evict every compiled class between two runs of the
-      // same query and re-pay Janino compilation each sweep (measured:
-      // +40% on the headline, q92's steady state never arriving). A
-      // recurring-query warehouse keeps compiled plans resident; size the
-      // cache to the registry so sweeps 2..N time the engine, not javac.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Absorb one-time session costs (scheduler, codegen infra, shuffle
     // machinery, parquet reader classes) so per-query timings measure the

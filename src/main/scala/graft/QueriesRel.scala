@@ -28,7 +28,9 @@ object QueriesRel {
     * rewrites, so stale files from a previous run cannot leak. Cached so
     * bench reruns (min-of-3) time the recurring zero-exchange join, not
     * the one-time layout write — exactly the amortization bucketing buys
-    * at 100 TB, where the layout is written once and joined daily.
+    * at 100 TB, where the layout is written once and joined daily. Not on
+    * LayoutCache: the layout is a catalog table written by saveAsTable,
+    * which an atomic directory move cannot register.
     */
   private val bucketedFor =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{LayoutCache, Scalars}
 
 /** Time-series OLAP tier over the `events` stream table — the analytics a
   * rankings time-series (date-grained facts, SURVEY.md §1.1) delegates to
@@ -41,36 +41,24 @@ object QueriesTime {
     date_add(lit("1970-01-01").cast("date"),
       Scalars.longDiv(ns, NsPerDay).cast("int"))
 
-  /** One-time-per-JVM Hive-style date-partitioned layout of `events`
-    * backing q96 — the 100 TB fact-table layout: `day=YYYY-MM-DD/`
-    * directories so a date predicate prunes whole partitions at PLANNING
-    * time (PartitionFilters), before any file or footer is touched.
-    * `repartition(day)` ahead of the write gives one file per partition
-    * directory instead of numShufflePartitions small files per day — the
-    * small-file explosion that kills listing/scan at scale. Same caching,
-    * collision-proofing, and exclusive-build contract as q13b's bucketed
-    * layout (QueriesRel.orderGrainBucketed).
+  /** Hive-style date-partitioned layout of `events` backing q96 — the
+    * 100 TB fact-table layout: `day=YYYY-MM-DD/` directories so a date
+    * predicate prunes whole partitions at PLANNING time (PartitionFilters),
+    * before any file or footer is touched. `repartition(day)` ahead of the
+    * write gives one file per partition directory instead of
+    * numShufflePartitions small files per day — the small-file explosion
+    * that kills listing/scan at scale. Built on first touch and installed
+    * atomically by LayoutCache, keyed on the source content.
     */
-  private val partitionedFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def dayPartitionedEvents(s: SparkSession, d: String): String =
-    partitionedFor.synchronized { partitionedFor.getOrElseUpdate(d, {
-      val h = (d.hashCode & 0x7fffffff).toHexString
-      val wh = java.nio.file.Paths.get(java.net.URI.create(
-        s.conf.get("spark.sql.warehouse.dir")).getPath)
-      val path = wh.resolve(s"p96_events_$h").toFile
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(path) // first touch per JVM always rewrites; stale files can't leak
+  private[graft] def dayPartitionedEvents(s: SparkSession, d: String): String = {
+    val h = LayoutCache.sourceKey(d)
+    LayoutCache.installOnce(s, s"p96_events_$h") { tmp =>
       events(s, d)
         .withColumn("day", eventDay("ts"))
         .repartition(col("day"))
-        .write.partitionBy("day").mode("overwrite")
-        .parquet(path.toString)
-      path.toString
-    }) }
+        .write.partitionBy("day").parquet(tmp)
+    }
+  }
 
   val all: Seq[Q] = Seq(
 

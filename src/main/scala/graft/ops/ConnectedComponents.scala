@@ -185,12 +185,13 @@ object ConnectedComponents {
         .localCheckpoint(true)
       // convergence via ONE full aggregate (count of changed labels):
       // a single job, where filter().isEmpty ran escalating take()
-      // waves. Round 1 skips the check outright (r17): any edge (a, b)
-      // with a != b relabels its larger endpoint to a smaller id in
-      // round 1, so the check can only return "converged" on a
-      // self-loop-only graph — and there the skip merely defers
-      // detection to round 2's check over an unchanged (tiny) table.
-      converged = i > 0 && next
+      // waves. Round 1 skips the check (r17): any edge (a, b) with
+      // a != b relabels its larger endpoint to a smaller id in round 1,
+      // so the check can only return "converged" on a self-loop-only or
+      // edgeless graph — and there the skip merely defers detection to
+      // round 2's check over an unchanged (tiny) table. With maxIter == 1
+      // there is no round 2, so round 1 checks.
+      converged = (i > 0 || maxIter == 1) && next
         .agg(count(when(col("component") =!= col("prev"), 1))).head()
         .getLong(0) == 0L
       labels = next.select("v", "component")

@@ -63,7 +63,7 @@ object RegisteredDomainExpr {
 }
 
 /** SparkSessionExtensions entry point:
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * `.withExtensions(new GraftExtensions)` on a session builder or
   * `spark.sql.extensions=graft.ops.GraftExtensions` injects the native
   * function AND the band-join optimizer rewrite into every session
   * (SURVEY.md §2.11 extension surface + §4.2 custom-Rule tier).

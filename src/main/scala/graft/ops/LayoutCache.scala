@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** First-touch physical-layout builds, installed ATOMICALLY into the
   * session warehouse — shared by every op that materializes an alternate
-  * layout of a base table (z-order q104, bloom-filter q114, bucketing).
+  * layout of a base table (z-order q104, bloom-filter q114, day
+  * partitioning q96, compaction, retention).
   *
   * Two hazards, both real in this repo's own harness:
   *  - same-JVM races (Verify runs queries concurrently-ish, tests share

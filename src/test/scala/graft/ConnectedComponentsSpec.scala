@@ -67,6 +67,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("min-prop returns an already-converged graph at maxIter = 1") {
+    // self-loops only, or no edges at all: round 1 changes no label, so
+    // a single round must detect the fixpoint rather than throw
+    assert(componentsMinProp(Seq((1L, 1L), (2L, 2L)), maxIter = 1) ==
+      Map(1L -> 1L, 2L -> 2L))
+    assert(componentsMinProp(Seq.empty, maxIter = 1).isEmpty)
+  }
+
   test("star contraction throws instead of extracting from a non-star set") {
     // diameter-255 path cannot star-ify in 2 rounds; silent extraction
     // would emit conflicting labels per vertex (under-merge)

@@ -138,15 +138,8 @@ class IngestSpec extends SparkSpec {
     // day-2 batch re-runs with corrected data; day-1 must survive
     val rerun = Seq(("2023-01-02", "c", 30L), ("2023-01-02", "d", 40L))
       .toDF("date", "k", "v")
-    val prev = spark.conf.getOption(
-      "spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rerun.write.partitionBy("date").mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", p)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      rerun.write.partitionBy("date").mode("overwrite").parquet(dir)
     }
     // partition-column inference types `date` as DATE — cast for compare
     val got = spark.read.parquet(dir)

@@ -50,14 +50,11 @@ class PlanSpec extends SparkSpec {
     // must single-task without two-phase salting) and pre-shuffle load
     // bounds. Thresholds are shrunk so test-sized data crosses them; the
     // mechanism is identical at production sizes.
-    val confs = Map(
+    withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2") {
       import org.apache.spark.sql.functions.{col, lit, lpad, when}
       val fact = spark.range(0, 200000).toDF("id")
         .withColumn("k", when(col("id") < 150000, lit(7L)).otherwise(col("id")))
@@ -69,8 +66,7 @@ class PlanSpec extends SparkSpec {
       val p = j.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE did not split the hot key (skew=true missing):\n$p")
-    } finally saved.foreach { case (k, vo) =>
-      vo.fold(spark.conf.unset(k))(v => spark.conf.set(k, v)) }
+    }
   }
 
   test("q10 dimension lookup join broadcasts the dimension side") {

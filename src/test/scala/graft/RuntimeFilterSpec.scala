@@ -28,15 +28,6 @@ import graft.QueriesTime.dayPartitionedEvents
   */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("dynamic partition pruning: a dim-side filter prunes the " +
     "partitioned fact scan at runtime (star-schema date-dim shape)") {
     val path = dayPartitionedEvents(spark, sf)

@@ -96,13 +96,10 @@ class ScaleOpsSpec extends SparkSpec {
     // thresholds (creation ≤ 10 MB, fact scan ≥ 10 GB) are exactly right
     // at scale and far above test data — shrink them here to prove the
     // mechanism; nothing else changes between local and cluster.
-    val confs = Map(
+    withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force shuffle join
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB") {
       val fact = Tables.lineitem(spark, sf)
         .select("l_orderkey", "l_quantity")
       val dim = Tables.orders(spark, sf)
@@ -118,7 +115,6 @@ class ScaleOpsSpec extends SparkSpec {
           .filter(col("o_orderpriority") === "1-URGENT"),
         col("l_orderkey") === col("o_orderkey")).count()
       assert(j.count() === expect)
-    } finally saved.foreach { case (k, vo) =>
-      vo.fold(spark.conf.unset(k))(v => spark.conf.set(k, v)) }
+    }
   }
 }

@@ -63,7 +63,7 @@ class Shingles3ExprSpec extends SparkSpec {
     val expect = Tables.documents(spark, sf)
       .select(col("doc_id"), native(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    withSqlConf("spark.sql.codegen.wholeStage" -> "false",
+    withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val got = Tables.documents(spark, sf)
         .select(col("doc_id"), native(col("text")).as("sh"))
@@ -94,15 +94,5 @@ class Shingles3ExprSpec extends SparkSpec {
       spark.sql("SELECT shingles3()").collect()
     }
     assert(bad.getMessage.contains("shingles3"), bad.getMessage)
-  }
-
-  private def withSqlConf[T](kvs: (String, String)*)(f: => T): T = {
-    val old = kvs.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

@@ -77,16 +77,11 @@ class TablesSpec extends SparkSpec {
   }
 
   test("ts contract: tz-adjusted TIMESTAMP (us) normalizes") {
-    val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try {
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       val dir = writeVariant("tz") { df =>
         df.withColumn("ts", timestamp_micros(expr("ts DIV 1000L")))
       }
       assert(eventsNs(dir) == expectedNs)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
-      case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
     }
   }
 

@@ -65,7 +65,7 @@ class TokenHashExprSpec extends SparkSpec {
     val expect = Tables.documents(spark, sf)
       .select(col("doc_id"), Scalars.tokenHash(col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    withSqlConf("spark.sql.codegen.wholeStage" -> "false",
+    withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val got = Tables.documents(spark, sf)
         .select(col("doc_id"), Scalars.tokenHash(col("text")).as("h"))
@@ -104,15 +104,5 @@ class TokenHashExprSpec extends SparkSpec {
       spark.sql("SELECT token_hash('a', 'b')").collect()
     }
     assert(two.getMessage.contains("token_hash"), two.getMessage)
-  }
-
-  private def withSqlConf[T](kvs: (String, String)*)(f: => T): T = {
-    val old = kvs.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }
