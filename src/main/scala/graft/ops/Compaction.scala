@@ -1,6 +1,9 @@
 package graft.ops
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 
@@ -24,10 +27,16 @@ import org.apache.spark.sql.SparkSession
   *    partition's own files; no shuffle, no ordering assumption, no
   *    filter. The declared q116 oracles the post-compaction table against
   *    the raw source in DuckDB.
+  *  - **Concurrent**: the partitions that need a rewrite are rewritten
+  *    side by side on a pool of `defaultParallelism` threads made per
+  *    call. Each rewrite is a small job; run one after another they are
+  *    bound by job dispatch while most cores sit idle.
   *  - **Swap, not in-place**: new files land in a sibling temp dir and
   *    replace the partition directory by rename, so a concurrent reader
   *    sees the old complete file set or the new one, never a mix. The
-  *    old dir is kept out of the way until the swap completes. (On a real
+  *    old dir is kept out of the way until the swap completes. Both
+  *    siblings have hidden (dot-prefixed) names, so a reader listing the
+  *    table never takes them for partitions. (On a real
   *    lake this job is one OPTIMIZE on a transactional table format —
   *    Delta/Iceberg make the swap a metadata commit; this is the
   *    filesystem-layout equivalent for plain parquet dirs.)
@@ -51,13 +60,25 @@ object Compaction {
       .filter(p => Files.isRegularFile(p))
       .filter(_.getFileName.toString.endsWith(".parquet"))
 
+  /** A fresh swap sibling of partition `dir`: `.<name>.<kind>-<uuid>`. The
+    * leading dot hides it from Spark's file index, as it hides
+    * [[Retention]]'s tombstones, so a reader listing the table during a
+    * rewrite (or after a crash in one) never reads it as a partition.
+    */
+  def swapSibling(dir: Path, kind: String): Path =
+    dir.resolveSibling(
+      s".${dir.getFileName}.$kind-${java.util.UUID.randomUUID}")
+
   /** Per-partition file stats for a one-level Hive-partitioned table
-    * (`col=value/` leaf dirs under `tableDir`).
+    * (`col=value/` leaf dirs under `tableDir`; hidden swap siblings are
+    * not partitions).
     */
   def stats(tableDir: String): Seq[PartitionStat] =
     Nio.list(Paths.get(tableDir))
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.contains("="))
+      .filter { p =>
+        val n = p.getFileName.toString
+        Files.isDirectory(p) && !n.startsWith(".") && n.contains("=")
+      }
       .map { p =>
         val fs = dataFiles(p)
         PartitionStat(p, fs.size, fs.map(Files.size(_)).sum)
@@ -66,38 +87,52 @@ object Compaction {
 
   /** Bin-pack every partition of `tableDir` to ceil(bytes/targetBytes)
     * files; partitions already at-or-below that count are left untouched.
+    * Up to `defaultParallelism` rewrites run at once. Every submitted
+    * rewrite finishes before the first failure is rethrown, so none is
+    * still running when `compact` returns; a failed partition keeps its
+    * original files.
     */
   def compact(s: SparkSession, tableDir: String, targetBytes: Long): Report = {
     require(targetBytes > 0, "targetBytes must be positive")
     val before = stats(tableDir)
-    var rewritten = 0
-    var filesAfter = 0
-    before.foreach { st =>
-      val packed = math.max(1L, (st.bytes + targetBytes - 1) / targetBytes)
-        .toInt
-      if (st.files > packed) {
-        val tmp = st.dir.resolveSibling(
-          st.dir.getFileName.toString + s".tmp-${java.util.UUID.randomUUID}")
-        // read THIS partition's files only; the partition value lives in
-        // the directory name, so the rewrite never touches it
-        s.read.parquet(st.dir.toString)
-          .coalesce(packed)
-          .write.parquet(tmp.toString)
-        // drop the nested _SUCCESS marker — the table-level one is the
-        // contract (LayoutCache); per-partition markers would read as
-        // spurious tables to basePath-less readers
-        Files.deleteIfExists(tmp.resolve("_SUCCESS"))
-        val old = st.dir.resolveSibling(
-          st.dir.getFileName.toString + s".old-${java.util.UUID.randomUUID}")
-        Files.move(st.dir, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(tmp, st.dir, StandardCopyOption.ATOMIC_MOVE)
-        old.toFile.listFiles().foreach(_.delete())
-        Files.delete(old)
-        rewritten += 1
-        filesAfter += packed
-      } else filesAfter += st.files
+    val packed = before.map(st =>
+      st -> math.max(1L, (st.bytes + targetBytes - 1) / targetBytes).toInt)
+    val todo = packed.filter { case (st, n) => st.files > n }
+    val pool = Executors.newFixedThreadPool(s.sparkContext.defaultParallelism)
+    val failures =
+      try {
+        val running = todo.map { case (st, n) =>
+          pool.submit[Unit](() => rewrite(s, st.dir, n))
+        }
+        running.flatMap(f => Try(f.get()).failed.toOption)
+      } finally pool.shutdown()
+    failures.map {
+      case e: ExecutionException => e.getCause
+      case e => e
+    } match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ =>
     }
-    Report(before.size, rewritten, before.map(_.files).sum, filesAfter)
+    Report(before.size, todo.size, before.map(_.files).sum,
+      packed.map { case (st, n) => math.min(st.files, n) }.sum)
+  }
+
+  /** Read-coalesce-write one partition into a hidden sibling, then swap it
+    * in by two renames. The partition value lives in the directory name,
+    * so the rewrite never touches it.
+    */
+  private def rewrite(s: SparkSession, dir: Path, packed: Int): Unit = {
+    val tmp = swapSibling(dir, "tmp")
+    try s.read.parquet(dir.toString).coalesce(packed).write.parquet(tmp.toString)
+    catch { case e: Throwable => Try(Nio.deleteTree(tmp)); throw e }
+    // drop the nested _SUCCESS marker — the table-level one is the
+    // contract (LayoutCache); per-partition markers would read as
+    // spurious tables to basePath-less readers
+    Files.deleteIfExists(tmp.resolve("_SUCCESS"))
+    val old = swapSibling(dir, "old")
+    Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+    Nio.deleteTree(old)
   }
 
   /** Fragmented-then-compacted day-partitioned `events` layout backing the

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,14 +24,22 @@ object ProcessedLog {
 
   /** Work units not yet marked processed. `units` and the log must share
     * the key columns.
+    *
+    * The gate is two jobs on a non-empty log: the broadcast of the log and
+    * the caller's action. The log is read with the key schema of `units`,
+    * so no job infers it from the parquet footers. The log is not
+    * deduplicated first: a left anti join keeps a unit row iff no log row
+    * matches its key, so duplicate log rows change neither which units
+    * come back nor how often, and a `distinct()` would only add a shuffle.
     */
   def pending(units: DataFrame, logDir: String, keys: Seq[String]): DataFrame = {
-    val spark = units.sparkSession
-    val p = new java.io.File(logDir)
+    val unitKeys = units.select(keys.map(col): _*)
+    val dir = Paths.get(logDir)
     val logDf =
-      if (p.exists() && p.listFiles().exists(_.getName.endsWith(".parquet")))
-        spark.read.parquet(logDir).select(keys.map(col): _*).distinct()
-      else units.select(keys.map(col): _*).limit(0) // empty, schema-matched
+      if (Files.isDirectory(dir) &&
+          Nio.list(dir).exists(_.getFileName.toString.endsWith(".parquet")))
+        units.sparkSession.read.schema(unitKeys.schema).parquet(logDir)
+      else unitKeys.limit(0) // empty, schema-matched
     units.join(broadcast(logDf), keys, "left_anti")
   }
 

@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path, Paths}
 
-import graft.ops.Compaction
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
+
+import graft.ops.{Compaction, Nio}
 
 /** Small-file compaction mechanics (ops/Compaction): data identity,
   * bin-pack arithmetic, incrementality, idempotence, and that the
@@ -21,6 +24,9 @@ class CompactionSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("day").parquet(dir)
     dir
   }
+
+  private def rowsOf(dir: Path): Seq[String] =
+    spark.read.parquet(dir.toString).collect().map(_.toString).toSeq.sorted
 
   test("compaction preserves the exact row multiset and bin-packs " +
     "every fragmented partition; re-run is a no-op") {
@@ -104,5 +110,48 @@ class CompactionSpec extends SparkSpec {
         .contains("day"),
       s"no day partition filter on the compacted scan:\n$scan")
     assert(q.collect().head.getLong(1) > 0)
+  }
+
+  test("a swap sibling is hidden: a reader listing the table mid-rewrite " +
+    "keeps its rows and types, and stats skips it") {
+    val dir = freshFragmented(2)
+    val table = spark.read.parquet(dir)
+    val (rows, dayType) = (table.count(), table.schema("day").dataType)
+    assert(dayType == DateType)
+    val parts = Compaction.stats(dir)
+    // a rewrite's temp sibling, caught between write and swap
+    val one = parts.head.dir
+    val tmp = Compaction.swapSibling(one, "tmp")
+    Files.createDirectory(tmp)
+    Nio.list(one).foreach(f => Files.copy(f, tmp.resolve(f.getFileName)))
+    val seen = spark.read.parquet(dir)
+    assert(seen.count() == rows, "the sibling was read as a partition")
+    assert(seen.schema("day").dataType == DateType)
+    assert(Compaction.stats(dir) == parts)
+  }
+
+  test("a failed rewrite: compact throws only after the other rewrites " +
+    "finish; every partition keeps its rows and no sibling is visible") {
+    val dir = freshFragmented(8)
+    val parts = Compaction.stats(dir)
+    assert(parts.size > spark.sparkContext.defaultParallelism)
+    val before = parts.map(st => st.dir -> rowsOf(st.dir)).toMap
+    val bad = parts.head.dir
+    val victim = Nio.list(bad)
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.write(victim, "not a parquet file".getBytes)
+    Files.deleteIfExists(bad.resolve(s".${victim.getFileName}.crc"))
+    val badFiles = Nio.list(bad).toSet
+
+    intercept[Exception](Compaction.compact(spark, dir, 64L * 1024 * 1024))
+    assert(Nio.list(bad).toSet == badFiles, "the failed partition changed")
+    parts.map(_.dir).filterNot(_ == bad).foreach { d =>
+      assert(rowsOf(d) == before(d), s"$d lost or gained rows")
+    }
+    // every other rewrite had already swapped in when compact threw
+    assert(Compaction.stats(dir).filterNot(_.dir == bad).forall(_.files == 1))
+    val visible = Nio.list(Paths.get(dir)).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).filterNot(_.startsWith("."))
+    assert(visible.toSet == parts.map(_.dir.getFileName.toString).toSet)
   }
 }

@@ -101,4 +101,47 @@ class PipelinesSpec extends SparkSpec {
     assert(new java.io.File(out).listFiles()
       .exists(_.getName.startsWith("date=")))
   }
+
+  test("bulkIngest clusters each append by date, AQE on and off: one " +
+    "parquet file per date per call, and the rows read back are the CSV rows") {
+    val rows = for (d <- 1 to 3; i <- 0 until 6) yield
+      (s"d$i.com", f"2023-01-$d%02d", s"t$i", s"https://d$i.com/$d",
+        i + 1, 10L * i, 0.25 * i)
+    // three CSV files per append, each spanning every date: a scan task
+    // per file, so an unclustered write would leave up to 3 files a date
+    def shards(part: Seq[(String, String, String, String, Int, Long, Double)])
+        : String = {
+      val dir = java.nio.file.Files.createTempDirectory("shards")
+      part.zipWithIndex.groupBy(_._2 % 3).foreach { case (k, rs) =>
+        java.nio.file.Files.write(dir.resolve(s"s$k.csv"),
+          ("domain,date,term,url,rank,volume,cpc\n" + rs.map(_._1)
+            .map(_.productIterator.mkString(",")).mkString("\n")).getBytes)
+      }
+      dir.toString
+    }
+    val (first, second) = rows.partition(_._5 <= 3)
+    Seq("true", "false").foreach { aqe =>
+      withConf("spark.sql.adaptive.enabled" -> aqe) {
+        val out = java.nio.file.Files.createTempDirectory("wh")
+        def filesPerDate: Map[String, Int] =
+          graft.ops.Nio.list(out)
+            .filter(_.getFileName.toString.startsWith("date="))
+            .map(d => d.getFileName.toString -> graft.ops.Nio.list(d)
+              .count(_.getFileName.toString.endsWith(".parquet"))).toMap
+        bulkIngest(spark, shards(first), out.toString)
+        assert(filesPerDate.size == 3 && filesPerDate.values.forall(_ == 1),
+          s"AQE $aqe: $filesPerDate")
+        bulkIngest(spark, shards(second), out.toString)
+        assert(filesPerDate.size == 3 && filesPerDate.values.forall(_ == 2),
+          s"AQE $aqe: $filesPerDate")
+        val back = spark.read.parquet(out.toString)
+          .select("domain", "date", "term", "url", "rank", "volume", "cpc")
+          .collect().map(r => (r.getString(0), r.getDate(1).toString,
+            r.getString(2), r.getString(3), r.getInt(4), r.getLong(5),
+            r.getDouble(6)))
+        assert(back.toSeq.sortBy(_.toString) == rows.sortBy(_.toString),
+          s"AQE $aqe")
+      }
+    }
+  }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.ops.ProcessedLog
 
 /** Batch idempotency (T4 analog): unprocessed-unit selection via anti-join
@@ -38,5 +43,51 @@ class ProcessedLogSpec extends SparkSpec {
     ProcessedLog.mark(units2, log, keys)
     ProcessedLog.mark(units2, log, keys)
     assert(ProcessedLog.pending(units2, log, keys).count() == 0)
+  }
+
+  /** Jobs started while `body` ran. A sentinel job closes each side: the
+    * listener bus delivers events in order, so once the sentinel's start
+    * arrives every earlier job start has been counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    @volatile var sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("graft.sentinel") != null))
+          sentinel.countDown()
+        else started.incrementAndGet()
+    }
+    def drain(): Unit = {
+      sentinel = new CountDownLatch(1)
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinel.await(30, TimeUnit.SECONDS), "listener bus not drained")
+    }
+    sc.addSparkListener(listener)
+    try { drain(); started.set(0); body; drain(); started.get() }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("a gate on a non-empty log runs two jobs: the log's broadcast and " +
+    "the action (no schema inference, no dedup shuffle)") {
+    val log = java.nio.file.Files.createTempDirectory("plog").toString + "/log"
+    val keys = Seq("locale_page", "chunk")
+    ProcessedLog.mark(Seq(("en-us/1", 0)).toDF("locale_page", "chunk"),
+      log, keys)
+    val units = Seq(("en-us/1", 0), ("en-us/1", 1)).toDF("locale_page", "chunk")
+    var open = false
+    assert(jobsOf { open = !ProcessedLog.pending(units, log, keys).isEmpty } == 2)
+    assert(open)
+  }
+
+  test("pending treats a log path that is a file, not a directory, as " +
+    "an empty log") {
+    val log = java.nio.file.Files.createTempFile("plog", ".txt").toString
+    val units = Seq(("en-us/1", 0)).toDF("locale_page", "chunk")
+    assert(ProcessedLog.pending(units, log, Seq("locale_page", "chunk"))
+      .count() == 1)
   }
 }
