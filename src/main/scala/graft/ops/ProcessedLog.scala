@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
 object ProcessedLog {
 
   /** Work units not yet marked processed. `units` and the log must share
-    * the key columns.
+    * the key columns, with the same types that [[mark]] wrote to the log:
+    * the log is read with the units' key schema, so a narrower type there
+    * (an Int `chunk` against a logged Long) fails at scan time.
     *
     * The gate is two jobs on a non-empty log: the broadcast of the log and
     * the caller's action. The log is read with the key schema of `units`,

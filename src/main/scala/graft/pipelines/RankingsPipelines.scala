@@ -109,27 +109,23 @@ object RankingsPipelines {
     * The 2,137-subprocess insert loop is one read + one write; Spark's
     * scheduler replaces the process fan-out (T2).
     *
-    * The write is clustered by date, so each call writes one file per date
-    * rather than one per scan task per date: the MergeTree insert that
-    * makes one part per partition. With AQE on it is a `rebalance` hint on
-    * `date`, and `optimizeSkewsInRebalancePartitions` still splits a date
-    * that is too big for one task. Spark drops that hint when AQE is off,
-    * so there it is a plain hash repartition on `date` (no skew split:
-    * that needs AQE either way). The stream sink (ops/StreamingIngest) is
-    * not clustered: micro-batches run without AQE, so a repartition there
+    * The write carries a `rebalance` hint on `date`, so with AQE on each
+    * call writes one file per date rather than one per scan task per date:
+    * the MergeTree insert that makes one part per partition.
+    * `optimizeSkewsInRebalancePartitions` still splits a date that is too
+    * big for one task, which a plain repartition on `date` would not.
+    * Spark drops the hint when AQE is off, and the write is then one file
+    * per scan task per date. The stream sink (ops/StreamingIngest) is not
+    * clustered: micro-batches run without AQE, so a repartition there
     * would make one task the only writer of each date in every batch.
     */
   def bulkIngest(
       spark: SparkSession,
       csvGlob: String,
-      outDir: String): Unit = {
-    val rows = graft.Tables.readRankingsCsv(spark, csvGlob)
-    val clustered =
-      if (spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
-        rows.hint("rebalance", col("date"))
-      else rows.repartition(col("date"))
-    clustered.write.mode("append").partitionBy("date").parquet(outDir)
-  }
+      outDir: String): Unit =
+    graft.Tables.readRankingsCsv(spark, csvGlob)
+      .hint("rebalance", col("date"))
+      .write.mode("append").partitionBy("date").parquet(outDir)
 
   /** Reference-shaped side-table schemas (FIXTURES.md §A3). */
   val topicsSchema: StructType = StructType(Seq(

@@ -130,8 +130,8 @@ class CompactionSpec extends SparkSpec {
     assert(Compaction.stats(dir) == parts)
   }
 
-  test("a failed rewrite: compact throws only after the other rewrites " +
-    "finish; every partition keeps its rows and no sibling is visible") {
+  test("a failed rewrite: compact throws, the failed partition is " +
+    "unchanged, the others keep their rows and no sibling is visible") {
     val dir = freshFragmented(8)
     val parts = Compaction.stats(dir)
     assert(parts.size > spark.sparkContext.defaultParallelism)
@@ -148,7 +148,7 @@ class CompactionSpec extends SparkSpec {
     parts.map(_.dir).filterNot(_ == bad).foreach { d =>
       assert(rowsOf(d) == before(d), s"$d lost or gained rows")
     }
-    // every other rewrite had already swapped in when compact threw
+    // the other partitions were rewritten, not skipped
     assert(Compaction.stats(dir).filterNot(_.dir == bad).forall(_.files == 1))
     val visible = Nio.list(Paths.get(dir)).filter(Files.isDirectory(_))
       .map(_.getFileName.toString).filterNot(_.startsWith("."))
