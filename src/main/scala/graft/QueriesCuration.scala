@@ -621,9 +621,8 @@ object QueriesCuration {
           .select(col("doc_id"), col("source"),
             split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 2)
-          .select(col("doc_id"), col("source"), explode(expr(
-            "transform(sequence(1, size(t) - 1), " +
-              "i -> concat_ws(' ', slice(t, i, 2)))")).as("bg"))
+          .select(col("doc_id"), col("source"),
+            explode(Scalars.kgrams("t", 2)).as("bg"))
           .select(col("doc_id"), col("source"),
             pmod(Scalars.tokenHash(col("bg")), lit(4096L)).as("bucket"))
         val db = bg.groupBy("doc_id", "source", "bucket")

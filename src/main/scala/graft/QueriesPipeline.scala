@@ -69,15 +69,11 @@ object QueriesPipeline {
     // oracle. Measured at sf1: see SCALE.md (the q70 linear lower bound
     // was the md5 count; the native form shaves the interpretation tax).
     Q("q70b_rolling_hash_native",
-      (s, d) => {
-        graft.ops.RollingHashExpr.register(s)
-        // fanOut: same serial-scan argument as q70 (the native expression
-        // is ~1.6× faster per row but still one md5 digest per token)
-        fanOut(documents(s, d))
-          .select(col("doc_id"),
-            call_function("rolling_hash", col("text")).as("rhash"))
-          .orderBy("doc_id")
-      },
+      // fanOut: same serial-scan argument as q70 (the native expression
+      // is ~1.6× faster per row but still one md5 digest per token)
+      (s, d) => fanOut(documents(s, d))
+        .select(col("doc_id"), Scalars.rollingHash(col("text")).as("rhash"))
+        .orderBy("doc_id"),
       Some(s"""SELECT doc_id,
               |  CAST(list_reduce(
               |    list_prepend(0, list_transform(str_split(text, ' '),
@@ -122,8 +118,7 @@ object QueriesPipeline {
         fanOut(documents(s, d))
           .select(split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 2)
-          .select(explode(expr("transform(sequence(1, size(t) - 1), " +
-            "i -> concat_ws(' ', slice(t, i, 2)))")).as("bigram"))
+          .select(explode(Scalars.kgrams("t", 2)).as("bigram"))
           .groupBy("bigram")
           .agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("bigram").asc)

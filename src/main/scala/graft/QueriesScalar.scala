@@ -151,8 +151,8 @@ object QueriesScalar {
              |   CAST(o_orderkey AS VARCHAR), '_'))[-1] AS ts_part
              |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
-    // F3/F6 domain parse (simplified last-two-labels rule; PSL parity is
-    // unit-test-only — SURVEY.md §7.5 #2). `www.` stripped first, subdomain
+    // F3/F6 domain parse (simplified last-two-labels rule; full PSL parity
+    // is q19b — SURVEY.md §7.5 #2). `www.` stripped first, subdomain
     // NULL when empty (`rankings_generator.py:165-167`).
     Q("q19_domain_parse",
       (s, d) => supplier(s, d)
@@ -187,14 +187,10 @@ object QueriesScalar {
     // Matches tldextract (`rankings_generator.py:165-167`) incl. wildcard
     // and exception rules, which q19's simplified 2-label rule cannot.
     Q("q19b_domain_parse_psl",
-      (s, d) => {
-        graft.ops.RegisteredDomainExpr.register(s)
-        supplier(s, d)
-          .select(col("s_suppkey"), pslFqdnCol.as("fqdn"))
-          .withColumn("root_domain",
-            call_function("registered_domain", col("fqdn")))
-          .orderBy("s_suppkey")
-      },
+      (s, d) => supplier(s, d)
+        .select(col("s_suppkey"), pslFqdnCol.as("fqdn"))
+        .withColumn("root_domain", Scalars.registeredDomainPsl(col("fqdn")))
+        .orderBy("s_suppkey"),
       Some(s"""WITH rules AS (
               |  SELECT kind, rule FROM read_csv(
               |    '$pslRulesPath', header=true)

@@ -137,8 +137,6 @@ object QueriesText {
   /** DuckDB token hash identical to Scalars.tokenHash. */
   private[graft] def tokSql(w: String): String =
     s"(('0x' || substr(md5($w), 1, 15))::BIGINT)"
-  private[graft] def mhSql(w: String, a: Long, b: Long): String =
-    s"(($a * (${tokSql(w)} % $P) + $b) % $P)"
 
   private[graft] def minhashSqlExpr(a: Long, b: Long): String =
     s"CAST(list_aggregate(list_transform(hs, h -> (($a * h + $b) % $P)), " +
@@ -261,9 +259,7 @@ object QueriesText {
     fanOut(docs)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(t) - 2), " +
-          "i -> concat_ws(' ', slice(t, i, 3)))")).as("sh"))
+      .select(col("doc_id"), explode(Scalars.kgrams("t", 3)).as("sh"))
       .select(col("doc_id"), (Scalars.tokenHash(col("sh")) % P).as("h"))
       .groupBy("doc_id")
       .agg(mins.head, mins.tail: _*)

@@ -768,9 +768,7 @@ object QueriesTextAnalysis {
         val grams = fanOut(dtext)
           .select(col("h"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 3)
-          .select(col("h"), explode(expr(
-            "transform(sequence(1, size(t) - 2), " +
-              "i -> concat_ws(' ', slice(t, i, 3)))")).as("gram"))
+          .select(col("h"), explode(Scalars.kgrams("t", 3)).as("gram"))
           .withColumn("g", Scalars.tokenHash(col("gram")) % P)
           .localCheckpoint(true)
         val top = grams.groupBy("g")

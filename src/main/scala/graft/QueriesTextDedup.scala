@@ -620,9 +620,7 @@ object QueriesTextDedup {
         val mat = fanOut(documents(s, d))
           .select(col("source"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 3)
-          .select(col("source"), explode(expr(
-            "transform(sequence(1, size(t) - 2), " +
-              "i -> concat_ws(' ', slice(t, i, 3)))")).as("sh"))
+          .select(col("source"), explode(Scalars.kgrams("t", 3)).as("sh"))
           .select(col("source"),
             (Scalars.tokenHash(col("sh")) % P).as("h"))
           .distinct()
@@ -723,9 +721,7 @@ object QueriesTextDedup {
           .select(col("ch"), col("text")))
           .select(col("ch"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 3)
-          .select(col("ch"), explode(expr(
-            "transform(sequence(1, size(t) - 2), " +
-              "i -> concat_ws(' ', slice(t, i, 3)))")).as("sh"))
+          .select(col("ch"), explode(Scalars.kgrams("t", 3)).as("sh"))
           .select(col("ch"),
             (Scalars.tokenHash(col("sh")) % P).as("h"))
           .distinct()
@@ -829,8 +825,7 @@ object QueriesTextDedup {
           .select(col("doc_id"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 3)
           .select(col("doc_id"), (size(col("t")) - 3).as("max_pos"),
-            posexplode(expr("transform(sequence(1, size(t) - 2), " +
-              "i -> concat_ws(' ', slice(t, i, 3)))"))
+            posexplode(Scalars.kgrams("t", 3))
               .as(Seq("pos", "sh")))
           .select(col("doc_id"), col("pos"), col("max_pos"),
             (Scalars.tokenHash(col("sh")) % P).as("h"))
@@ -908,9 +903,7 @@ object QueriesTextDedup {
         val sh = fanOut(documents(s, d))
           .select(col("source"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 3)
-          .select(col("source"), explode(expr(
-            "transform(sequence(1, size(t) - 2), " +
-              "i -> concat_ws(' ', slice(t, i, 3)))")).as("sh"))
+          .select(col("source"), explode(Scalars.kgrams("t", 3)).as("sh"))
           .select(col("source"),
             (Scalars.tokenHash(col("sh")) % P).as("h"))
           .repartition(col("h"))
@@ -982,9 +975,7 @@ object QueriesTextDedup {
         val grams = distinctDocs
           .select(col("doc_id"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 5)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(1, size(t) - 4), " +
-              "i -> concat_ws(' ', slice(t, i, 5)))")).as("gram"))
+          .select(col("doc_id"), explode(Scalars.kgrams("t", 5)).as("gram"))
           .withColumn("g", Scalars.tokenHash(col("gram")) % P)
         // the map-side gram build carries no reusable exchange, so the
         // two consumers below would each recompute the explode; ONE
@@ -1427,8 +1418,7 @@ object QueriesTextDedup {
         val grams = base
           .filter(size(col("t")) >= 5)
           .select(col("source"), col("doc_id"),
-            posexplode(expr("transform(sequence(1, size(t) - 4), " +
-              "i -> concat_ws(' ', slice(t, i, 5)))"))
+            posexplode(Scalars.kgrams("t", 5))
               .as(Seq("pos", "gm")))
           .select(col("source"), col("doc_id"), col("pos"),
             (Scalars.tokenHash(col("gm")) % QueriesText.P).as("g"))

@@ -33,19 +33,22 @@ object Tables {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Size-adaptive [[fanOut]] (guide §2: derive partitioning from input
-    * size, not a constant tuned for one scale): identity below `minBytes`
-    * of estimated plan output — for MODERATE per-row work (one regex or
-    * sha2 pass, chunk slicing) the round-robin exchange costs more than
-    * the serial map it spreads until the input is big enough, and below
-    * the threshold the plan is exactly the pre-fanOut one. Callers whose
-    * per-row work is extreme (md5 per token/shingle) use the unconditional
-    * [[fanOut]] — there the exchange wins at every measured scale.
-    * Threshold default 2 MB: sf0.1 documents estimates ~0.6 MB (serial
-    * map ≤0.3 s), sf1 ~5.8 MB (serial map measured 0.9–2 s, r17).
+    * size, not a constant tuned for one scale): identity below
+    * [[FanOutMinBytes]] of estimated plan output — for MODERATE per-row
+    * work (one regex or sha2 pass, chunk slicing) the round-robin exchange
+    * costs more than the serial map it spreads until the input is big
+    * enough, and below the threshold the plan is exactly the pre-fanOut
+    * one. Callers whose per-row work is extreme (md5 per token/shingle)
+    * use the unconditional [[fanOut]] — there the exchange wins at every
+    * measured scale.
+    * Threshold 2 MB: sf0.1 documents estimates ~0.6 MB (serial map
+    * ≤0.3 s), sf1 ~5.8 MB (serial map measured 0.9–2 s, r17).
     */
-  def fanOutOver(df: DataFrame, minBytes: Long = 2L << 20): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= minBytes) df
+  def fanOutOver(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= FanOutMinBytes) df
     else fanOut(df)
+
+  private val FanOutMinBytes = 2L << 20
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = t(s, d, "orders")

@@ -36,7 +36,10 @@ import org.apache.spark.sql.SparkSession
   *    sees the old complete file set or the new one, never a mix. The
   *    old dir is kept out of the way until the swap completes. Both
   *    siblings have hidden (dot-prefixed) names, so a reader listing the
-  *    table never takes them for partitions. (On a real
+  *    table never takes them for partitions.
+  *  - **Re-run is the recovery path** (as in [[Retention]]): `compact`
+  *    first restores any partition an interrupted swap left only in its
+  *    hidden `.old` sibling, and deletes every other sibling. (On a real
   *    lake this job is one OPTIMIZE on a transactional table format —
   *    Delta/Iceberg make the swap a metadata commit; this is the
   *    filesystem-layout equivalent for plain parquet dirs.)
@@ -94,6 +97,7 @@ object Compaction {
     */
   def compact(s: SparkSession, tableDir: String, targetBytes: Long): Report = {
     require(targetBytes > 0, "targetBytes must be positive")
+    recover(tableDir)
     val before = stats(tableDir)
     val packed = before.map(st =>
       st -> math.max(1L, (st.bytes + targetBytes - 1) / targetBytes).toInt)
@@ -116,6 +120,26 @@ object Compaction {
     Report(before.size, todo.size, before.map(_.files).sum,
       packed.map { case (st, n) => math.min(st.files, n) }.sum)
   }
+
+  /** `.<name>.<kind>-<uuid>`, as [[swapSibling]] names it. */
+  private val SwapName = """\.(.+)\.(tmp|old)-[0-9a-f-]{36}""".r
+
+  /** Undo what an interrupted [[rewrite]] left in `tableDir`: an `.old`
+    * sibling whose partition is missing holds that partition's files (the
+    * crash fell between the two renames), so it is renamed back; every
+    * other sibling is a leftover copy and is deleted.
+    */
+  private def recover(tableDir: String): Unit =
+    Nio.list(Paths.get(tableDir)).foreach { p =>
+      p.getFileName.toString match {
+        case SwapName(name, kind) =>
+          val dir = p.resolveSibling(name)
+          if (kind == "old" && !Files.exists(dir))
+            Files.move(p, dir, StandardCopyOption.ATOMIC_MOVE)
+          else Nio.deleteTree(p)
+        case _ =>
+      }
+    }
 
   /** Read-coalesce-write one partition into a hidden sibling, then swap it
     * in by two renames. The partition value lives in the directory name,

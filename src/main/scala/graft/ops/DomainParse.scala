@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions.udf
   * exact, wildcard (`*.ck`), exception (`!www.ck`) — restricted to the
   * ICANN section, matching tldextract's default
   * `include_psl_private_domains=False`. Executors re-initialize from the
-  * jar-bundled resource, so nothing needs broadcasting. Implemented as
-  * a Scala UDF per SURVEY.md §4.2's decision table — acceptable off the hot
-  * path; a Catalyst Expression with codegen is the upgrade if it shows up
-  * hot (§2.11).
+  * jar-bundled resource, so nothing needs broadcasting. Queries reach the
+  * registered domain through the native codegen expression
+  * [[RegisteredDomainExpr]] (`Scalars.registeredDomainPsl`); the
+  * subdomain, which has no native twin, stays a Scala UDF per SURVEY.md
+  * §4.2's decision table — acceptable off the hot path.
   */
 object DomainParse {
 
@@ -99,11 +100,8 @@ object DomainParse {
     else s"${p.domain}.${p.suffix}"
   }
 
-  val registeredDomainUdf =
-    udf((s: String) => registeredDomain(s))
   val subdomainUdf =
     udf((s: String) => parse(s).subdomain.orNull)
 
-  def registeredDomainCol(c: Column): Column = registeredDomainUdf(c)
   def subdomainCol(c: Column): Column = subdomainUdf(c)
 }

@@ -45,11 +45,13 @@ object ProcessedLog {
     units.join(broadcast(logDf), keys, "left_anti")
   }
 
-  /** Mark units processed (append; duplicates are harmless — the anti-join
-    * semantics dedupe).
+  /** Mark units processed: append their keys to the log as they come,
+    * with no shuffle of its own (one job of one stage for a local `units`).
+    * Duplicate keys, within one call or across calls, are harmless:
+    * [[pending]]'s anti join gives the same answer whatever duplicates the
+    * log holds.
     */
   def mark(units: DataFrame, logDir: String, keys: Seq[String]): Unit =
-    units.select(keys.map(col): _*).distinct()
-      .write.mode("append").parquet(logDir)
+    units.select(keys.map(col): _*).write.mode("append").parquet(logDir)
 
 }

@@ -89,14 +89,4 @@ object RollingHashExpr {
     }
     h
   }
-
-  /** Register `rolling_hash(col)` on an existing session so
-    * `call_function` reaches the native expression (the q19b route;
-    * GraftExtensions injects it for `.withExtensions` sessions).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash",
-      (children: Seq[Expression]) => RollingHashExpr(children.head),
-      "scala_udf")
 }

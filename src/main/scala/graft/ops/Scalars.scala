@@ -1,11 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Scalar column functions — SURVEY.md §2.8. Each is a pure `Column =>
-  * Column` built from codegen'd built-in expressions (no UDFs), so filter
-  * pushdown and whole-stage codegen stay intact at 100 TB scale.
+  * Column` built from codegen'd built-in expressions or from graft's own
+  * native Catalyst expressions (no UDFs), so filter pushdown and
+  * whole-stage codegen stay intact at 100 TB scale.
+  *
+  * The helpers here are the only way a query reaches the four native
+  * expressions ([[tokenHash]], [[shingles3Text]], [[rollingHash]],
+  * [[registeredDomainPsl]]): each wraps its expression through
+  * `ColumnBridge`, so no session or function registry is involved. SQL
+  * text reaches the same four through [[GraftExtensions]].
   *
   * Reference behavior being re-expressed (file:line in /root/reference):
   *  - urlBone: `rankings_generator.py:132-139` (strip scheme + `www.` +
@@ -13,7 +22,7 @@ import org.apache.spark.sql.functions._
   *  - urlPrefix: `ranking_urls_ingestor.py:58` regex `(https?://(?:www\.)?)`.
   *  - registeredDomain/subdomain: simplified last-two-labels rule standing in
   *    for tldextract (`rankings_generator.py:165-167`); `www`/empty subdomain
-  *    → NULL.
+  *    → NULL. registeredDomainPsl is the full public-suffix-list parse.
   *  - epochToDateStr: `rankings_generator.py:155`
   *    `datetime.fromtimestamp(ts).date().strftime("%Y-%m-%d")` (UTC session).
   *  - parsePyList: `ranking_urls_ingestor.py:60-61` `ast.literal_eval` on
@@ -37,10 +46,18 @@ object Scalars {
     regexp_extract(url, "(https?://(?:www\\.)?)", 1)
 
   /** Simplified registered-domain: last two dot-labels. Full PSL parity is
-    * not SQL-expressible and lives in unit tests only (SURVEY.md §7.5).
+    * [[registeredDomainPsl]] (declared as q19b, whose oracle replays the
+    * PSL algorithm in SQL).
     */
   def registeredDomain(fqdn: Column): Column =
     regexp_extract(fqdn, "([^.]+\\.[^.]+)$", 1)
+
+  /** tldextract-parity registered domain (`rankings_generator.py:165-167`)
+    * over the vendored public-suffix list, through the native codegen
+    * [[RegisteredDomainExpr]]; semantics in [[DomainParse.registeredDomain]].
+    */
+  def registeredDomainPsl(fqdn: Column): Column =
+    native(RegisteredDomainExpr(_))(fqdn)
 
   /** Subdomain = fqdn minus registered domain minus separating dot; NULL when
     * empty (mirrors `subdomain or None`, `rankings_generator.py:167`).
@@ -89,16 +106,24 @@ object Scalars {
     * TokenHashExprSpec incl. codegen-off). The pre-native declarative
     * form is kept as [[tokenHashConv]] for the identity spec.
     */
-  def tokenHash(t: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(TokenHashExpr(ColumnBridge.expression(t)))
-  }
+  def tokenHash(t: Column): Column = native(TokenHashExpr(_))(t)
 
   /** The declarative (conv ∘ substring ∘ md5) form tokenHash replaced —
     * retained ONLY as the bit-identity witness in TokenHashExprSpec.
     */
   private[graft] def tokenHashConv(t: Column): Column =
     conv(substring(md5(t), 1, 15), 16, 10).cast("long")
+
+  /** Order-sensitive rolling-hash fingerprint of a text: the left fold
+    * h = (31·h + tokenHash(w) mod P) mod P over `split(text, " ")`, as one
+    * native codegen [[RollingHashExpr]] call (bit-identical to the
+    * declarative HOF form, pinned by RollingHashExprSpec).
+    */
+  def rollingHash(text: Column): Column = native(RollingHashExpr(_))(text)
+
+  /** A native expression over `c` as a Column (no function registry). */
+  private def native(build: Expression => Expression)(c: Column): Column =
+    ColumnBridge.column(build(ColumnBridge.expression(c)))
 
   /** Universal-hash family over tokenHash, mod a 31-bit prime so products
     * stay in long range: h_i(t) = (a_i * (base % P) + b_i) % P.
@@ -225,10 +250,18 @@ object Scalars {
     * as [[shingles3Conv]] for the identity spec; DuckDB replays the same
     * set via QueriesText.shinglesSql.
     */
-  def shingles3Text(text: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(Shingles3Expr(ColumnBridge.expression(text)))
-  }
+  def shingles3Text(text: Column): Column = native(Shingles3Expr(_))(text)
+
+  /** Word k-grams of the token-array column named `t`, in order and with
+    * duplicates: element i is `concat_ws(' ', slice(t, i, k))` for
+    * i = 1 .. size(t) − k + 1 — the map-side shingle/n-gram build.
+    * Precondition: rows with `size(t) < k` are filtered out first (every
+    * caller does); on such a row `sequence` counts down through 0 and
+    * `slice` fails on index 0 at run time.
+    */
+  def kgrams(t: String, k: Int): Column =
+    expr(s"transform(sequence(1, size($t) - ${k - 1}), " +
+      s"i -> concat_ws(' ', slice($t, i, $k)))")
 
   /** The declarative array-transform form shingles3Text replaced —
     * retained ONLY as the bit-identity witness in Shingles3ExprSpec

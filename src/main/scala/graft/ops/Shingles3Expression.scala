@@ -122,24 +122,4 @@ object Shingles3Expr {
     while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
-
-  /** Register `shingles3(col)` on an existing session so SQL text and
-    * `call_function` reach the native expression (q19b/q70b route).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles3",
-      (children: Seq[Expression]) => {
-        if (children.length != 1) {
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`shingles3`",
-              "expectedNum" -> "1",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        Shingles3Expr(children.head)
-      },
-      "scala_udf")
 }

@@ -85,27 +85,4 @@ object TokenHashExpr {
     while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
     (v << 4) | ((d(7) & 0xffL) >>> 4)
   }
-
-  /** Register `token_hash(col)` on an existing session so SQL text and
-    * `call_function` reach the native expression (q19b/q70b route).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_hash",
-      (children: Seq[Expression]) => {
-        // Arity-check here, not children.head: zero args would throw a
-        // bare NoSuchElementException at plan time and extra args would
-        // be silently dropped (r12 advice).
-        if (children.length != 1) {
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`token_hash`",
-              "expectedNum" -> "1",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        TokenHashExpr(children.head)
-      },
-      "scala_udf")
 }

@@ -96,9 +96,7 @@ object CurationPipeline {
     def shingles(df: DataFrame) = df
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 5)
-      .select(col("doc_id"), explode(
-        expr("transform(sequence(1, size(t) - 4), " +
-          "i -> concat_ws(' ', slice(t, i, 5)))")).as("sh"))
+      .select(col("doc_id"), explode(Scalars.kgrams("t", 5)).as("sh"))
     val b = shingles(bench).select("sh").distinct()
     shingles(corp)
       .join(broadcast(b), Seq("sh"), "left_semi")

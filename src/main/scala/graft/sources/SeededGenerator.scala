@@ -98,15 +98,4 @@ object SeededGenerator {
       .withColumn("embedding", emb)
       .select(col("id").as("vec_id"), col("embedding"), col("label"))
   }
-
-  /** The generated frame cast/arranged to exactly
-    * [[graft.Tables.rankingsV1Schema]] for sinks that type-check inserts.
-    */
-  def rankingsTyped(
-      spark: SparkSession,
-      n: Long,
-      seed: Long): DataFrame = {
-    val df = rankings(spark, n, seed)
-    spark.createDataFrame(df.rdd, graft.Tables.rankingsV1Schema)
-  }
 }

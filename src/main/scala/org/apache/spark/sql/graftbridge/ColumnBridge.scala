@@ -12,10 +12,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * which is `private[sql]`. This one-file subpackage of
   * `org.apache.spark.sql` re-exposes exactly the two conversions —
   * the same pattern every Spark extension library uses for classic-mode
-  * expression columns. Nothing else of Spark's internals is touched;
-  * the alternative (functionRegistry + `call_function`) needs a live
+  * expression columns. Nothing else of Spark's internals is touched.
+  * Calling a registered function by name instead would need a live
   * SparkSession, which pure `Column => Column` scalar helpers
-  * (graft.ops.Scalars) don't have.
+  * (graft.ops.Scalars) don't have, and would make building a query
+  * register functions in the caller's session.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -149,30 +149,18 @@ class BandJoinRewriteSpec extends SparkSpec {
   }
 
   test("the SparkSessionExtensions route installs the rule end-to-end") {
-    // A fresh session over the same SparkContext, built the way a user
-    // would: spark.sql.extensions=graft.ops.GraftExtensions equivalent.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.ops.GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne spark, "builder returned the old session — no extensions")
-      val (l, r) = sides(s2)
-      val df = bandJoin(l, r)
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("__graft_band_bin") &&
-        !p.contains("BroadcastNestedLoopJoin"),
-        s"extensions session did not band-rewrite:\n$p")
-      // and the injected function rides along in the same extensions
-      assert(s2.sql("SELECT registered_domain('a.b.example.com') AS d")
-        .head().getString(0) == "example.com")
-    } finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
+    // a session built the way a user would:
+    // spark.sql.extensions=graft.ops.GraftExtensions equivalent
+    val s2 = extSpark
+    assert(s2 ne spark, "builder returned the old session — no extensions")
+    val (l, r) = sides(s2)
+    val df = bandJoin(l, r)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("__graft_band_bin") &&
+      !p.contains("BroadcastNestedLoopJoin"),
+      s"extensions session did not band-rewrite:\n$p")
+    // and the injected function rides along in the same extensions
+    assert(s2.sql("SELECT registered_domain('a.b.example.com') AS d")
+      .head().getString(0) == "example.com")
   }
 }

@@ -154,4 +154,37 @@ class CompactionSpec extends SparkSpec {
       .map(_.getFileName.toString).filterNot(_.startsWith("."))
     assert(visible.toSet == parts.map(_.dir.getFileName.toString).toSet)
   }
+
+  test("re-run recovers an interrupted swap: a partition caught between " +
+    "its two renames comes back, and no sibling is left") {
+    val dir = freshFragmented(8)
+    def contents = {
+      val rows = rowsOf(Paths.get(dir))
+      (rows.size, scala.util.hashing.MurmurHash3.seqHash(rows))
+    }
+    val original = contents
+    val parts = Compaction.stats(dir).map(_.dir)
+    assert(parts.size >= 3)
+    def copyTo(from: Path, to: Path): Unit = {
+      Files.createDirectory(to)
+      Nio.list(from).foreach(f => Files.copy(f, to.resolve(f.getFileName)))
+    }
+    // crash between `dir → .old` and `.tmp → dir`: the partition is gone,
+    // its files live on only in the hidden .old sibling
+    val (cut, swapped, written) = (parts(0), parts(1), parts(2))
+    copyTo(cut, Compaction.swapSibling(cut, "tmp"))
+    Files.move(cut, Compaction.swapSibling(cut, "old"))
+    // crash after the swap, before the old copy was deleted
+    copyTo(swapped, Compaction.swapSibling(swapped, "old"))
+    // crash after the write, before the first rename
+    copyTo(written, Compaction.swapSibling(written, "tmp"))
+    assert(contents._1 < original._1, "the planted crash hid no rows")
+
+    Compaction.compact(spark, dir, 64L * 1024 * 1024)
+    assert(contents == original, "rows lost or gained across the recovery")
+    assert(Compaction.stats(dir).map(_.dir) == parts)
+    val hidden = Nio.list(Paths.get(dir)).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).filter(_.startsWith("."))
+    assert(hidden.isEmpty, s"siblings left behind: $hidden")
+  }
 }

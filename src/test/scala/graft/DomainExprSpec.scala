@@ -2,27 +2,28 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{DomainParse, RegisteredDomainExpr}
+import graft.ops.{DomainParse, RegisteredDomainExpr, Scalars}
 
 /** Native Catalyst expression tier for the PSL domain parse: same semantics
-  * as the UDF, but codegen-participating and SQL-addressable.
+  * as `DomainParse.registeredDomain`, but codegen-participating; reached
+  * from DataFrames as `Scalars.registeredDomainPsl` and from SQL text as
+  * `registered_domain` in a GraftExtensions session.
   */
 class DomainExprSpec extends SparkSpec {
   import spark.implicits._
 
-  test("registered_domain native expression matches the UDF on all cases") {
-    RegisteredDomainExpr.register(spark)
+  test("native registered_domain matches DomainParse.registeredDomain " +
+      "on all cases") {
     val fqdns = Seq("shop.example.co.uk", "www.foo.com", "a.b.c.example.com.au",
       "foo.io", "localhost", "", "x.co")
     val df = fqdns.toDF("fqdn")
-      .withColumn("viaExpr", expr("registered_domain(fqdn)"))
-      .withColumn("viaUdf", DomainParse.registeredDomainCol(col("fqdn")))
-    assert(df.collect().forall(r => r.getString(1) == r.getString(2)))
+      .withColumn("viaExpr", Scalars.registeredDomainPsl(col("fqdn")))
+    assert(df.collect().forall(r =>
+      r.getString(1) == DomainParse.registeredDomain(r.getString(0))))
   }
 
   test("registered_domain works from pure SQL and handles NULL") {
-    RegisteredDomainExpr.register(spark)
-    val r = spark.sql(
+    val r = extSpark.sql(
       "SELECT registered_domain('shop.example.co.uk') AS rd, " +
         "registered_domain(CAST(NULL AS STRING)) AS rdnull").collect().head
     assert(r.getString(0) == "example.co.uk")
@@ -30,10 +31,9 @@ class DomainExprSpec extends SparkSpec {
   }
 
   test("native expression stays inside whole-stage codegen") {
-    RegisteredDomainExpr.register(spark)
     val df = Tables.supplier(spark, sf)
-      .select(expr("registered_domain(concat('www.sup', s_suppkey, '.example.co.uk'))")
-        .as("rd"))
+      .select(Scalars.registeredDomainPsl(concat(lit("www.sup"),
+        col("s_suppkey"), lit(".example.co.uk"))).as("rd"))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"expression fell out of codegen:\n$plan")

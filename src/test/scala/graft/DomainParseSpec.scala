@@ -67,7 +67,7 @@ class DomainParseSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val r = Seq("shop.example.co.uk", "www.foo.com").toDF("fqdn")
-      .select(DomainParse.registeredDomainCol(col("fqdn")).as("rd"),
+      .select(graft.ops.Scalars.registeredDomainPsl(col("fqdn")).as("rd"),
         DomainParse.subdomainCol(col("fqdn")).as("sub"))
       .collect()
     assert(r(0).getString(0) == "example.co.uk" && r(0).getString(1) == "shop")

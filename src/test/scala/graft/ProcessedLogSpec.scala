@@ -3,7 +3,8 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 
 import graft.ops.ProcessedLog
 
@@ -45,19 +46,23 @@ class ProcessedLogSpec extends SparkSpec {
     assert(ProcessedLog.pending(units2, log, keys).count() == 0)
   }
 
-  /** Jobs started while `body` ran. A sentinel job closes each side: the
-    * listener bus delivers events in order, so once the sentinel's start
-    * arrives every earlier job start has been counted.
+  /** Jobs started and stages submitted while `body` ran. A sentinel job
+    * closes each side: the listener bus delivers events in order, so once
+    * the sentinel's start arrives every earlier event has been counted.
     */
-  private def jobsOf(body: => Unit): Int = {
+  private def jobsAndStagesOf(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val started = new AtomicInteger
+    val submitted = new AtomicInteger
     @volatile var sentinel = new CountDownLatch(1)
+    def isSentinel(props: java.util.Properties) =
+      Option(props).exists(_.getProperty("graft.sentinel") != null)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("graft.sentinel") != null))
-          sentinel.countDown()
+        if (isSentinel(j.properties)) sentinel.countDown()
         else started.incrementAndGet()
+      override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
+        if (!isSentinel(st.properties)) submitted.incrementAndGet()
     }
     def drain(): Unit = {
       sentinel = new CountDownLatch(1)
@@ -67,8 +72,11 @@ class ProcessedLogSpec extends SparkSpec {
       assert(sentinel.await(30, TimeUnit.SECONDS), "listener bus not drained")
     }
     sc.addSparkListener(listener)
-    try { drain(); started.set(0); body; drain(); started.get() }
-    finally sc.removeSparkListener(listener)
+    try {
+      drain(); started.set(0); submitted.set(0)
+      body
+      drain(); (started.get(), submitted.get())
+    } finally sc.removeSparkListener(listener)
   }
 
   test("a gate on a non-empty log runs two jobs: the log's broadcast and " +
@@ -79,8 +87,19 @@ class ProcessedLogSpec extends SparkSpec {
       log, keys)
     val units = Seq(("en-us/1", 0), ("en-us/1", 1)).toDF("locale_page", "chunk")
     var open = false
-    assert(jobsOf { open = !ProcessedLog.pending(units, log, keys).isEmpty } == 2)
+    assert(jobsAndStagesOf {
+      open = !ProcessedLog.pending(units, log, keys).isEmpty
+    }._1 == 2)
     assert(open)
+  }
+
+  test("mark is one job of one stage: an append with no dedup shuffle") {
+    val log = java.nio.file.Files.createTempDirectory("plog").toString + "/log"
+    val keys = Seq("locale_page", "chunk")
+    val units = Seq(("en-us/1", 0), ("en-us/1", 0), ("en-us/2", 1))
+      .toDF("locale_page", "chunk")
+    assert(jobsAndStagesOf(ProcessedLog.mark(units, log, keys)) == (1, 1))
+    assert(ProcessedLog.pending(units, log, keys).count() == 0)
   }
 
   test("pending treats a log path that is a file, not a directory, as " +

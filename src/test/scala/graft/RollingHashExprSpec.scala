@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{RollingHashExpr, Scalars}
+import graft.ops.Scalars
 
 /** The native rolling-hash expression must be BIT-IDENTICAL to the
   * declarative HOF form it accelerates (same md5-hex-60-bit token hash,
@@ -20,10 +20,9 @@ class RollingHashExprSpec extends SparkSpec {
       lit(0L), (h, x) => (h * lit(31L) + x) % P)
 
   test("native == HOF fold on the full documents table") {
-    RollingHashExpr.register(spark)
     val both = Tables.documents(spark, sf)
       .select(col("doc_id"),
-        call_function("rolling_hash", col("text")).as("native"),
+        Scalars.rollingHash(col("text")).as("native"),
         hofForm(col("text")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() > 0)
@@ -31,11 +30,10 @@ class RollingHashExprSpec extends SparkSpec {
 
   test("split-semantics edges: empty text, leading/trailing/adjacent " +
       "spaces, single token, null") {
-    RollingHashExpr.register(spark)
     val edges = Seq("", " ", "a", "a b", " a", "a ", "a  b", "  ", "a b ")
       .toDF("text")
     val both = edges.select(col("text"),
-      call_function("rolling_hash", col("text")).as("native"),
+      Scalars.rollingHash(col("text")).as("native"),
       hofForm(col("text")).as("hof"))
     both.collect().foreach { r =>
       assert(r.getLong(1) == r.getLong(2),
@@ -43,7 +41,7 @@ class RollingHashExprSpec extends SparkSpec {
     }
     // null-safe like any UnaryExpression
     val n = Seq[Option[String]](None).toDF("text")
-      .select(call_function("rolling_hash", col("text"))).head()
+      .select(Scalars.rollingHash(col("text"))).head()
     assert(n.isNullAt(0))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Scalars, Shingles3Expr}
+import graft.ops.Scalars
 
 /** The native shingles3 expression must be BIT-IDENTICAL to the
   * declarative (when/transform/array_distinct) HOF form it replaced
@@ -86,12 +86,11 @@ class Shingles3ExprSpec extends SparkSpec {
 
   test("registry route: shingles3(col) callable from SQL text; wrong " +
       "arity rejected with a named error") {
-    Shingles3Expr.register(spark)
-    val r = spark.sql("SELECT shingles3('a b c d') AS sh")
+    val r = extSpark.sql("SELECT shingles3('a b c d') AS sh")
       .head().getSeq[String](0)
     assert(r == Seq("a b c", "b c d"))
     val bad = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT shingles3()").collect()
+      extSpark.sql("SELECT shingles3()").collect()
     }
     assert(bad.getMessage.contains("shingles3"), bad.getMessage)
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.GraftExtensions
+
 /** Shared local session for all suites (one JVM-wide session keeps the
   * suite wall-time dominated by work, not Spark startup). Pinned to
   * local[4] regardless of SPARK_GRAFT_CPUS, so every host runs the suites
@@ -15,11 +17,30 @@ object TestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A second session over the same SparkContext, built with
+    * `graft.ops.GraftExtensions`: the SQL-text route to the native
+    * functions and the band-join rule. Built once; [[spark]] stays the
+    * active and default session.
+    */
+  lazy val extensions: SparkSession = {
+    spark // the shared SparkContext must exist before the second session
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try Sessions.local("4").withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sf: String = TestSession.sf
+
+  /** The session with the SQL functions (see [[TestSession.extensions]]). */
+  def extSpark: SparkSession = TestSession.extensions
 
   /** Run `body` with the session conf `kvs` set, then restore each key to
     * its previous value (or unset it) — the shared session outlives every

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Scalars, TokenHashExpr}
+import graft.ops.Scalars
 
 /** The native token-hash expression must be BIT-IDENTICAL to the
   * declarative (conv ∘ substring ∘ md5) form it replaced under
@@ -86,8 +86,7 @@ class TokenHashExprSpec extends SparkSpec {
   }
 
   test("registry route: token_hash(col) callable from SQL text") {
-    TokenHashExpr.register(spark)
-    val r = spark.sql("SELECT token_hash('abc') AS h").head().getLong(0)
+    val r = extSpark.sql("SELECT token_hash('abc') AS h").head().getLong(0)
     val e = Seq("abc").toDF("t")
       .select(Scalars.tokenHashConv(col("t"))).head().getLong(0)
     assert(r == e)
@@ -95,13 +94,12 @@ class TokenHashExprSpec extends SparkSpec {
 
   test("registry route rejects wrong arity with a named error, not a " +
       "bare NoSuchElementException / silent arg drop") {
-    TokenHashExpr.register(spark)
     val zero = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT token_hash()").collect()
+      extSpark.sql("SELECT token_hash()").collect()
     }
     assert(zero.getMessage.contains("token_hash"), zero.getMessage)
     val two = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT token_hash('a', 'b')").collect()
+      extSpark.sql("SELECT token_hash('a', 'b')").collect()
     }
     assert(two.getMessage.contains("token_hash"), two.getMessage)
   }
