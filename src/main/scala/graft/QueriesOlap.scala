@@ -33,30 +33,41 @@ object QueriesOlap {
   val all: Seq[Q] = Seq(
 
     // A6c explicit GROUPING SETS — the general form of q09 rollup / q56
-    // cube: per-flag, per-status, and grand-total groups in one pass.
+    // cube: per-flag, per-status, and grand-total groups (the oracle's
+    // GROUPING SETS; here one aggregate per set over a shared base).
     Q("q60_grouping_sets",
       (s, d) => {
-        lineitem(s, d).createOrReplaceTempView("lineitem")
         // exact decimal money sum (Scalars.moneySum rationale): the ()
         // grand total over the whole fact table is exactly the shape whose
         // double-sum accumulation order flipped a cent at sf1.
-        // r17 (guide §2.1/§2.3): pre-aggregate by the FULL (rf, ls) key
-        // first — Spark's GROUPING SETS plans an Expand that triples the
-        // fact stream BEFORE the partial agg, so the old form ran the
-        // decimal sum over 3×N rows; the sets now expand a 6-row table.
-        // Exact re-association: counts add, DECIMAL(18,2) partial sums
-        // add exactly (widened to DECIMAL(38,2) before the final double
-        // cast), so the rendered values are bit-identical (oracle-pinned).
-        s.sql("""WITH base AS (
+        // Pre-aggregate by the FULL (rf, ls) key first (guide §2.1/§2.3),
+        // so the fact stream is aggregated once and each set aggregates a
+        // 6-row table: GROUPING SETS over lineitem would Expand the fact
+        // stream 3× before the partial agg. Exact re-association: counts
+        // add, DECIMAL(18,2) partial sums add exactly (widened to
+        // DECIMAL(38,2) before the final double cast), so the rendered
+        // values are bit-identical (oracle-pinned).
+        // The grand total is a GLOBAL aggregate, so an empty lineitem
+        // still yields ('ALL', 'ALL', 0, NULL) as the oracle's () set does;
+        // Spark's GROUPING SETS emits no () row on empty input. The three
+        // branches reuse the `base` exchange, so lineitem is scanned once.
+        s.sql(s"""WITH base AS (
                 |  SELECT l_returnflag, l_linestatus, count(1) AS cnt,
                 |         sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS sp
-                |  FROM lineitem GROUP BY l_returnflag, l_linestatus)
-                |SELECT coalesce(l_returnflag, 'ALL') AS rf,
-                |       coalesce(l_linestatus, 'ALL') AS ls,
-                |       sum(cnt) AS cnt,
+                |  FROM ${sqlFrom(d, "lineitem")}
+                |  GROUP BY l_returnflag, l_linestatus)
+                |SELECT coalesce(l_returnflag, 'ALL') AS rf, 'ALL' AS ls,
+                |       sum(cnt) AS cnt, CAST(sum(sp) AS DOUBLE) AS sum_price
+                |FROM base GROUP BY l_returnflag
+                |UNION ALL
+                |SELECT 'ALL' AS rf, coalesce(l_linestatus, 'ALL') AS ls,
+                |       sum(cnt) AS cnt, CAST(sum(sp) AS DOUBLE) AS sum_price
+                |FROM base GROUP BY l_linestatus
+                |UNION ALL
+                |SELECT 'ALL' AS rf, 'ALL' AS ls,
+                |       coalesce(sum(cnt), 0) AS cnt,
                 |       CAST(sum(sp) AS DOUBLE) AS sum_price
                 |FROM base
-                |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
                 |ORDER BY rf, ls""".stripMargin)
       },
       Some(s"""SELECT coalesce(l_returnflag, 'ALL') AS rf,
@@ -264,10 +275,10 @@ object QueriesOlap {
     // join; the segment dimension side auto-broadcasts below the threshold.
     Q("q67_in_subquery",
       (s, d) => {
-        orders(s, d).createOrReplaceTempView("orders")
-        customer(s, d).createOrReplaceTempView("customer")
-        s.sql("""SELECT o_orderkey, o_totalprice FROM orders
-                |WHERE o_custkey IN (SELECT c_custkey FROM customer
+        s.sql(s"""SELECT o_orderkey, o_totalprice
+                |FROM ${sqlFrom(d, "orders")}
+                |WHERE o_custkey IN (SELECT c_custkey
+                |                    FROM ${sqlFrom(d, "customer")}
                 |                    WHERE c_mktsegment = 'BUILDING')
                 |  AND o_totalprice > 300000.0
                 |ORDER BY o_orderkey""".stripMargin)
@@ -282,16 +293,16 @@ object QueriesOlap {
     // plans the 1-row aggregate as a broadcast, not a per-row re-scan.
     Q("q68_scalar_subquery",
       (s, d) => {
-        orders(s, d).createOrReplaceTempView("orders")
         // the scalar mean is decimal-exact (sum order can't move it) and
         // the per-row 4dp rounding is floor-form (Scalars.roundAt
         // rationale) — both were latent cross-engine flake sources at sf1
-        s.sql("""SELECT o_orderkey,
+        val orders = sqlFrom(d, "orders")
+        s.sql(s"""SELECT o_orderkey,
                 |  floor(o_totalprice /
                 |    (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                |                 AS DOUBLE) / count(*) FROM orders)
+                |                 AS DOUBLE) / count(*) FROM $orders)
                 |    * 10000 + 0.5) / 10000 AS price_ratio
-                |FROM orders WHERE o_totalprice > 450000.0
+                |FROM $orders WHERE o_totalprice > 450000.0
                 |ORDER BY o_orderkey""".stripMargin)
       },
       Some("""SELECT o_orderkey,
@@ -315,17 +326,16 @@ object QueriesOlap {
     // decorrelated shape: semi + anti present, no BNLJ/cartesian.
     Q("q171_exists_correlated",
       (s, d) => {
-        customer(s, d).createOrReplaceTempView("customer")
-        orders(s, d).createOrReplaceTempView("orders")
-        lineitem(s, d).createOrReplaceTempView("lineitem")
-        s.sql("""SELECT c_custkey, c_name FROM customer c
+        val orders = sqlFrom(d, "orders")
+        s.sql(s"""SELECT c_custkey, c_name FROM ${sqlFrom(d, "customer")} c
                 |WHERE c_mktsegment = 'AUTOMOBILE'
-                |  AND EXISTS (SELECT 1 FROM orders o
+                |  AND EXISTS (SELECT 1 FROM $orders o
                 |              WHERE o.o_custkey = c.c_custkey
                 |                AND o.o_totalprice > 200000.0)
                 |  AND NOT EXISTS (
-                |    SELECT 1 FROM orders o2
-                |    JOIN lineitem l ON l.l_orderkey = o2.o_orderkey
+                |    SELECT 1 FROM $orders o2
+                |    JOIN ${sqlFrom(d, "lineitem")} l
+                |      ON l.l_orderkey = o2.o_orderkey
                 |    WHERE o2.o_custkey = c.c_custkey
                 |      AND l.l_returnflag = 'R')
                 |ORDER BY c_custkey""".stripMargin)

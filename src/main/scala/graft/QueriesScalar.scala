@@ -525,10 +525,8 @@ object QueriesScalar {
               |         qty_class, ship_year, ship_month, flag_status,
               |         is_cheap, disc_amt, key_mod""".stripMargin)),
 
-    // Sessionization (gap 30 min) — the batch form of stateful stream
-    // sessionization (ops/Sessionize.scala holds the
-    // flatMapGroupsWithState variant): lag-gap flag → running sum =
-    // session id → per-session aggregate. Two shuffles total (window by
+    // Sessionization (gap 30 min), in batch: lag-gap flag → running
+    // sum = session id → per-session aggregate. Two shuffles total (window by
     // user, then group), both on user_id — at scale one exchange since the
     // partitioning is reused.
     Q("q55_sessionize",

@@ -256,15 +256,16 @@ object QueriesTextGraphMedia {
     // each with dist ≤ 3 (same class as q106's sketch-guarantee check).
     Q("q131_phash_neardup",
       (s, d) => {
-        import graft.ops.Multimodal
+        import graft.ops.{Multimodal, MultimodalAv}
         val ids = documents(s, d).filter(col("doc_id") < 200)
           .select("doc_id")
         val corpus = Multimodal.syntheticImageCorpus(ids, 100000L)
         // r16: materialize the tiny (doc_id, fp) table before the
         // Hamming-band self-join — exchange reuse does not fire across
         // the aliased sides, so both sides re-ran the PNG encode+decode
-        Multimodal.phashNearDup(
-          Multimodal.perceptualHash(corpus).localCheckpoint(true), 3)
+        MultimodalAv.hammingNearDup(
+          Multimodal.perceptualHash(corpus).localCheckpoint(true),
+          "doc_id", "phash", 3)
           .orderBy("a_id", "b_id")
       },
       None),

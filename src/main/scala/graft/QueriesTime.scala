@@ -2365,12 +2365,9 @@ object QueriesTime {
 
   /** T34 corpus-sized stage of q205: the narrow (user_id, o, c)
     * projection — the (ts, event_id) total-order key and the exact-cents
-    * value. Exposed separately because it is also the input of the
-    * STREAMING twin (`ops/DeltaSumStream.fold` — order-aware per-user
-    * state over micro-batches; `StreamingSpec` T34s pins streamed-vs-
-    * batch equality under the ord-monotone replay contract).
+    * value.
     */
-  private[graft] def deltaEvents(
+  private def deltaEvents(
       ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     ev.withColumn("ts_us", Scalars.longDiv("ts", 1000L))
       .select(col("user_id"),

@@ -7,8 +7,10 @@ import org.apache.spark.sql.types._
   * and the reference-shaped tables (FIXTURES.md §A; schema evidence:
   * reference `rankings_generator.py:143-151`, `ranking_urls_generator.py:99-116`).
   *
-  * Schemas are declared explicitly (no inferSchema) mirroring the reference's
-  * insert-time `types_check: True` discipline (`ranking_urls_ingestor.py:78`).
+  * The testdata tables are read with each parquet file's own schema ([[t]]).
+  * The reference-shaped tables have declared schemas, which CSV ingest
+  * enforces with FAILFAST, mirroring the reference's insert-time
+  * `types_check: True` discipline (`ranking_urls_ingestor.py:78`).
   * At 100 TB the fact tables would be written `partitionBy("date")` parquet —
   * the analog of ClickHouse MergeTree date ordering (SURVEY.md §1.1).
   */
@@ -19,6 +21,13 @@ object Tables {
     */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** The same table as a relation for SQL text (`FROM ${sqlFrom(d, "x")}`).
+    * A query build reads its tables this way and never registers a temp
+    * view, which would rebind the caller's view of the same name.
+    */
+  def sqlFrom(sfDir: String, name: String): String =
+    s"parquet.`$sfDir/$name.parquet`"
 
   /** Lift scan parallelism to the session's core count before CPU-heavy
     * per-row work. The local testdata files have a single parquet row group,
@@ -149,6 +158,8 @@ object Tables {
 
   /** ranking_urls: `Ranking` dataclass (`ranking_urls_generator.py:99-116`)
     * minus `url`, plus `url_prefix` (ingest derive, `ranking_urls_ingestor.py:57-59`).
+    * The list columns hold no null element (ClickHouse `Array(String)`;
+    * `RankingsPipelines.rankingUrlsTransform` splits strings into them).
     */
   val rankingUrlsSchema: StructType = StructType(Seq(
     StructField("domain", StringType, nullable = false),
@@ -161,11 +172,13 @@ object Tables {
     StructField("volume", LongType, nullable = false),
     StructField("cpc", DoubleType, nullable = false),
     StructField("competition", DoubleType, nullable = false),
-    StructField("category_strings", ArrayType(StringType), nullable = false),
+    StructField("category_strings",
+      ArrayType(StringType, containsNull = false), nullable = false),
     StructField("mm_difficulty", DoubleType, nullable = false),
     StructField("traffic", DoubleType, nullable = false),
     StructField("traffic_pct", DoubleType, nullable = false),
-    StructField("serp_features", ArrayType(StringType), nullable = false),
+    StructField("serp_features",
+      ArrayType(StringType, containsNull = false), nullable = false),
     StructField("results_count", LongType, nullable = false)
   ))
 
@@ -198,16 +211,4 @@ object Tables {
       .option("header", "true")
       .option("mode", "FAILFAST")
       .csv(lines)
-
-  /** Typed row for rankings_v1 (reference `Ranking` dataclass,
-    * `rankings_generator.py:60-77`).
-    */
-  case class Ranking(
-      domain: String,
-      date: java.sql.Date,
-      term: String,
-      url: Option[String],
-      rank: Option[Int],
-      volume: Long,
-      cpc: Double)
 }

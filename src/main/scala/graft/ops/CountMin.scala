@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    ε ≈ 0.13%; CmsSpec property-tests both bounds plus partition
   *    invariance of the merged sketch.
   *
-  * Same `Aggregator` extension tier as [[MinHashAggregator]] (SURVEY.md
-  * §2.11): typed input, associative merge, partial-agg friendly.
+  * A typed `Aggregator` (SURVEY.md §2.11): typed input, associative
+  * merge, partial-agg friendly.
   */
 object CountMin {
   val Depth = 4
@@ -37,7 +37,7 @@ object CountMin {
   private val P = Scalars.HashP // 1000000007, the repo's universal-hash prime
 
   /** Fixed per-row affine constants over the md5 tokenHash — the same
-    * cross-engine universal-hash family as minhash (Scalars.minhashFn),
+    * cross-engine universal-hash family as minhash (QueriesText.minhashSigs),
     * chosen over Murmur3 in r13 SPECIFICALLY so DuckDB can replay every
     * bucket: row r sends token t to
     * `((a_r · (tokenHash(t) mod P) + b_r) mod P) mod Width`,

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing — north-star extension (BASELINE.json): treat
   * image/audio/video as opaque `binary` columns with typed metadata, with
@@ -35,13 +34,6 @@ object Multimodal {
       width: Int,
       height: Int,
       format: String)
-
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("n_bytes", IntegerType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("format", StringType, nullable = false)))
 
   /** The decoder seam: bytes → metadata. Deterministic stub; a real
     * implementation would parse the container header / decode a frame.
@@ -310,42 +302,10 @@ object Multimodal {
       .toDF("doc_id", "phash")
   }
 
-  /** Hamming-band blocked near-dup pairs over a (doc_id, phash) table —
-    * the X2d SimHash band-join shape applied to the image tier: the
-    * 64-bit hash splits into 4 disjoint 16-bit bands; candidates share at
-    * least one exact band (equi-join on (band_no, band_val) — never
-    * all-pairs), then the exact popcount distance filters to `maxDist`.
-    * Pigeonhole guarantee: any pair within Hamming distance 3 shares a
-    * band deterministically; larger distances are caught when some band
-    * survives (probability falls with distance — the LSH recall curve).
-    * Scale: band buckets are duplicate-density-sized; the pair explode is
-    * bounded by bucket occupancy like the MinHash tier, and the exact
-    * check runs only on candidates.
-    */
-  def phashNearDup(hashes: DataFrame, maxDist: Int): DataFrame = {
-    val banded = hashes.select(col("doc_id"), col("phash"),
-      explode(expr(
-        "transform(sequence(0, 3)," +
-          " i -> struct(i AS band_no," +
-          " shiftright(phash, i * 16) & 65535 AS band_val))")).as("b"))
-      .select(col("doc_id"), col("phash"),
-        col("b.band_no").as("band_no"), col("b.band_val").as("band_val"))
-    val a = banded.select(col("doc_id").as("a_id"), col("phash").as("a_h"),
-      col("band_no"), col("band_val"))
-    val b = banded.select(col("doc_id").as("b_id"), col("phash").as("b_h"),
-      col("band_no"), col("band_val"))
-    a.join(b, Seq("band_no", "band_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_h", "b_h").distinct()
-      .withColumn("dist", expr("bit_count(a_h ^ b_h)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("a_id"), col("b_id"), col("dist").cast("int").as("dist"))
-  }
-
   /** splitmix64 finalizer — the deterministic per-cell luminance source
-    * for [[syntheticImageCorpus]].
+    * for [[syntheticImageCorpus]] and the [[MultimodalAv]] corpora.
     */
-  private def mix64(z0: Long): Long = {
+  private[ops] def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL

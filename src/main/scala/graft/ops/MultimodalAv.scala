@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Multimodal.mix64
+
 /** Audio + video members of the multimodal tier ([[Multimodal]] holds the
   * image members). Both run REAL JDK codecs end-to-end — no stub decode:
   *
@@ -38,14 +40,6 @@ import org.apache.spark.sql.functions._
 object MultimodalAv {
 
   // ---- audio ---------------------------------------------------------------
-
-  /** splitmix64 finalizer (same mix as [[Multimodal]]'s corpus). */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** The two probe voices: fixed absolute frequencies so the Goertzel
     * probes line up at ANY sample rate (resample-invariance).
@@ -263,10 +257,13 @@ object MultimodalAv {
   }
 
   /** Hamming-band blocked near-dup pairs over any (id, hash64) table —
-    * the X2d/X43 band-join shape factored out for the audio/video tiers:
-    * 4 disjoint 16-bit bands, candidates share ≥1 exact band (equi-join,
-    * never all-pairs; pigeonhole ⇒ deterministic recall ≤ distance 3,
-    * LSH-curve recall beyond), exact `bit_count` filter to `maxDist`.
+    * the X2d SimHash band-join shape, used by the image (q131) and audio
+    * (q132) tiers: 4 disjoint 16-bit bands, candidates share ≥1 exact
+    * band (equi-join, never all-pairs; pigeonhole ⇒ deterministic recall
+    * ≤ distance 3, LSH-curve recall beyond), exact `bit_count` filter to
+    * `maxDist`. Band buckets are duplicate-density-sized, so the pair
+    * explode is bounded by bucket occupancy and the exact check runs only
+    * on candidates.
     */
   def hammingNearDup(hashes: DataFrame, idCol: String, hashCol: String,
       maxDist: Int): DataFrame = {

@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   * dimension-sized; at 100 TB of history the log is itself partitioned and
   * pruned by the same unit-key prefix before the join.
   *
-  * Crash-safety contract (same as the reference's): mark AFTER the unit's
-  * output commits; a crash between output and mark reprocesses one unit,
-  * which the idempotent sink (overwrite-by-unit / transactional file
-  * commit) absorbs.
+  * Crash safety is at-least-once, the same window as the reference's flag
+  * (`ranking_urls_ingestor.py:96-114`): the mark is appended AFTER the
+  * unit's output commits, so a crash between the two leaves the unit
+  * unmarked and the next run processes it again. An appending sink such
+  * as `RankingsPipelines.bulkIngest` then holds the unit's rows twice;
+  * only a sink that overwrites by unit would absorb the replay.
   */
 object ProcessedLog {
 

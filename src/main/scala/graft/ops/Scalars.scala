@@ -125,12 +125,10 @@ object Scalars {
   private def native(build: Expression => Expression)(c: Column): Column =
     ColumnBridge.column(build(ColumnBridge.expression(c)))
 
-  /** Universal-hash family over tokenHash, mod a 31-bit prime so products
-    * stay in long range: h_i(t) = (a_i * (base % P) + b_i) % P.
+  /** Prime of the universal-hash family over tokenHash, 31 bits so
+    * products stay in long range: h_i(t) = (a_i * (base % P) + b_i) % P.
     */
   val HashP = 1000000007L
-  def minhashFn(t: Column, a: Long, b: Long): Column =
-    (lit(a) * (tokenHash(t) % HashP) + lit(b)) % HashP
 
   /** Integral division of a named long column — `c DIV d`, the 64-bit-exact
     * form. `Column./` always promotes to double, whose 53-bit mantissa

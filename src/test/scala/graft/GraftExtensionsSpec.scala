@@ -9,6 +9,8 @@ import graft.ops.GraftExtensions
 /** One route to each native function: queries reach the expressions
   * through the `Scalars` helpers, and SQL text through the one
   * GraftExtensions table, which checks every function's arity the same way.
+  * A query build changes nothing in the caller's session: it registers no
+  * function and no temp view.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -34,6 +36,35 @@ class GraftExtensionsSpec extends SparkSpec {
     for (q <- Seq("q19b_domain_parse_psl", "q70b_rolling_hash_native"))
       Queries.byName(q).build(s, sf)
     assert(tempFunctions(s) == before)
+  }
+
+  private def tables(s: SparkSession): Set[String] =
+    s.catalog.listTables().collect().map(_.name).toSet
+
+  test("building q60, q67, q68 and q171 leaves the session's tables " +
+    "unchanged") {
+    val s = spark.newSession()
+    val before = tables(s)
+    for (q <- Seq("q60_grouping_sets", "q67_in_subquery",
+        "q68_scalar_subquery", "q171_exists_correlated"))
+      Queries.byName(q).build(s, sf)
+    assert(tables(s) == before)
+  }
+
+  test("no Queries*.scala registers a temp view") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val words = Seq("TempView", "registerTempTable")
+    val hits = graft.ops.Nio.list(root)
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("Queries") && n.endsWith(".scala")
+      }
+      .flatMap { p =>
+        val src = Files.readString(p)
+        words.filter(src.contains).map(w => s"${p.getFileName}: $w")
+      }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("functionRegistry, createOrReplaceTempFunction and call_function( " +

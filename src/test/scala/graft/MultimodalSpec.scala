@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Multimodal
+import graft.ops.{Multimodal, MultimodalAv}
 
 /** Multimodal plumbing (north-star extension): binary columns + typed
   * metadata through the per-partition decode seam. The decode itself is a
@@ -170,8 +170,8 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val ids = spark.range(0, 60).toDF("doc_id")
     val corpus = Multimodal.syntheticImageCorpus(ids, 100000L)
-    val pairs = Multimodal.phashNearDup(
-      Multimodal.perceptualHash(corpus), maxDist = 3)
+    val pairs = MultimodalAv.hammingNearDup(
+      Multimodal.perceptualHash(corpus), "doc_id", "phash", maxDist = 3)
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),

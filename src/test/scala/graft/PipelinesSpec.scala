@@ -88,6 +88,20 @@ class PipelinesSpec extends SparkSpec {
       Seq("organic", "images"))
   }
 
+  test("rankingUrlsTransform output has the field names and types of " +
+    "Tables.rankingUrlsSchema") {
+    import spark.implicits._
+    val serp = Seq(("seo tips_en-us_1678887190", "https://a.com/x", 3,
+      1000L, 1.0, 0.5, "['c']", 0.1, 10.0, 0.2, "['organic']", 42L))
+      .toDF("s3_key", "url", "position", "volume", "cpc", "competition",
+        "category_strings_raw", "mm_difficulty", "traffic", "traffic_pct",
+        "serp_features_raw", "results_count")
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(fields(rankingUrlsTransform(serp).schema) ==
+      fields(Tables.rankingUrlsSchema))
+  }
+
   test("bulkIngest writes a date-partitioned warehouse from CSV shards") {
     val dir = java.nio.file.Files.createTempDirectory("shards").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "s1.csv"),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Relational-operator invariants on the sf0.001 testdata (SURVEY.md §5 #3):
@@ -81,5 +82,13 @@ class RelationalSpec extends SparkSpec {
       .groupBy("c_mktsegment").count()
     assert(b.orderBy("c_mktsegment").collect().toSeq ==
       s2.orderBy("c_mktsegment").collect().toSeq)
+  }
+
+  test("q60 over an empty lineitem returns the grand-total row alone") {
+    val dir = java.nio.file.Files.createTempDirectory("q60empty").toString
+    Tables.lineitem(spark, sf).limit(0).write
+      .parquet(s"$dir/lineitem.parquet")
+    val rows = Queries.byName("q60_grouping_sets").build(spark, dir).collect()
+    assert(rows.toSeq == Seq(Row("ALL", "ALL", 0L, null)))
   }
 }

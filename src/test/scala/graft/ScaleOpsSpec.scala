@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Bucketing, Skew, TypedRankings}
+import graft.ops.{Bucketing, Skew}
 
 /** Scale utilities: salted skew handling (result parity with unsalted),
-  * bucketed co-located joins (no exchange in the plan), typed Dataset ops.
+  * bucketed co-located joins (no exchange in the plan).
   */
 class ScaleOpsSpec extends SparkSpec {
 
@@ -69,22 +69,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(joined.count() ==
       Tables.lineitem(spark, sf).join(Tables.orders(spark, sf),
         col("l_orderkey") === col("o_orderkey")).count())
-  }
-
-  test("typed Dataset[Ranking] round-trip with null-rejection and invariants") {
-    val dir = java.nio.file.Files.createTempDirectory("csvshard").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "s.csv"),
-      ("domain,date,term,url,rank,volume,cpc\n" +
-        "a.com,2023-01-01,t1,https://a.com/1,1,10,0.1\n" +
-        "a.com,2023-01-02,t2,,,20,0.2\n" +            // null url/rank
-        "b.com,2023-01-03,t3,https://b.com/3,100,30,0.3").getBytes)
-    val ds = TypedRankings.fromCsv(spark, dir)
-    assert(ds.count() == 3)
-    assert(TypedRankings.clean(ds).count() == 2)
-    assert(TypedRankings.violations(ds).count() == 0)
-    val mv = TypedRankings.maxVolumeByDomain(ds).orderBy("domain").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(mv.toSeq == Seq(("a.com", 20L), ("b.com", 30L)))
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle " +

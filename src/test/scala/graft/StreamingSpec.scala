@@ -298,87 +298,6 @@ class StreamingSpec extends SparkSpec {
       "streaming-folded chi2 drift diverges from the batch form")
   }
 
-  test("T34s twin: order-aware mapGroupsWithState deltaSum equals the " +
-    "batch rollup under the ord-monotone replay contract") {
-    import org.apache.spark.sql.expressions.Window
-    val in = mkTmp("deltastream")
-    val e = QueriesTime.deltaEvents(Tables.events(spark, sf))
-      .localCheckpoint(true)
-    val n = e.count()
-    // three ord-range files with strictly increasing mtimes: the file
-    // source replays them oldest-first, so per-user batches arrive
-    // ord-monotone — the log-structured replay contract the fold states
-    val ranked = e.withColumn("rn",
-      row_number().over(Window.orderBy("o"))).localCheckpoint(true)
-    var lo = 0L
-    Seq(n / 3, 2 * n / 3, n).zipWithIndex.foreach { case (hi, i) =>
-      val tmp = mkTmp(s"dspart$i")
-      ranked.filter(col("rn") > lo && col("rn") <= hi).drop("rn")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = Paths.get(in, s"f$i.parquet")
-      Files.move(src.toPath, dst)
-      dst.toFile.setLastModified(1700000000000L + i * 2000L)
-      lo = hi
-    }
-    val stream = spark.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = graft.ops.DeltaSumStream.fold(stream)
-      .writeStream.format("memory").queryName("delta_twin")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000), "stream did not finish in 120s")
-    // update mode appends one row per (user, touching batch); the
-    // current total per user is the row with the max (monotone) n_events
-    val w = Window.partitionBy("user_id").orderBy(col("n_events").desc)
-    val streamed = spark.table("delta_twin")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").orderBy("user_id").collect().map(_.toString)
-    val batch = Queries.byName("q205_delta_sum").build(spark, sf)
-      .collect().map(_.toString)
-    assert(streamed.nonEmpty && streamed.sameElements(batch),
-      "streaming-folded deltaSum diverges from the batch form")
-  }
-
-  test("T34s late segment: a cross-batch row at or below the last applied " +
-    "ord is discarded (deltaSumTimestamp semantics), not folded out of " +
-    "order") {
-    import spark.implicits._
-    val in = mkTmp("deltalate")
-    // batch 0 applies ords a1,a3; batch 1 carries a LATE a2 (must be
-    // discarded — folding it would add 850 to posSum) and a fresh a5
-    val batches = Seq(
-      Seq((1L, "a1", 100L), (1L, "a3", 150L)),
-      Seq((1L, "a2", 1000L), (1L, "a5", 120L)))
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = mkTmp(s"dlpart$i")
-      rows.toDF("user_id", "o", "c").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val src = new java.io.File(tmp).listFiles
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = Paths.get(in, s"f$i.parquet")
-      Files.move(src.toPath, dst)
-      dst.toFile.setLastModified(1700000000000L + i * 2000L)
-    }
-    val schema = Seq((1L, "x", 1L)).toDF("user_id", "o", "c").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = graft.ops.DeltaSumStream.fold(stream)
-      .writeStream.format("memory").queryName("delta_late")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(60000), "stream did not finish in 60s")
-    val fin = spark.table("delta_late")
-      .orderBy(col("n_events").desc).limit(1)
-      .as[graft.ops.DeltaSumRow].collect().head
-    // in-order fold of a1(100), a3(150), a5(120): +50 then one reset
-    assert(fin == graft.ops.DeltaSumRow(1L, 3L, 50L, 1L, 120L),
-      s"late segment corrupted the fold: $fin")
-  }
-
   test("A24s twin: complete-mode streaming welch partials equal the " +
     "batch drift gate — the A/B monitor folds live over micro-batches") {
     val in = mkTmp("welchstream")
