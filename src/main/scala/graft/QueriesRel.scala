@@ -53,10 +53,7 @@ object QueriesRel {
         s.conf.get("spark.sql.warehouse.dir")).getPath)
       Seq(lt, ot).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(wh.resolve(t).toFile)
+        graft.ops.Nio.deleteTree(wh.resolve(t))
       }
       graft.ops.Bucketing.writeBucketed(
         lineitem(s, d).select("l_orderkey", "l_quantity"),

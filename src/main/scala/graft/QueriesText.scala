@@ -40,9 +40,6 @@ object QueriesText {
 
   private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
 
-  private[graft] def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
-
   /** Embeddings with the L2 norm materialized through an exchange. Without
     * the barrier CollapseProject inlines the norm aggregate into every
     * downstream pair expression, recomputing it per candidate pair; with it

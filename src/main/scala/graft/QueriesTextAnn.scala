@@ -107,11 +107,9 @@ object QueriesTextAnn {
     // ANN via IVF: coarse quantization against a fixed centroid set (the
     // first 10 vectors — deterministic and oracle-replayable in DuckDB,
     // which cannot replay a Lloyd fit), then exact re-rank within the
-    // query's cell. The PRODUCTION quantizer is ops/KMeans: deterministic
-    // farthest-point-init spherical Lloyd on a bounded sample, plus
-    // multi-probe assignment (KMeansIvfSpec proves recall >= this
-    // stand-in on centroid-disjoint queries and the nprobe dial above
-    // it). The cell assignment is one pass over the corpus against
+    // query's cell. A deployment swaps in centroids fit offline on a
+    // bounded sample; the stand-in keeps the whole flow replayable. The
+    // cell assignment is one pass over the corpus against
     // broadcast centroids; search cost scales with cell size, not corpus
     // size. Built through pipelines/AnnIndexPipeline's stage functions —
     // the same code the incremental fold (q117) uses, so the one-shot and

@@ -217,8 +217,9 @@ object QueriesTextGraphMedia {
               |GROUP BY l2.lbl ORDER BY l2.lbl""".stripMargin)),
 
     // Multimodal plumbing: opaque binary column + typed metadata. The
-    // "decode" is a deterministic fake (real image/audio libs are absent —
-    // see ops/Multimodal.scala for the mapPartitions decode seam).
+    // text bytes are no media format, so width and height are fixed
+    // functions of the byte length; q131–q133 and q189 decode real
+    // codecs (ops/Multimodal, ops/MultimodalAv).
     Q("q52_binary_meta",
       (s, d) => documents(s, d)
         .select(col("doc_id"), col("text").cast("binary").as("blob"))

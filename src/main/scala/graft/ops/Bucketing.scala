@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table utilities for co-located joins (builder-prompt scale
   * list: "repartition()/bucketing for co-located joins").
@@ -30,22 +30,5 @@ object Bucketing {
       case Some(s) => w.sortBy(s)
       case None => w
     }).saveAsTable(table)
-  }
-
-  /** Join two bucketed tables on their bucket key; with matching bucket
-    * counts the physical plan has no shuffle on either side. The merge hint
-    * pins sort-merge: bucketing exists for fact⋈fact joins whose sides are
-    * far beyond broadcast size (on toy data the planner would otherwise
-    * broadcast and ignore buckets).
-    */
-  def cooperativeJoin(
-      spark: SparkSession,
-      leftTable: String,
-      rightTable: String,
-      leftKey: String,
-      rightKey: String): DataFrame = {
-    val l = spark.table(leftTable).hint("merge")
-    val r = spark.table(rightTable)
-    l.join(r, l(leftKey) === r(rightKey))
   }
 }

@@ -1,8 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** Public-suffix-aware domain parsing — full-fidelity version of the
   * simplified last-two-labels rule in Scalars (SURVEY.md §7.5 #2).
   *
@@ -20,9 +17,9 @@ import org.apache.spark.sql.functions.udf
   * `include_psl_private_domains=False`. Executors re-initialize from the
   * jar-bundled resource, so nothing needs broadcasting. Queries reach the
   * registered domain through the native codegen expression
-  * [[RegisteredDomainExpr]] (`Scalars.registeredDomainPsl`); the
-  * subdomain, which has no native twin, stays a Scala UDF per SURVEY.md
-  * §4.2's decision table — acceptable off the hot path.
+  * [[RegisteredDomainExpr]] (`Scalars.registeredDomainPsl`). The
+  * program's subdomain column is `Scalars.subdomain`; [[parse]]'s PSL
+  * subdomain has no query caller.
   */
 object DomainParse {
 
@@ -99,9 +96,4 @@ object DomainParse {
     else if (p.suffix.isEmpty) p.domain
     else s"${p.domain}.${p.suffix}"
   }
-
-  val subdomainUdf =
-    udf((s: String) => parse(s).subdomain.orNull)
-
-  def subdomainCol(c: Column): Column = subdomainUdf(c)
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import scala.collection.concurrent.TrieMap
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 
@@ -16,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   *    runs into a process-private temp dir and `Files.move(ATOMIC_MOVE)`s
   *    into place, so a reader can never list a half-written directory. A
   *    racer that loses the rename discards its temp copy and trusts the
-  *    winner. An existing dir is trusted only with `_SUCCESS` present
-  *    (Spark writes it last).
+  *    winner; a build that throws discards its temp copy and rethrows,
+  *    so a retry leaves no debris. An existing dir is trusted only with
+  *    `_SUCCESS` present (Spark writes it last).
   */
 object LayoutCache {
 
@@ -44,9 +46,6 @@ object LayoutCache {
     ((d + parts.mkString("|")).hashCode & 0x7fffffff).toHexString
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    Nio.deleteTree(p)
-
   /** Return the warehouse path for layout `name`, building it first via
     * `build(tmpPath)` if no complete install exists. `name` must encode
     * everything the layout depends on (e.g. a hash of the source dir).
@@ -60,13 +59,14 @@ object LayoutCache {
         val p = wh.resolve(name)
         if (!java.nio.file.Files.exists(p.resolve("_SUCCESS"))) {
           val tmp = wh.resolve(s"$name.tmp-${java.util.UUID.randomUUID}")
-          build(tmp.toString)
+          try build(tmp.toString)
+          catch { case e: Throwable => Try(Nio.deleteTree(tmp)); throw e }
           try java.nio.file.Files.move(tmp, p,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           catch {
             case _: java.nio.file.FileSystemException
                 if java.nio.file.Files.exists(p.resolve("_SUCCESS")) =>
-              deleteRecursively(tmp) // lost the race; winner is complete
+              Nio.deleteTree(tmp) // lost the race; winner is complete
           }
         }
         p.toString

@@ -113,8 +113,8 @@ object MultimodalAv {
   }
 
   /** Decode a WAV container back to (samples, sampleRate) through the real
-    * `AudioSystem` reader. Returns None for bytes no reader claims — the
-    * quarantine path, same contract as [[Multimodal.decodeImage]].
+    * `AudioSystem` reader. Returns None for bytes no reader claims, which
+    * callers drop, as the [[Multimodal]] image decoders do.
     */
   def decodeWav(bytes: Array[Byte]): Option[(Array[Double], Double)] =
     try {
@@ -257,8 +257,9 @@ object MultimodalAv {
   }
 
   /** Hamming-band blocked near-dup pairs over any (id, hash64) table —
-    * the X2d SimHash band-join shape, used by the image (q131) and audio
-    * (q132) tiers: 4 disjoint 16-bit bands, candidates share ≥1 exact
+    * the X2d SimHash band-join shape, used by the image (q131), audio
+    * (q132) and video (q133, [[sceneDupPairs]]) tiers: 4 disjoint 16-bit
+    * bands, candidates share ≥1 exact
     * band (equi-join, never all-pairs; pigeonhole ⇒ deterministic recall
     * ≤ distance 3, LSH-curve recall beyond), exact `bit_count` filter to
     * `maxDist`. Band buckets are duplicate-density-sized, so the pair
@@ -397,34 +398,30 @@ object MultimodalAv {
       .toDF("doc_id", "blob")
   }
 
+  /** Low bits of the composite scene key that hold frame_no. */
+  private val FrameBits = 16
+
   /** Cross-clip shared-scene detection: sampled-frame hashes matched via
-    * the Hamming-band equi-join (never all-pairs), exact popcount ≤
-    * `maxDist` filters candidates, then matches are counted per
-    * (a_id, b_id) clip pair and pairs with ≥ `minFrames` matching scenes
-    * survive. Frame-granular analog of the document near-dup verdicts:
-    * band buckets are scene-duplicate-density-sized, the per-pair count
-    * is a partial agg over narrow (id, id, frame) rows.
+    * [[hammingNearDup]] over the composite key doc_id·2¹⁶ + frame_no,
+    * whose order agrees with doc_id; a frame_no outside [0, 2¹⁶) fails
+    * the query. Same-clip matches are dropped, then matches are counted
+    * per (a_id, b_id) clip pair and pairs with ≥ `minFrames` matching
+    * scenes survive. Frame-granular analog of the document near-dup
+    * verdicts: band buckets are scene-duplicate-density-sized, the
+    * per-pair count is a partial agg over narrow (id, id, frame) rows.
     */
   def sceneDupPairs(frameHashes: DataFrame, maxDist: Int,
       minFrames: Int): DataFrame = {
-    val banded = frameHashes.select(
-      col("doc_id"), col("frame_no"), col("fp"),
-      explode(expr(
-        "transform(sequence(0, 3)," +
-          " i -> struct(i AS band_no," +
-          " shiftright(fp, i * 16) & 65535 AS band_val))")).as("b"))
-      .select(col("doc_id"), col("frame_no"), col("fp"),
-        col("b.band_no").as("band_no"), col("b.band_val").as("band_val"))
-    val a = banded.select(col("doc_id").as("a_id"),
-      col("frame_no").as("a_frame"), col("fp").as("a_h"),
-      col("band_no"), col("band_val"))
-    val b = banded.select(col("doc_id").as("b_id"),
-      col("frame_no").as("b_frame"), col("fp").as("b_h"),
-      col("band_no"), col("band_val"))
-    a.join(b, Seq("band_no", "band_val"))
+    val span = 1L << FrameBits
+    val keyed = frameHashes
+      .filter(col("frame_no").between(0, span - 1) ||
+        raise_error(lit(s"sceneDupPairs: frame_no outside [0, $span)")))
+      .select((col("doc_id") * span + col("frame_no")).as("key"), col("fp"))
+    hammingNearDup(keyed, "key", "fp", maxDist)
+      .select(shiftright(col("a_id"), FrameBits).as("a_id"),
+        shiftright(col("b_id"), FrameBits).as("b_id"),
+        col("a_id").bitwiseAND(span - 1).as("a_frame"))
       .filter(col("a_id") < col("b_id"))
-      .select("a_id", "a_frame", "b_id", "b_frame", "a_h", "b_h").distinct()
-      .filter(expr(s"bit_count(a_h ^ b_h) <= $maxDist"))
       .groupBy("a_id", "b_id")
       .agg(countDistinct(col("a_frame")).cast("int").as("frames_matched"))
       .filter(col("frames_matched") >= minFrames)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * Scale design (north star = 100 TB):
   *  - FIT is M independent small k-means runs over SUBVECTORS of a
   *    bounded, content-derived sample (smallest xxhash64(id, seed) ids —
-  *    deterministic under retries/partitioning, the ops/KMeans recipe).
+  *    deterministic under retries/partitioning, no RNG).
   *    Codebooks are M×K×subDim doubles — KB-sized, broadcast-able.
   *  - ENCODE is one mapPartitions pass with the codebook in closure:
   *    per row, per subspace, argmin over K centroids (first-strictly-
@@ -87,13 +87,13 @@ object ProductQuantizer {
 
     val books = Array.tabulate(m) { s =>
       val off = s * subDim
-      // deterministic farthest-point init (ops/KMeans recipe): start at
-      // the first sample (already hash-ordered), greedily add the point
-      // farthest from the chosen set. minD caches each sample's distance
-      // to its nearest chosen centroid; a new centroid can only LOWER a
-      // sample's min, so updating against the newest centroid alone gives
-      // the same selections as rescanning the whole set (VERDICT r7 #7:
-      // O(n·k) per subspace instead of O(n·k²); ~k× on the 50k fit).
+      // deterministic farthest-point init: start at the first sample
+      // (already hash-ordered), greedily add the point farthest from the
+      // chosen set. minD caches each sample's distance to its nearest
+      // chosen centroid; a new centroid can only LOWER a sample's min, so
+      // updating against the newest centroid alone gives the same
+      // selections as rescanning the whole set (VERDICT r7 #7: O(n·k) per
+      // subspace instead of O(n·k²); ~k× on the 50k fit).
       val cents = new scala.collection.mutable.ArrayBuffer[Array[Double]]
       cents += java.util.Arrays.copyOfRange(sample(0), off, off + subDim)
       val minD = Array.tabulate(sample.length)(i =>
@@ -236,156 +236,6 @@ object ProductQuantizer {
         }
       }.toDF("q_id", "vec_id", "adc")
     // exact global top-k over the tiny candidate set
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("adc").asc, col("vec_id").asc)
-    cand.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "vec_id", "adc")
-  }
-
-  // ---- IVF-PQ (IVFADC) -----------------------------------------------------
-  // Plain PQ quantizes ABSOLUTE positions, so on a corpus with no cluster
-  // structure most of each vector's energy is the corpus-wide mean/spread
-  // and 8 bits per subspace resolve little (PqSpec's honest 0.53 uniform
-  // hard case). The FAISS IVFADC fix: a coarse quantizer (ops/KMeans cells)
-  // absorbs the macro position and PQ encodes only the RESIDUAL
-  // v − centroid(cell(v)) — smaller vectors, finer effective resolution —
-  // while the cell id doubles as the inverted-list search prune.
-
-  /** Coarse cells + a codebook trained on residuals (shared across cells,
-    * the standard single-codebook IVFADC layout).
-    */
-  final case class IvfPqModel(
-      cents: Array[Array[Double]], pq: Model) {
-    /** Reconstruction: cell centroid + decoded residual. */
-    def reconstruct(cell: Int, code: Array[Byte]): Array[Double] = {
-      val v = pq.decode(code)
-      val c = cents(cell)
-      var i = 0
-      while (i < v.length) { v(i) += c(i); i += 1 }
-      v
-    }
-  }
-
-  /** `(id, cell, resid)` — relational residual computation: the corpus
-    * keeps its layout (broadcast centroid join + `zip_with` subtraction,
-    * one pass, no shuffle of embeddings).
-    */
-  def residualFrame(df: DataFrame, idCol: String, embCol: String,
-      cents: Array[Array[Double]]): DataFrame = {
-    val cdf = KMeans.centroidFrame(df, cents)
-      .withColumnRenamed("c_id", "cell")
-    KMeans.assignCells(df, idCol, embCol, cents)
-      .join(broadcast(cdf), Seq("cell"))
-      .select(col(idCol), col("cell"),
-        zip_with(col(embCol), col("c_emb"),
-          (x, y) => x.cast("double") - y).as("resid"))
-  }
-
-  /** Train the IVFADC pair: `cells` coarse k-means centroids, then a PQ
-    * codebook on the residuals. Both fits run on bounded deterministic
-    * samples; both models are KB-sized and ride task closures.
-    */
-  def fitResidual(df: DataFrame, idCol: String, embCol: String, dim: Int,
-      cells: Int, m: Int, k: Int, iters: Int, seed: Long,
-      fitSample: Int = 50000): IvfPqModel = {
-    val cents = KMeans.fitCentroids(df, col(idCol), col(embCol),
-      k = cells, iters = iters, seed = seed, fitSample = fitSample)
-    val resid = residualFrame(df, idCol, embCol, cents)
-    IvfPqModel(cents,
-      fit(resid, col(idCol), col("resid"), dim, m, k, iters, seed + 1,
-        fitSample))
-  }
-
-  /** One-pass encode of the inverted lists: `(vec_id, cell, code)` with
-    * code = PQ code of the vector's residual (bit-stable, like encode).
-    */
-  def encodeIvf(df: DataFrame, idCol: String, embCol: String,
-      model: IvfPqModel): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    residualFrame(df, idCol, embCol, model.cents)
-      .select(col(idCol).cast("long").as("vec_id"), col("cell"),
-        col("resid"))
-      .map(r => (r.getLong(0), r.getInt(1),
-        encodeVec(rowVec(r.get(2)), model.pq)))
-      .toDF("vec_id", "cell", "code")
-  }
-
-  /** IVFADC top-k: each query probes its `nprobe` nearest cells (the same
-    * max-dot rule the corpus was assigned with), with one ADC table per
-    * (query, probed cell) built from the residual q − centroid. The scan
-    * prices a code row at zero unless some query probes its cell —
-    * corpus-side work scales with nprobe/cells, the IVF recall/cost dial.
-    * Per-partition top-k + exact tiny final sort, as in [[adcTopK]].
-    */
-  def ivfAdcTopK(codes: DataFrame, model: IvfPqModel,
-      queries: Seq[(Long, Array[Double])], topK: Int,
-      nprobe: Int): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val m = model.pq.m
-    // probed cells per query: max dot, cell-id tiebreak (mirrors
-    // KMeans.assignProbes' window order exactly)
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val perCell: Map[Int, Array[(Int, Array[Array[Double]])]] = queries
-      .zipWithIndex.flatMap { case ((_, qv), qi) =>
-        model.cents.indices
-          .map(c => (-dotD(qv, model.cents(c)), c))
-          .sorted.take(nprobe)
-          .map { case (_, cell) =>
-            val res = qv.clone()
-            val cent = model.cents(cell)
-            var i = 0
-            while (i < res.length) { res(i) -= cent(i); i += 1 }
-            cell -> (qi -> Array.tabulate(model.pq.m) { s =>
-              Array.tabulate(model.pq.k) { c =>
-                sqDist(res, s * model.pq.subDim,
-                  model.pq.codebooks(s)(c), model.pq.subDim)
-              }
-            })
-          }
-      }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
-    val qids = queries.map(_._1).toArray
-    val cand = codes.select(col("vec_id"), col("cell"), col("code"))
-      .as[(Long, Int, Array[Byte])]
-      .mapPartitions { it =>
-        // one heap per QUERY (not per probed cell): the shortlist is
-        // global over the probed lists. Same worst-first ordering as
-        // adcTopK — ties are routine under quantized distances.
-        val heaps = qids.map(_ =>
-          new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-            Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)))
-        it.foreach { case (vid, cell, code) =>
-          perCell.get(cell) match {
-            case None => ()
-            case Some(qs) =>
-              var i = 0
-              while (i < qs.length) {
-                val (qi, tab) = qs(i)
-                if (vid != qids(qi)) {
-                  var d = 0.0
-                  var s = 0
-                  while (s < m) { d += tab(s)(code(s) & 0xff); s += 1 }
-                  val h = heaps(qi)
-                  if (h.size < topK) h.enqueue((d, vid))
-                  else if (d < h.head._1 ||
-                    (d == h.head._1 && vid < h.head._2)) {
-                    h.dequeue(); h.enqueue((d, vid))
-                  }
-                }
-                i += 1
-              }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (d, vid) => (qids(qi), vid, d) }
-        }
-      }.toDF("q_id", "vec_id", "adc")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("adc").asc, col("vec_id").asc)
     cand.withColumn("rn", row_number().over(w))

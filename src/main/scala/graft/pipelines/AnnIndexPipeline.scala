@@ -23,12 +23,11 @@ import graft.QueriesText
   *    cosine re-rank within it — cost scales with cell size, not corpus
   *    size, and is unchanged by how the index was built.
   *  - Centroids are FIXED at index creation (here q54's deterministic
-  *    first-10-vectors stand-in so DuckDB can replay the whole flow; the
-  *    production quantizer is `ops/KMeans`, fit offline on a bounded
-  *    historical sample). A centroid refresh is a deliberate offline
-  *    rebuild — exactly how IVF deployments version their coarse
-  *    quantizers — never an implicit per-batch refit, which would
-  *    silently re-cell the entire corpus.
+  *    first-10-vectors stand-in so DuckDB can replay the whole flow; a
+  *    deployment fits them offline on a bounded historical sample). A
+  *    centroid refresh is a deliberate offline rebuild — exactly how IVF
+  *    deployments version their coarse quantizers — never an implicit
+  *    per-batch refit, which would silently re-cell the entire corpus.
   *
   * q54 builds its one-shot index through these same stage functions, so
   * the incremental and one-shot paths cannot drift; `q117_incremental_ann`

@@ -118,10 +118,7 @@ object JdbcSource {
         // CREATE TABLE would then throw instead of reseeding (ADVICE
         // r11). This JVM hasn't seeded it (TrieMap miss), so delete
         // first: seeding stays idempotent against leftover /tmp state.
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (root.exists()) rm(root)
+        graft.ops.Nio.deleteTree(root.toPath)
         val dir = new java.io.File(root, "topics").getAbsolutePath
         val rows = graft.Tables.t(spark, sfDir, "nation")
           .select(col("n_nationkey").cast("long"), col("n_name"))

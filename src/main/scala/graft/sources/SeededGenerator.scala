@@ -72,8 +72,8 @@ object SeededGenerator {
     *
     * Cluster membership is HASH-assigned, not round-robin, so any "first k
     * vectors as centroids" stand-in almost surely duplicates some clusters
-    * and misses others — the fixture a real coarse quantizer must strictly
-    * beat (KMeansIvfSpec; VERDICT r03 #4). Same purity discipline as
+    * and misses others — the fixture a real quantizer must strictly beat
+    * (VERDICT r03 #4; PqSpec's recall gate). Same purity discipline as
     * [[rankings]]: every value is a function of (id, seed), bit-identical
     * across partitionings and regenerable for any id slice.
     */

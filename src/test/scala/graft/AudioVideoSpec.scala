@@ -99,5 +99,12 @@ class AudioVideoSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(got == (0L until 30L).map(i => (i, i + 100000L, 3)),
       s"pairs mismatch: ${got.take(5)}...")
+    // a frame_no the composite (doc_id, frame_no) key cannot hold fails
+    // the query instead of pairing the wrong clips
+    val wide = Seq((1L, 1L << 16, 0L), (2L, 0L, 0L))
+      .toDF("doc_id", "frame_no", "fp")
+    val e = intercept[Exception](
+      MultimodalAv.sceneDupPairs(wide, maxDist = 3, minFrames = 1).collect())
+    assert(e.getMessage.contains("frame_no outside"), e.getMessage)
   }
 }

@@ -63,14 +63,13 @@ class DomainParseSpec extends SparkSpec {
     assert(DomainParse.parse("com").domain == "")
   }
 
-  test("UDF wrapper works in a DataFrame plan") {
+  test("registeredDomainPsl works in a DataFrame plan") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val r = Seq("shop.example.co.uk", "www.foo.com").toDF("fqdn")
-      .select(graft.ops.Scalars.registeredDomainPsl(col("fqdn")).as("rd"),
-        DomainParse.subdomainCol(col("fqdn")).as("sub"))
+      .select(graft.ops.Scalars.registeredDomainPsl(col("fqdn")).as("rd"))
       .collect()
-    assert(r(0).getString(0) == "example.co.uk" && r(0).getString(1) == "shop")
-    assert(r(1).getString(0) == "foo.com" && r(1).getString(1) == null)
+    assert(r(0).getString(0) == "example.co.uk")
+    assert(r(1).getString(0) == "foo.com")
   }
 }

@@ -49,4 +49,36 @@ class LayoutCacheSpec extends SparkSpec {
     assert(LayoutCache.sourceKey(d1.toString) !=
       LayoutCache.sourceKey(d2.toString))
   }
+
+  test("a build that throws leaves no temp dir in the warehouse, and a " +
+    "later good build installs") {
+    val wh = java.nio.file.Paths.get(java.net.URI.create(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    val name = s"lc_spec_${java.util.UUID.randomUUID}"
+    def debris = if (!java.nio.file.Files.isDirectory(wh)) Nil
+      else graft.ops.Nio.list(wh)
+        .filter(_.getFileName.toString.startsWith(s"$name.tmp-"))
+    // the build writes part of its layout, then fails
+    def failing(tmp: String): Unit = {
+      val d = java.nio.file.Paths.get(tmp)
+      java.nio.file.Files.createDirectories(d)
+      writeFile(d.resolve("part-0.parquet"), "partial")
+      throw new IllegalStateException("build failed")
+    }
+    (1 to 2).foreach { _ =>
+      intercept[IllegalStateException](
+        LayoutCache.installOnce(spark, name)(failing))
+    }
+    assert(debris.isEmpty, s"failed builds left $debris")
+    val p = LayoutCache.installOnce(spark, name) { tmp =>
+      val d = java.nio.file.Paths.get(tmp)
+      java.nio.file.Files.createDirectories(d)
+      writeFile(d.resolve("_SUCCESS"), "")
+    }
+    try {
+      assert(p == wh.resolve(name).toString)
+      assert(java.nio.file.Files.exists(wh.resolve(name).resolve("_SUCCESS")))
+      assert(debris.isEmpty)
+    } finally graft.ops.Nio.deleteTree(wh.resolve(name))
+  }
 }

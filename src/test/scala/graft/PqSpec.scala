@@ -112,7 +112,7 @@ class PqSpec extends SparkSpec {
     info(f"PQ ADC recall@3-in-20: $recall%.3f")
     // within-cluster ordering differences are noise-scale (0.05) while PQ
     // quantization error is codebook-scale, so the SHORTLIST is what PQ
-    // owes us — production IVF-PQ exact-re-ranks it (q110 does). A
+    // owes us — q110 exact-re-ranks it. A
     // 20-of-400 (5%) shortlist must recover nearly all of the exact top-3.
     assert(recall >= 0.85, f"recall $recall%.3f below gate")
   }
@@ -138,69 +138,6 @@ class PqSpec extends SparkSpec {
     // out in ascending vec_id order
     val ids = listAt(5).map(_._2)
     assert(ids == ids.sorted.take(7))
-  }
-
-  test("IVF-PQ: ADC distance equals exact distance to the reconstruction " +
-    "(cell centroid + decoded residual)") {
-    val ivf = ProductQuantizer.fitResidual(fixture, "vec_id", "embedding",
-      dim = Dim, cells = 4, m = 4, k = 16, iters = 5, seed = 7L)
-    val codes = ProductQuantizer.encodeIvf(fixture, "vec_id", "embedding",
-      ivf).cache()
-    val q = fixture.limit(1).collect().head
-      .getSeq[Float](1).map(_.toDouble).toArray
-    // probe ALL cells so every code is scored; check each returned adc
-    // against the from-first-principles reconstruction distance
-    val got = ProductQuantizer.ivfAdcTopK(codes, ivf,
-      Seq((-1L, q)), topK = 10, nprobe = 4).collect()
-    val codeOf = codes.as[(Long, Int, Array[Byte])].collect()
-      .map(c => c._1 -> (c._2, c._3)).toMap
-    got.foreach { r =>
-      val (cell, code) = codeOf(r.getLong(2))
-      val rec = ivf.reconstruct(cell, code)
-      val exact = q.indices.map(i => {
-        val d = q(i) - rec(i); d * d
-      }).sum
-      assert(math.abs(r.getDouble(3) - exact) < 1e-9)
-    }
-  }
-
-  test("IVF-PQ fixes the uniform hard case: recall >= 0.8 under " +
-    "inverted-list pruning where 4-bit plain PQ manages ~0.53") {
-    // What the r6 hard case actually showed: k=16 codebooks (4 bits per
-    // subspace) starve a structure-free corpus. The IVFADC composition
-    // measured here uses the FAISS-standard 8-bit codebooks (m=8, k=256 —
-    // still 8-byte codes, 32x compression) on cell RESIDUALS, and probes
-    // 12 of 16 cells. Sweep results this corpus/seed: plain PQ k=256
-    // full-scan 0.983; IVF-PQ nprobe=12 hits 0.967 against a 0.983
-    // probe-ceiling (true neighbors whose cell is probed) — the prune
-    // costs ~nothing in recall while capping the scan at nprobe/cells.
-    val e = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding"))
-    val vecs = e.collect().map { r =>
-      (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)
-    }
-    val ivf = ProductQuantizer.fitResidual(e, "vec_id", "embedding",
-      dim = 64, cells = 16, m = 8, k = 256, iters = 5, seed = 11L)
-    val codes = ProductQuantizer.encodeIvf(e, "vec_id", "embedding", ivf)
-      .cache()
-    val queries = vecs.filter(_._1 < 20)
-    def l2(a: Array[Double], b: Array[Double]) =
-      a.indices.map(i => { val d = a(i) - b(i); d * d }).sum
-    val truth = queries.map { case (qid, qv) =>
-      qid -> vecs.filter(_._1 != qid)
-        .map { case (vid, v) => (l2(qv, v), vid) }
-        .sortBy(x => (x._1, x._2)).take(3).map(_._2).toSet
-    }.toMap
-    val got = ProductQuantizer
-      .ivfAdcTopK(codes, ivf, queries.toSeq, topK = 20, nprobe = 12)
-      .collect().groupBy(_.getLong(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-    val recall = queries.map { case (qid, _) =>
-      (truth(qid) intersect got(qid)).size.toDouble /
-        truth(qid).size
-    }.sum / queries.length
-    info(f"IVF-PQ uniform-corpus recall@3-in-20: $recall%.3f")
-    assert(recall >= 0.8, f"recall $recall%.3f below gate")
   }
 
   test("real-corpus recall (uniform 64-dim — the hard case, no cluster " +

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Bucketing, Skew}
+import graft.ops.Skew
 
-/** Scale utilities: salted skew handling (result parity with unsalted),
-  * bucketed co-located joins (no exchange in the plan).
+/** Scale utilities: salted skew handling (result parity with unsalted)
+  * and the runtime bloom filter. Bucketed co-located joins are pinned by
+  * `PlanSpec` on q13b.
   */
 class ScaleOpsSpec extends SparkSpec {
 
@@ -37,38 +38,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(salted.count() == plain.count())
     assert(salted.exceptAll(plain).count() == 0)
     assert(plain.exceptAll(salted).count() == 0)
-  }
-
-  test("bucketed tables join without an exchange (co-located join)") {
-    // warehouse.dir is a static conf — tables land in ./spark-warehouse
-    // (gitignored); names are test-local. Clean any residue from aborted runs.
-    Seq("b_orders", "b_lineitem").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(loc)
-      }
-    }
-    Bucketing.writeBucketed(
-      Tables.orders(spark, sf).select("o_orderkey", "o_totalprice"),
-      "b_orders", "o_orderkey", 4, sortCol = Some("o_orderkey"))
-    Bucketing.writeBucketed(
-      Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
-      "b_lineitem", "l_orderkey", 4, sortCol = Some("l_orderkey"))
-    val joined = Bucketing.cooperativeJoin(spark, "b_orders", "b_lineitem",
-      "o_orderkey", "l_orderkey")
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-    // co-located: no shuffle (hashpartitioning exchange) on either side
-    assert(!plan.contains("hashpartitioning"),
-      s"bucketed join still shuffles:\n$plan")
-    assert(plan.contains("SortMergeJoin"))
-    assert(joined.count() ==
-      Tables.lineitem(spark, sf).join(Tables.orders(spark, sf),
-        col("l_orderkey") === col("o_orderkey")).count())
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle " +
