@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Multimodal.mix64
 
 /** Audio + video members of the multimodal tier ([[Multimodal]] holds the
-  * image members). Both run REAL JDK codecs end-to-end — no stub decode:
+  * image members). Both run REAL JDK codecs end-to-end:
   *
   *  - audio: WAV/PCM via `javax.sound.sampled.AudioSystem` (the WAV
   *    reader/writer ships with Java SE). The corpus is a deterministic
