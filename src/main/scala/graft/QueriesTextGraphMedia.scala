@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.ops.Scalars
 
 /** Graph-analytics and multimodal family (SURVEY.md §2.11 X71/X72/X77
   + X9/X43/X44/X45/X82): PageRank/triangles/label-propagation over the

@@ -14,8 +14,11 @@ import org.apache.spark.sql.SparkSession
   * files per micro-batch per partition; after a week a hot partition holds
   * thousands of KB-sized files and scan cost is dominated by listing,
   * footer reads, and task startup rather than bytes. Compaction bin-packs
-  * each partition back to ~`targetBytes` files. Design constraints that
-  * matter at scale:
+  * each partition back to ~`targetBytes` files. Bulk and stream ingest
+  * write one layout through [[ProcessedLog.appendUnit]], so both rankings
+  * tables are compactable; a table is compacted only while it has no
+  * pending unit, since a compacted file belongs to no unit. Design
+  * constraints that matter at scale:
   *
   *  - **Incremental**: only partitions with more files than their data
   *    needs are rewritten (a partition already at its packed file count is

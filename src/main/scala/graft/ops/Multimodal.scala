@@ -21,10 +21,15 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Decode the image bytes to a BufferedImage, or None if undecodable. */
+  /** Decode the image bytes to a BufferedImage, or None if undecodable:
+    * no reader claims the bytes (`read` returns null), or the reader that
+    * claims them cannot decode them (`read` throws, e.g. on a truncated
+    * PNG).
+    */
   private def readImage(bytes: Array[Byte])
       : Option[java.awt.image.BufferedImage] =
-    Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+    catch { case _: Exception => None }
 
   /** Aspect-preserving fit factor: min of the per-axis ratios, capped at 1
     * (never upscale).

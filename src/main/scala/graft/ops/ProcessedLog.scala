@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,12 +15,15 @@ import org.apache.spark.sql.functions._
   * dimension-sized; at 100 TB of history the log is itself partitioned and
   * pruned by the same unit-key prefix before the join.
   *
-  * Crash safety is at-least-once, the same window as the reference's flag
-  * (`ranking_urls_ingestor.py:96-114`): the mark is appended AFTER the
-  * unit's output commits, so a crash between the two leaves the unit
-  * unmarked and the next run processes it again. An appending sink such
-  * as `RankingsPipelines.bulkIngest` then holds the unit's rows twice;
-  * only a sink that overwrites by unit would absorb the replay.
+  * Ingest is exactly-once. The mark is appended AFTER the unit's output
+  * is written, the same order as the reference's flag
+  * (`ranking_urls_ingestor.py:96-114`), so a crash between the two leaves
+  * the unit unmarked and the next run writes it again. The unit's output
+  * goes through [[appendUnit]], which overwrites by unit: the re-run
+  * replaces the rows of the earlier attempt instead of adding to them.
+  * A stream's micro-batches go through the same [[appendUnit]], keyed on
+  * their batch id, so Spark's replay of an uncommitted batch is absorbed
+  * the same way (ops/StreamingIngest).
   */
 object ProcessedLog {
 
@@ -56,4 +59,60 @@ object ProcessedLog {
   def mark(units: DataFrame, logDir: String, keys: Seq[String]): Unit =
     units.select(keys.map(col): _*).write.mode("append").parquet(logDir)
 
+  /** Append `df` to the Hive-partitioned parquet table `tableDir` as work
+    * unit `unit`, replacing whatever an earlier attempt of the same unit
+    * left there. In order:
+    *  - delete the earlier attempt's hidden staging sibling, and every
+    *    data file of the table whose name carries the unit's prefix
+    *    (`unit-<hash of unit>-`);
+    *  - write `df` `partitionBy(partitionCols)` into a fresh hidden
+    *    staging sibling (named by [[Compaction.swapSibling]], so readers
+    *    of the table never list it), with a `rebalance` hint on the
+    *    partition columns: one file per partition value with AQE on;
+    *  - rename each staged file into its partition under the unit's
+    *    prefix, then delete the staging dir.
+    *
+    * So a re-run of a unit that crashed anywhere, or that finished but
+    * was never marked, leaves the unit's rows in the table exactly once,
+    * with no commit record and no recovery pass.
+    *
+    * Conditions:
+    *  - A compacted file belongs to no unit ([[Compaction]] writes its own
+    *    names), so compact a table only when it has no pending unit: a
+    *    re-run after that would add its rows beside the compacted copy.
+    *  - A reader that lists the table during the renames may see part of
+    *    the unit. Once `appendUnit` returns, or once the unit's re-run
+    *    returns, a reader sees the whole unit exactly once.
+    *  - The table is listed once per call to find the unit's files; a
+    *    table of very many files would keep a per-unit manifest instead.
+    */
+  def appendUnit(
+      df: DataFrame,
+      tableDir: String,
+      unit: String,
+      partitionCols: Seq[String]): Unit = {
+    val table = Paths.get(tableDir)
+    val name = "unit-" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(unit.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+    val prefix = s"$name-"
+    if (Files.isDirectory(table)) {
+      Nio.list(table)
+        .filter(_.getFileName.toString.startsWith(s".$name.stage-"))
+        .foreach(Nio.deleteTree)
+      Nio.walk(table).filter(_.getFileName.toString.startsWith(prefix))
+        .foreach(Files.delete)
+    }
+    val staged = Compaction.swapSibling(table.resolve(name), "stage")
+    (if (partitionCols.isEmpty) df
+     else df.hint("rebalance", partitionCols.map(col): _*))
+      .write.partitionBy(partitionCols: _*).parquet(staged.toString)
+    Nio.walk(staged).filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach { f =>
+        val dir = table.resolve(staged.relativize(f.getParent))
+        Files.createDirectories(dir)
+        Files.move(f, dir.resolve(prefix + f.getFileName),
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+    Nio.deleteTree(staged)
+  }
 }

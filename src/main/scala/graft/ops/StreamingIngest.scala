@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.StructType
   *  - T2 bounded parallelism: `concurrently.py:5-28` thread pool with
   *    FIRST_COMPLETED refill → Spark's task scheduler, no code needed.
   *  - T4 exactly-once/idempotent sink: DynamoDB flag per chunk, check-before
-  *    mark-after (`ranking_urls_ingestor.py:96-114`) → checkpointing + the
-  *    file sink's transaction log. A restarted query never re-ingests a
-  *    processed file.
+  *    mark-after (`ranking_urls_ingestor.py:96-114`) → checkpointing + a
+  *    sink that overwrites by batch id ([[ProcessedLog.appendUnit]]). A
+  *    restarted query never re-ingests a committed batch, and its replay
+  *    of an uncommitted one replaces that batch's earlier rows.
   *  - T5 resume-from-offset: `start_chunk_no` args
   *    (`ranking_urls_generator.py:255-257`) → checkpoint recovery.
   *  - T7 skip-empty-batch: `if not indices: continue`
@@ -26,7 +27,8 @@ import org.apache.spark.sql.types.StructType
   * At 100 TB scale: `maxFilesPerTrigger` bounds per-batch memory exactly like
   * the reference's NUM_FILES_IN_A_CHUNK=10 (`ranking_urls_generator.py:45-47`);
   * the parquet sink partitions by `date` (the MergeTree-date analog,
-  * SURVEY.md §1.1) so downstream readers prune partitions.
+  * SURVEY.md §1.1) so downstream readers prune partitions. The stream
+  * table has the bulk table's layout, so ops/Compaction maintains both.
   */
 object StreamingIngest {
 
@@ -45,26 +47,25 @@ object StreamingIngest {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(dir)
 
-  /** Run the ingest to a partitioned parquet sink with AvailableNow —
+  /** Run the ingest to a partitioned parquet table with AvailableNow —
     * processes everything currently present, in bounded batches, then stops;
-    * the checkpoint makes re-runs idempotent (T4/T5).
+    * the checkpoint makes re-runs idempotent (T4/T5). Each micro-batch is
+    * one [[ProcessedLog.appendUnit]] keyed on (`checkpointDir`, batch id),
+    * so a batch that Spark replays after a crash before its commit
+    * overwrites its own earlier rows. Micro-batches run with AQE off, so
+    * the write keeps one file per scan task per partition value.
     */
   def ingestAvailableNow(
       df: DataFrame,
       outDir: String,
       checkpointDir: String,
-      partitionCols: Seq[String] = Seq.empty): StreamingQuery = {
-    val writer = df.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
-      .option("path", outDir)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).start()
-  }
+      partitionCols: Seq[String] = Seq.empty): StreamingQuery =
+    ingestForeachBatch(df, checkpointDir) { (batch, id) =>
+      ProcessedLog.appendUnit(batch, outDir, s"$checkpointDir#$id", partitionCols)
+    }
 
-  /** foreachBatch variant with the reference's skip-empty-batch guard (T7)
-    * for sinks without a transaction log.
+  /** AvailableNow foreachBatch with the reference's skip-empty-batch guard
+    * (T7): `onBatch` sees each non-empty micro-batch with its batch id.
     */
   def ingestForeachBatch(
       df: DataFrame,

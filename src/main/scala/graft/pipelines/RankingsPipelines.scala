@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.Scalars
+import graft.ops.{ProcessedLog, Scalars}
 
 /** End-to-end Spark realizations of the reference's three pipeline entry
   * points (SURVEY.md §3) over reference-shaped tables (FIXTURES.md §A).
@@ -109,23 +109,23 @@ object RankingsPipelines {
     * The 2,137-subprocess insert loop is one read + one write; Spark's
     * scheduler replaces the process fan-out (T2).
     *
+    * The glob is the work unit of [[ProcessedLog.appendUnit]]:
+    * a second call with the same glob replaces the rows of the first, so
+    * a chunk re-run after a crash before its mark is not ingested twice.
     * The write carries a `rebalance` hint on `date`, so with AQE on each
     * call writes one file per date rather than one per scan task per date:
     * the MergeTree insert that makes one part per partition.
     * `optimizeSkewsInRebalancePartitions` still splits a date that is too
     * big for one task, which a plain repartition on `date` would not.
     * Spark drops the hint when AQE is off, and the write is then one file
-    * per scan task per date. The stream sink (ops/StreamingIngest) is not
-    * clustered: micro-batches run without AQE, so a repartition there
-    * would make one task the only writer of each date in every batch.
+    * per scan task per date.
     */
   def bulkIngest(
       spark: SparkSession,
       csvGlob: String,
       outDir: String): Unit =
-    graft.Tables.readRankingsCsv(spark, csvGlob)
-      .hint("rebalance", col("date"))
-      .write.mode("append").partitionBy("date").parquet(outDir)
+    ProcessedLog.appendUnit(graft.Tables.readRankingsCsv(spark, csvGlob),
+      outDir, csvGlob, Seq("date"))
 
   /** Reference-shaped side-table schemas (FIXTURES.md §A3). */
   val topicsSchema: StructType = StructType(Seq(

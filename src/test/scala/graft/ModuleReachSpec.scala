@@ -63,9 +63,7 @@ class ModuleReachSpec extends AnyFunSuite {
     "RankingsPipelines.serpIndexSchema" ->
       "reference step: the serp_index table, SURVEY §3.2",
     "Scalars.chunkId" ->
-      "reference step: the collector's _chunkify, SURVEY §3.2",
-    "StreamingIngest.ingestForeachBatch" ->
-      "reference step: the ingestor's skip-empty-batch guard, SURVEY §3.3")
+      "reference step: the collector's _chunkify, SURVEY §3.2")
 
   private val ObjectHead =
     """^(?:(?:final|private(?:\[\w+\])?)\s+)*object\s+(\w+)""".r.unanchored

@@ -44,6 +44,17 @@ class MultimodalSpec extends SparkSpec {
     assert((back.getRGB(160, 120) & 0xffffff) == 0x336699)
   }
 
+  test("a blob that the PNG reader claims but cannot decode is dropped, " +
+    "not a failed task") {
+    val png = makeImage(64, 48, 0x336699, "png")
+    val blobs = Seq(
+      (1L, png),
+      (2L, java.util.Arrays.copyOf(png, png.length / 2))) // truncated
+      .toDF("doc_id", "blob")
+    val out = Multimodal.resizeImage(blobs, 32, 32).collect()
+    assert(out.map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
   test("pHash: resize/re-encode twins hash within 3 bits; unrelated " +
     "images stay >= 8 apart; the hash is stable across runs") {
     import spark.implicits._

@@ -1,15 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
+import org.apache.spark.sql.functions.col
 
-import graft.ops.ProcessedLog
+import graft.ops.{Compaction, Nio, ProcessedLog}
+import graft.pipelines.RankingsPipelines.bulkIngest
 
 /** Batch idempotency (T4 analog): unprocessed-unit selection via anti-join
-  * against the processed log, re-run safety, incremental arrival.
+  * against the processed log, re-run safety, incremental arrival, and
+  * exactly-once ingest through the overwrite-by-unit append.
   */
 class ProcessedLogSpec extends SparkSpec {
   import spark.implicits._
@@ -100,6 +104,87 @@ class ProcessedLogSpec extends SparkSpec {
       .toDF("locale_page", "chunk")
     assert(jobsAndStagesOf(ProcessedLog.mark(units, log, keys)) == (1, 1))
     assert(ProcessedLog.pending(units, log, keys).count() == 0)
+  }
+
+  /** Two chunks of CSV shards, `c<chunk>-<n>.csv`, each spanning three
+    * dates; the glob of one chunk.
+    */
+  private def chunkedCsv(): (Path, Int => String) = {
+    val dir = Files.createTempDirectory("chunks")
+    for (ch <- 0 to 1; n <- 0 to 1) {
+      val rows = (1 to 3).map(d => s"c$ch$n.com,2023-01-0$d,t$n," +
+        s"https://c$ch$n.com/$d,${d + n},${10 * d},0.$ch$n")
+      Files.write(dir.resolve(s"c$ch-$n.csv"),
+        ("domain,date,term,url,rank,volume,cpc" +: rows).mkString("\n")
+          .getBytes)
+    }
+    (dir, ch => dir.resolve(s"c$ch-*.csv").toString)
+  }
+
+  private def assertTableIsCsv(table: String, csv: Path): Unit = {
+    val src = Tables.readRankingsCsv(spark, csv.toString)
+    val got = spark.read.parquet(table).select(src.columns.map(col): _*)
+    assert(got.count() == src.count(),
+      s"${got.count()} rows for ${src.count()} CSV rows: duplicates or loss")
+    assert(got.exceptAll(src).isEmpty && src.exceptAll(got).isEmpty,
+      "the table is not multiset-equal to the CSV rows")
+  }
+
+  test("a crash between a chunk's append and its mark: the re-run gate " +
+    "loop ingests the chunk again and the table holds each row once") {
+    val (csv, glob) = chunkedCsv()
+    val work = Files.createTempDirectory("ingest")
+    val (table, log) = (work.resolve("table").toString,
+      work.resolve("log").toString)
+    bulkIngest(spark, glob(0), table) // the crash: chunk 0 is never marked
+    // the gate loop of the rankings pipeline: pending → ingest → mark
+    (0 to 1).foreach { ch =>
+      val unit = Seq(ch).toDF("chunk")
+      if (!ProcessedLog.pending(unit, log, Seq("chunk")).isEmpty) {
+        bulkIngest(spark, glob(ch), table)
+        ProcessedLog.mark(unit, log, Seq("chunk"))
+      }
+    }
+    assert(ProcessedLog.pending(Seq(0, 1).toDF("chunk"), log, Seq("chunk"))
+      .isEmpty)
+    assertTableIsCsv(table, csv)
+  }
+
+  test("a crash inside the append: readers never list the stale staging " +
+    "sibling, and the unit's re-run leaves exactly the clean rows") {
+    val (csv, glob) = chunkedCsv()
+    val table = Files.createTempDirectory("ingest").resolve("table")
+    def parquetFiles =
+      Nio.walk(table).filter(_.getFileName.toString.endsWith(".parquet"))
+    bulkIngest(spark, glob(0), table.toString)
+    val files = parquetFiles
+    val UnitPrefix = """(unit-[0-9a-f]{16}-).*""".r
+    val prefixes = files.map(_.getFileName.toString).collect {
+      case UnitPrefix(p) => p }.distinct
+    assert(prefixes.size == 1 && files.size == 3,
+      s"one unit-prefixed file per date expected: $files")
+    val prefix = prefixes.head
+    bulkIngest(spark, glob(1), table.toString)
+    assert(parquetFiles.size == 6)
+    val clean = spark.read.parquet(table.toString).count()
+    // what a crash among the renames of chunk 0's re-run leaves: the staged
+    // files in a hidden sibling, one of them already renamed into the table
+    val stage = Compaction.swapSibling(table.resolve(prefix.init), "stage")
+    files.foreach { f =>
+      val d = stage.resolve(f.getParent.getFileName)
+      Files.createDirectories(d)
+      Files.copy(f, d.resolve(f.getFileName.toString.stripPrefix(prefix)))
+    }
+    files.drop(1).foreach(Files.delete)
+    val seen = spark.read.parquet(table.toString)
+    assert(seen.inputFiles.forall(!_.contains("/.")),
+      "a reader listed the staging sibling")
+    assert(seen.count() == clean - 4) // two of chunk 0's dates are missing
+
+    bulkIngest(spark, glob(0), table.toString)
+    assertTableIsCsv(table.toString, csv)
+    assert(!Nio.walk(table).exists(_.getFileName.toString.startsWith(".unit-")),
+      "a staging sibling was left behind")
   }
 
   test("pending treats a log path that is a file, not a directory, as " +
