@@ -52,8 +52,10 @@ object StreamingIngest {
     * the checkpoint makes re-runs idempotent (T4/T5). Each micro-batch is
     * one [[ProcessedLog.appendUnit]] keyed on (`checkpointDir`, batch id),
     * so a batch that Spark replays after a crash before its commit
-    * overwrites its own earlier rows. Micro-batches run with AQE off, so
-    * the write keeps one file per scan task per partition value.
+    * overwrites its own earlier rows. Spark runs a foreachBatch write
+    * with AQE on, so the `rebalance` hint clusters each batch: one file
+    * per partition value per batch, where the file sink wrote one per
+    * scan task per partition value.
     */
   def ingestAvailableNow(
       df: DataFrame,
