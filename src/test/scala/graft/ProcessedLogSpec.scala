@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
-import org.apache.spark.sql.functions.col
 
 import graft.ops.{Compaction, Nio, ProcessedLog}
 import graft.pipelines.RankingsPipelines.bulkIngest
@@ -121,15 +120,6 @@ class ProcessedLogSpec extends SparkSpec {
     (dir, ch => dir.resolve(s"c$ch-*.csv").toString)
   }
 
-  private def assertTableIsCsv(table: String, csv: Path): Unit = {
-    val src = Tables.readRankingsCsv(spark, csv.toString)
-    val got = spark.read.parquet(table).select(src.columns.map(col): _*)
-    assert(got.count() == src.count(),
-      s"${got.count()} rows for ${src.count()} CSV rows: duplicates or loss")
-    assert(got.exceptAll(src).isEmpty && src.exceptAll(got).isEmpty,
-      "the table is not multiset-equal to the CSV rows")
-  }
-
   test("a crash between a chunk's append and its mark: the re-run gate " +
     "loop ingests the chunk again and the table holds each row once") {
     val (csv, glob) = chunkedCsv()
@@ -147,7 +137,7 @@ class ProcessedLogSpec extends SparkSpec {
     }
     assert(ProcessedLog.pending(Seq(0, 1).toDF("chunk"), log, Seq("chunk"))
       .isEmpty)
-    assertTableIsCsv(table, csv)
+    assertTableRows(table, Tables.readRankingsCsv(spark, csv.toString))
   }
 
   test("a crash inside the append: readers never list the stale staging " +
@@ -182,7 +172,8 @@ class ProcessedLogSpec extends SparkSpec {
     assert(seen.count() == clean - 4) // two of chunk 0's dates are missing
 
     bulkIngest(spark, glob(0), table.toString)
-    assertTableIsCsv(table.toString, csv)
+    assertTableRows(table.toString,
+      Tables.readRankingsCsv(spark, csv.toString))
     assert(!Nio.walk(table).exists(_.getFileName.toString.startsWith(".unit-")),
       "a staging sibling was left behind")
   }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.GraftExtensions
@@ -53,5 +54,17 @@ abstract class SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Assert that the parquet table at `dir` holds exactly the rows of
+    * `src`, as a multiset (an ingest table's partition columns come last,
+    * so columns are matched by name).
+    */
+  def assertTableRows(dir: String, src: DataFrame): Unit = {
+    val got = spark.read.parquet(dir).select(src.columns.map(col): _*)
+    assert(got.count() == src.count(),
+      s"${got.count()} rows for ${src.count()} source rows: duplicates or loss")
+    assert(got.exceptAll(src).isEmpty && src.exceptAll(got).isEmpty,
+      "the table is not multiset-equal to the source")
   }
 }

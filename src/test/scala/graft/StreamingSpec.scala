@@ -130,27 +130,19 @@ class StreamingSpec extends SparkSpec {
     q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
   }
 
-  private def assertTableIsSource(out: String, in: String): Unit = {
-    val src = Tables.readRankingsCsv(spark, in)
-    val got = spark.read.parquet(out).select(src.columns.map(col): _*)
-    assert(got.count() == src.count() &&
-      got.exceptAll(src).isEmpty && src.exceptAll(got).isEmpty,
-      "the table is not multiset-equal to the source")
-  }
-
   test("T4: Spark's replay of an uncommitted micro-batch overwrites that " +
     "batch's rows: the table still equals the source") {
     val in = sixShards()
     val (out, ckpt) = (mkTmp("replayed"), mkTmp("ckpt_replay"))
     assert(ingestByDate(in, out, ckpt) == Seq(0L, 1L, 2L))
-    assertTableIsSource(out, in)
+    assertTableRows(out, Tables.readRankingsCsv(spark, in))
     // a crash after the last batch's rows were written, before its commit
     val commits = Paths.get(ckpt, "commits")
     Files.delete(commits.resolve("2"))
     Files.deleteIfExists(commits.resolve(".2.crc"))
     assert(ingestByDate(in, out, ckpt) == Seq(2L),
       "the restart did not replay the uncommitted batch")
-    assertTableIsSource(out, in)
+    assertTableRows(out, Tables.readRankingsCsv(spark, in))
   }
 
   test("T4: the stream table compacts like the bulk table: rows kept, and " +
@@ -162,9 +154,9 @@ class StreamingSpec extends SparkSpec {
     val r = Compaction.compact(spark, out, 64L * 1024 * 1024)
     assert(r.partitionsRewritten > 0)
     assert(Compaction.stats(out).forall(_.files == 1))
-    assertTableIsSource(out, in)
+    assertTableRows(out, Tables.readRankingsCsv(spark, in))
     assert(ingestByDate(in, out, ckpt).isEmpty)
-    assertTableIsSource(out, in)
+    assertTableRows(out, Tables.readRankingsCsv(spark, in))
   }
 
   test("T7: foreachBatch skips empty batches and sees all rows once") {
