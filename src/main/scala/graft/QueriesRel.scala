@@ -690,7 +690,7 @@ object QueriesRel {
     // table; ZOrderSpec measures the pruning itself (files containing
     // matches: z ≪ unclustered).
     Q("q104_zorder_box",
-      (s, d) => s.read.parquet(graft.ops.ZOrder.zLineitemPath(s, d))
+      (s, d) => Tables.parquet(s, graft.ops.ZOrder.zLineitemPath(s, d))
         .filter(col("l_partkey").between(500, 599) &&
           col("l_suppkey").between(20, 39))
         .groupBy("l_returnflag")
@@ -712,7 +712,7 @@ object QueriesRel {
     // plain table); ParquetBloomSpec measures the skipping itself (8/8
     // row groups stats-only vs 0/8 bloomed for an absent key).
     Q("q114_bloom_lookup",
-      (s, d) => s.read.parquet(graft.ops.ParquetBloom.bloomOrdersPath(s, d))
+      (s, d) => Tables.parquet(s, graft.ops.ParquetBloom.bloomOrdersPath(s, d))
         .filter(col("o_custkey") === 42)
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey"),

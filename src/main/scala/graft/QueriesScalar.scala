@@ -290,7 +290,10 @@ object QueriesScalar {
              |ORDER BY c_mktsegment, dr, c_custkey""".stripMargin)),
 
     // W3/A7 running total — reference incremental counters
-    // (`concurrently.py:20`), as a frame-spec window sum.
+    // (`concurrently.py:20`), as a frame-spec window sum. The window's key
+    // prefixes the final ORDER BY, so one range exchange on o_custkey
+    // clusters the window AND orders the output: the final sort needs no
+    // second shuffle, whose range sample would run the Window stage again.
     Q("q23_running_total",
       (s, d) => {
         val w = Window.partitionBy("o_custkey")
@@ -300,6 +303,7 @@ object QueriesScalar {
           .select(col("o_custkey"), col("o_orderkey"),
             col("o_orderdate").cast("date").as("o_date"),
             col("o_totalprice"))
+          .repartitionByRange(col("o_custkey"))
           .withColumn("running_total",
             round(sum("o_totalprice").over(w), 2))
           .orderBy("o_custkey", "o_date", "o_orderkey")

@@ -208,7 +208,7 @@ object QueriesTime {
     Q("q96_partition_prune",
       (s, d) => {
         val path = dayPartitionedEvents(s, d)
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .filter(col("day") >= lit("2024-01-08").cast("date") &&
             col("day") <= lit("2024-01-14").cast("date"))
           .groupBy("day", "event_type")
@@ -523,7 +523,7 @@ object QueriesTime {
     Q("q116_compacted_scan",
       (s, d) => {
         val path = graft.ops.Compaction.compactedEventsPath(s, d)
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             countDistinct(col("user_id")).as("uniq_users"))
@@ -552,7 +552,7 @@ object QueriesTime {
     Q("q216_ttl_retention",
       (s, d) => {
         val path = graft.ops.Retention.retainedEventsPath(s, d)
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .groupBy("day")
           .agg(count(lit(1)).as("n_events"),
             Scalars.moneySum(col("value")).as("vol"))

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -7,7 +10,10 @@ import org.apache.spark.sql.types._
   * and the reference-shaped tables (FIXTURES.md §A; schema evidence:
   * reference `rankings_generator.py:143-151`, `ranking_urls_generator.py:99-116`).
   *
-  * The testdata tables are read with each parquet file's own schema ([[t]]).
+  * The testdata tables (and the layouts built from them) are read with
+  * each parquet file's own schema, resolved once per session and keyed on
+  * (session, path, each file's length and mtime, the session's parquet
+  * confs) ([[parquet]]).
   * The reference-shaped tables have declared schemas, which CSV ingest
   * enforces with FAILFAST, mirroring the reference's insert-time
   * `types_check: True` discipline (`ranking_urls_ingestor.py:78`).
@@ -20,7 +26,40 @@ object Tables {
     * vectorized reader + column pruning/pushdown come free.
     */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Read a parquet file or dir with its own schema, resolved once per
+    * session. Inferring it runs one Spark job per read, so later reads
+    * declare the schema the first one inferred: a query build then runs no
+    * job for its table and layout reads. Every call still returns a fresh
+    * DataFrame, so a self-join gets distinct attribute ids.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** Per session: (path, each data file's (name, length, mtime), the
+    * session's parquet confs) → the schema Spark inferred on the first
+    * read. The file key re-resolves a table rewritten in place (the driver
+    * once regenerated `events.ts` from ns to us); the conf key re-resolves
+    * when a conf that changes inference (`nanosAsLong`,
+    * `inferTimestampNTZ`, …) is set on the session; `newSession()` gets its
+    * own map. Weak on the session, so a dropped session's map goes with it.
+    */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Any, StructType]]
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val stamps = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toVector
+    val confs = spark.conf.getAll.filter(_._1.contains("parquet"))
+    val bySession = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[Any, StructType]))
+    bySession.computeIfAbsent((path, stamps, confs),
+      _ => spark.read.parquet(path).schema)
+  }
 
   /** The same table as a relation for SQL text (`FROM ${sqlFrom(d, "x")}`).
     * A query build reads its tables this way and never registers a temp

@@ -2,6 +2,10 @@ package graft.ops
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -69,8 +73,9 @@ object ProcessedLog {
     *    staging sibling (named by [[Compaction.swapSibling]], so readers
     *    of the table never list it), with a `rebalance` hint on the
     *    partition columns: one file per partition value with AQE on;
-    *  - rename each staged file into its partition under the unit's
-    *    prefix, then delete the staging dir.
+    *  - rename each staged file that holds rows into its partition under
+    *    the unit's prefix, then delete the staging dir. So a unit of no
+    *    rows adds no data file (the reference's skip of an empty chunk).
     *
     * So a re-run of a unit that crashed anywhere, or that finished but
     * was never marked, leaves the unit's rows in the table exactly once,
@@ -107,6 +112,7 @@ object ProcessedLog {
      else df.hint("rebalance", partitionCols.map(col): _*))
       .write.partitionBy(partitionCols: _*).parquet(staged.toString)
     Nio.walk(staged).filter(_.getFileName.toString.endsWith(".parquet"))
+      .filter(f => partitionCols.nonEmpty || hasRows(f))
       .foreach { f =>
         val dir = table.resolve(staged.relativize(f.getParent))
         Files.createDirectories(dir)
@@ -114,5 +120,16 @@ object ProcessedLog {
           StandardCopyOption.ATOMIC_MOVE)
       }
     Nio.deleteTree(staged)
+  }
+
+  /** False for the one schema-only file that an unpartitioned write of no
+    * rows leaves (a partitioned write opens a file only for a row): read
+    * from the footer, so an empty unit adds no data file without a second
+    * job over its input.
+    */
+  private def hasRows(file: java.nio.file.Path): Boolean = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file.toUri), new Configuration()))
+    try r.getRecordCount > 0 finally r.close()
   }
 }

@@ -1,9 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{EvalMode, Expression, MakeDecimal, NumericEvalContext, UnscaledValue}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.DecimalType
 
 /** Scalar column functions — SURVEY.md §2.8. Each is a pure `Column =>
   * Column` built from codegen'd built-in expressions or from graft's own
@@ -204,16 +206,28 @@ object Scalars {
     * the one a money pipeline uses anyway: quantize each row to cents
     * (the input is either an exact-2dp source column, which the
     * DECIMAL(18,2) cast snaps losslessly, or a derived product already
-    * quantized by [[round2]]), then sum EXACTLY in decimal — associative,
-    * so partial aggregation order cannot matter — and convert the one
-    * exact total to double at the end (a single identical rounding in
-    * both engines). DECIMAL(18,2) holds ±10^16 cents: a 100 TB corpus of
-    * prices fits with headroom, and Spark widens the sum buffer to
-    * DECIMAL(28,2) on top.
+    * quantized by [[round2]]), then sum EXACTLY — associative, so partial
+    * aggregation order cannot matter — and convert the one exact total to
+    * double at the end (a single identical rounding in both engines).
+    *
+    * The sum runs over the cast's unscaled cents in a LONG and makes the
+    * one DECIMAL(28,2) at the end: Spark's own `DecimalAggregates` rewrite
+    * (`UnscaledValue`/`MakeDecimal`), which Spark applies only up to
+    * DECIMAL(8,2). Integer addition is exact, so the total is the
+    * decimal sum's, bit for bit, and the agg buffer is a primitive long
+    * instead of a BigDecimal-backed DECIMAL(28,2) (q06's partial
+    * aggregate: about half its steady time). Headroom: the LONG holds
+    * ±9.2e18 cents (about 9.2e16 dollars) against DECIMAL(28,2)'s ±1e26
+    * cents; the sum is ANSI whatever the session's mode, so a total past
+    * it raises ARITHMETIC_OVERFLOW and never wraps. DECIMAL(18,2) holds
+    * ±10^16 cents per row.
     */
   def moneySum(centsQuantized: Column): Column = {
-    import org.apache.spark.sql.types.DecimalType
-    sum(centsQuantized.cast(DecimalType(18, 2))).cast("double")
+    val cents = UnscaledValue(ColumnBridge.expression(
+      centsQuantized.cast(DecimalType(18, 2))))
+    val total = Sum(cents, NumericEvalContext(EvalMode.ANSI))
+    ColumnBridge.column(MakeDecimal(total.toAggregateExpression(), 28, 2))
+      .cast("double")
   }
 
   /** DuckDB rendition of moneySum for oracle SQL. */

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   *  - T5 resume-from-offset: `start_chunk_no` args
   *    (`ranking_urls_generator.py:255-257`) → checkpoint recovery.
   *  - T7 skip-empty-batch: `if not indices: continue`
-  *    (`s3_rankings_collector.py:106-108`) → foreachBatch isEmpty guard.
+  *    (`s3_rankings_collector.py:106-108`) → an empty batch's write adds
+  *    no data file ([[ProcessedLog.appendUnit]]).
   *
   * At 100 TB scale: `maxFilesPerTrigger` bounds per-batch memory exactly like
   * the reference's NUM_FILES_IN_A_CHUNK=10 (`ranking_urls_generator.py:45-47`);
@@ -52,32 +53,23 @@ object StreamingIngest {
     * the checkpoint makes re-runs idempotent (T4/T5). Each micro-batch is
     * one [[ProcessedLog.appendUnit]] keyed on (`checkpointDir`, batch id),
     * so a batch that Spark replays after a crash before its commit
-    * overwrites its own earlier rows. Spark runs a foreachBatch write
-    * with AQE on, so the `rebalance` hint clusters each batch: one file
-    * per partition value per batch, where the file sink wrote one per
-    * scan task per partition value.
+    * overwrites its own earlier rows, and an empty batch adds no data file
+    * (T7) without a probe job that would scan the batch twice. Spark runs
+    * a foreachBatch write with AQE on, so the `rebalance` hint clusters
+    * each batch: one file per partition value per batch, where the file
+    * sink wrote one per scan task per partition value.
     */
   def ingestAvailableNow(
       df: DataFrame,
       outDir: String,
       checkpointDir: String,
       partitionCols: Seq[String] = Seq.empty): StreamingQuery =
-    ingestForeachBatch(df, checkpointDir) { (batch, id) =>
-      ProcessedLog.appendUnit(batch, outDir, s"$checkpointDir#$id", partitionCols)
-    }
-
-  /** AvailableNow foreachBatch with the reference's skip-empty-batch guard
-    * (T7): `onBatch` sees each non-empty micro-batch with its batch id.
-    */
-  def ingestForeachBatch(
-      df: DataFrame,
-      checkpointDir: String)(
-      onBatch: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) onBatch(batch, id)
+        ProcessedLog.appendUnit(
+          batch, outDir, s"$checkpointDir#$id", partitionCols)
       }
       .start()
 }

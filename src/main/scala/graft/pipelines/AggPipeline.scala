@@ -19,12 +19,13 @@ import graft.ops.Scalars
   * The state row carries, per (event_type, day):
   *   - `n`      exact event count (BIGINT — sums associatively),
   *   - `vol`    exact value sum as DECIMAL(28,2) (the Scalars.moneySum
-  *              discipline: decimal addition is exact and associative, so
-  *              the fold order can never flip a cent; double-sum partials
-  *              would be accumulation-order-dependent and break the
-  *              fold-vs-scratch bit-identity this pipeline guarantees.
-  *              DECIMAL(28,2) holds ±1e26 cents — far past 100 TB of
-  *              prices; Spark widens the merge buffer to (38,2) and the
+  *              discipline — exact cents, so the fold order can never flip
+  *              a cent; double-sum partials would be
+  *              accumulation-order-dependent and break the fold-vs-scratch
+  *              bit-identity this pipeline guarantees. moneySum itself
+  *              sums unscaled cents in a LONG; this persisted state keeps
+  *              a decimal column, which holds ±1e26 cents — far past 100 TB
+  *              of prices; Spark widens the merge buffer to (38,2) and the
   *              cast back is lossless inside that window),
   *   - `low`/`high`  min/max (associative as-is),
   *   - `open`/`open_ord`, `close`/`close_ord`  the value at the bucket's
@@ -143,7 +144,7 @@ object AggPipeline {
     val p = graft.ops.LayoutCache.installOnce(s, s"agg_mv_state_n${n}_$h") {
       tmp => foldBatches(graft.Tables.events(s, d), n).write.parquet(tmp)
     }
-    s.read.parquet(p)
+    graft.Tables.parquet(s, p)
   }
 
   // ---- derived rollups (consumers of the maintained table) -----------------

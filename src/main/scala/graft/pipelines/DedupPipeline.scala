@@ -232,8 +232,8 @@ object DedupPipeline {
       ()
     }
     DedupIndex(
-      bands = s.read.parquet(p + "/bands"),
-      labels = s.read.parquet(p + "/labels"))
+      bands = graft.Tables.parquet(s, p + "/bands"),
+      labels = graft.Tables.parquet(s, p + "/labels"))
   }
 
   /** The question the index answers each day: which of THIS batch's docs

@@ -210,6 +210,38 @@ class PlanSpec extends SparkSpec {
       s"stride interleave fell back to a window rank:\n$p")
   }
 
+  test("q23 running total: one range exchange over the order rows, none " +
+    "between the Window and the output, and the rows come out ordered") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    val df = Queries.byName("q23_running_total").build(spark, sf)
+    val rows = df.collect().map(r => (r.getLong(0), r.getDate(2).toLocalDate.toEpochDay,
+      r.getLong(1))).toSeq
+    assert(rows.nonEmpty && rows == rows.sortBy(identity),
+      "rows are not in (o_custkey, o_date, o_orderkey) order")
+    val p = df.queryExecution.executedPlan // the final adaptive plan
+    val shuffles = Aqe.collect(p) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1 &&
+      shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning],
+      s"not one range exchange in:\n$p")
+    // root → Window: no exchange, stage or shuffle read on the way
+    def toWindow(n: SparkPlan): Option[List[SparkPlan]] = n match {
+      case w: WindowExec => Some(List(w))
+      case _ => n.children.iterator.map(toWindow).collectFirst {
+        case Some(path) => n :: path }
+    }
+    val path = toWindow(Aqe.stripAQEPlan(p)).getOrElse(
+      fail(s"no Window in:\n$p"))
+    assert(!path.exists(n => n.isInstanceOf[ShuffleExchangeLike] ||
+      n.isInstanceOf[QueryStageExec] || n.isInstanceOf[AQEShuffleReadExec]),
+      s"a shuffle between the Window and the output in:\n$p")
+  }
+
   test("q31 date-window filter reaches the scan") {
     val p = plan("q31_date_window")
     assert(p.contains("PushedFilters") && p.contains("l_shipdate"),

@@ -1,11 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
 
 import graft.ops.{Compaction, Nio, ProcessedLog}
 import graft.pipelines.RankingsPipelines.bulkIngest
@@ -47,39 +42,6 @@ class ProcessedLogSpec extends SparkSpec {
     ProcessedLog.mark(units2, log, keys)
     ProcessedLog.mark(units2, log, keys)
     assert(ProcessedLog.pending(units2, log, keys).count() == 0)
-  }
-
-  /** Jobs started and stages submitted while `body` ran. A sentinel job
-    * closes each side: the listener bus delivers events in order, so once
-    * the sentinel's start arrives every earlier event has been counted.
-    */
-  private def jobsAndStagesOf(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val submitted = new AtomicInteger
-    @volatile var sentinel = new CountDownLatch(1)
-    def isSentinel(props: java.util.Properties) =
-      Option(props).exists(_.getProperty("graft.sentinel") != null)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (isSentinel(j.properties)) sentinel.countDown()
-        else started.incrementAndGet()
-      override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
-        if (!isSentinel(st.properties)) submitted.incrementAndGet()
-    }
-    def drain(): Unit = {
-      sentinel = new CountDownLatch(1)
-      sc.setLocalProperty("graft.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.sentinel", null)
-      assert(sentinel.await(30, TimeUnit.SECONDS), "listener bus not drained")
-    }
-    sc.addSparkListener(listener)
-    try {
-      drain(); started.set(0); submitted.set(0)
-      body
-      drain(); (started.get(), submitted.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a gate on a non-empty log runs two jobs: the log's broadcast and " +

@@ -142,4 +142,55 @@ class ScalarsSpec extends SparkSpec {
     assert(naive != 1000.0,
       "fixture no longer demonstrates double-sum error - strengthen it")
   }
+
+  /** The DECIMAL(18,2) sum that moneySum's unscaled-long sum replaced. */
+  private def decimalMoneySum(c: org.apache.spark.sql.Column) =
+    sum(c.cast(org.apache.spark.sql.types.DecimalType(18, 2))).cast("double")
+
+  test("moneySum gives the DECIMAL(18,2) sum's double bit for bit: empty, " +
+    "all-null, single-row, negative-cent, near-2^53 and seeded inputs") {
+    val rnd = new scala.util.Random(13)
+    val seeded = Seq.fill(5000)(
+      Some((rnd.nextLong() % 100000000000L) / 100.0)) // ±1e9 dollars, in cents
+    val cases: Seq[(String, Seq[Option[Double]])] = Seq(
+      "empty" -> Seq.empty,
+      "all-null" -> Seq(None, None, None),
+      "single row" -> Seq(Some(12.34)),
+      "negative cents" -> Seq(Some(-0.01), Some(-1234.56), Some(0.07),
+        Some(-0.29), None, Some(99.99), Some(-19570.81)),
+      // totals just past 2^53 cents, where the final double rounds
+      "near 2^53 cents" -> Seq(Some(90071992547409.91), Some(0.01),
+        Some(0.01), Some(0.03), Some(-0.05), Some(45035996273704.97)),
+      // a total past 10^18 cents, beyond a compact (long-backed) Decimal
+      "past 1e18 cents" -> (Seq.fill(3)(Some(9.0e15)) :+ Some(-0.01)),
+      "seeded" -> seeded)
+    cases.foreach { case (name, vs) =>
+      val df = vs.toDF("v").repartition(7)
+      val Seq(got, want) = Seq(Scalars.moneySum(col("v")),
+        decimalMoneySum(col("v"))).map { c =>
+        val r = df.agg(c).head()
+        if (r.isNullAt(0)) None
+        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
+      }
+      assert(got == want, s"$name: moneySum ${got.map(java.lang.Double
+        .longBitsToDouble)} vs the DECIMAL sum ${want.map(java.lang.Double
+        .longBitsToDouble)}")
+      if (name == "empty" || name == "all-null") assert(got.isEmpty, name)
+    }
+  }
+
+  test("moneySum raises on a total past the LONG's ±9.2e18 cents, under " +
+    "ANSI and with ANSI off: it never wraps") {
+    // 11 × 9e17 cents = 9.9e18 > Long.MaxValue ≈ 9.22e18
+    val df = Seq.fill(11)(9.0e15).toDF("v").repartition(3)
+    Seq("true", "false").foreach { ansi =>
+      withConf("spark.sql.ansi.enabled" -> ansi) {
+        val e = intercept[Exception](
+          df.agg(Scalars.moneySum(col("v"))).head())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")),
+          s"ansi=$ansi: not an overflow error: $e")
+      }
+    }
+  }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -66,5 +71,38 @@ abstract class SparkSpec extends AnyFunSuite {
       s"${got.count()} rows for ${src.count()} source rows: duplicates or loss")
     assert(got.exceptAll(src).isEmpty && src.exceptAll(got).isEmpty,
       "the table is not multiset-equal to the source")
+  }
+
+  /** Jobs started and stages submitted while `body` ran. A sentinel job
+    * closes each side: the listener bus delivers events in order, so once
+    * the sentinel's start arrives every earlier event has been counted.
+    */
+  def jobsAndStagesOf(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val submitted = new AtomicInteger
+    @volatile var sentinel = new CountDownLatch(1)
+    def isSentinel(props: java.util.Properties) =
+      Option(props).exists(_.getProperty("graft.sentinel") != null)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (isSentinel(j.properties)) sentinel.countDown()
+        else started.incrementAndGet()
+      override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
+        if (!isSentinel(st.properties)) submitted.incrementAndGet()
+    }
+    def drain(): Unit = {
+      sentinel = new CountDownLatch(1)
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinel.await(30, TimeUnit.SECONDS), "listener bus not drained")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain(); started.set(0); submitted.set(0)
+      body
+      drain(); (started.get(), submitted.get())
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -119,8 +119,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** AvailableNow into `out` partitioned by date; the ids of the batches
-    * that read rows. (`numInputRows` also counts the rows that the
-    * skip-empty guard's probe scans, so it is not a row count here.)
+    * that read rows.
     */
   private def ingestByDate(in: String, out: String, ckpt: String): Seq[Long] = {
     val q = StreamingIngest.ingestAvailableNow(
@@ -159,21 +158,34 @@ class StreamingSpec extends SparkSpec {
     assertTableRows(out, Tables.readRankingsCsv(spark, in))
   }
 
-  test("T7: foreachBatch skips empty batches and sees all rows once") {
-    val in = mkTmp("shards2")
-    val ckpt = mkTmp("ckpt2")
-    writeShard(in, "s1.csv", Seq(
-      "foo.com,2023-01-01,t,https://foo.com/a,1,100,0.5"))
-    val seen = new java.util.concurrent.atomic.AtomicLong(0)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = StreamingIngest.ingestForeachBatch(
-      StreamingIngest.csvStream(spark, Tables.rankingsV1Schema, in, 10),
-      ckpt) { (batch, _) =>
-      batches.incrementAndGet(); seen.addAndGet(batch.count())
+  test("T7: an empty micro-batch adds no data file, and numInputRows sums " +
+    "to the rows ingested") {
+    def dataFiles(dir: String): Int = Files.walk(Paths.get(dir)).toArray
+      .count(_.toString.endsWith(".parquet"))
+    Seq(Seq.empty[String], Seq("date")).foreach { parts =>
+      val in = sixShards()
+      val (out, ckpt) = (mkTmp("t7out"), mkTmp("t7ckpt"))
+      def run() = {
+        val q = StreamingIngest.ingestAvailableNow(
+          StreamingIngest.csvStream(spark, Tables.rankingsV1Schema, in, 2),
+          out, ckpt, parts)
+        assert(q.awaitTermination(60000), "stream did not finish in 60s")
+        q.recentProgress.toSeq
+      }
+      val full = run()
+      val files = dataFiles(out)
+      assert(files > 0)
+      writeShard(in, "s6.csv", Seq.empty) // a header-only shard
+      val empty = run()
+      assert(empty.map(_.batchId) == Seq(3L) && empty.head.numInputRows == 0,
+        s"the header-only shard did not run as one empty batch ($parts)")
+      assert(dataFiles(out) == files,
+        s"the empty batch added a data file ($parts)")
+      val rows = (full ++ empty).map(_.numInputRows).sum
+      assert(rows == 12L,
+        s"numInputRows sums to $rows for 12 rows ingested ($parts)")
+      assertTableRows(out, Tables.readRankingsCsv(spark, in))
     }
-    assert(q.awaitTermination(60000),
-      "stream did not finish in 60s")
-    assert(seen.get() == 1 && batches.get() == 1)
   }
 
   test("X39 twin: streaming context chunking matches the batch chunk set " +

@@ -103,4 +103,64 @@ class TablesSpec extends SparkSpec {
     assert(mn > 1_500_000_000_000_000_000L && mn < 2_000_000_000_000_000_000L,
       s"ts=$mn is not epoch-nanos — unit drift in normalization")
   }
+
+  /** `name.parquet` in a fresh dir: a copy of the testdata table `from`. */
+  private def copyTable(dir: String, name: String, from: String): Unit =
+    Files.copy(Paths.get(s"$sf/$from.parquet"), Paths.get(s"$dir/$name.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+
+  test("Tables.t resolves a file's schema once per session: a second read " +
+    "runs no Spark job") {
+    val dir = Files.createTempDirectory("schema-once").toString
+    copyTable(dir, "x", "orders")
+    val (first, _) = jobsAndStagesOf(Tables.t(spark, dir, "x"))
+    assert(first >= 1, "the first read did not infer the schema")
+    val (second, _) = jobsAndStagesOf(Tables.t(spark, dir, "x"))
+    assert(second == 0, s"the second read ran $second jobs")
+    val a = Tables.t(spark, dir, "x")
+    val b = Tables.t(spark, dir, "x")
+    assert(a.schema == spark.read.parquet(s"$dir/x.parquet").schema)
+    assert(a.queryExecution.analyzed.output.map(_.exprId).toSet
+      .intersect(b.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty,
+      "two reads share attribute ids: a self-join would be ambiguous")
+    assert(a.join(b, a("o_orderkey") === b("o_orderkey")).count() ==
+      a.count())
+  }
+
+  test("Tables.t re-resolves a file rewritten in place with another schema") {
+    val dir = Files.createTempDirectory("schema-rewrite").toString
+    copyTable(dir, "x", "orders")
+    assert(Tables.t(spark, dir, "x").columns.contains("o_orderkey"))
+    copyTable(dir, "x", "customer")
+    val df = Tables.t(spark, dir, "x")
+    assert(df.schema == Tables.customer(spark, sf).schema,
+      s"a stale schema served after the rewrite: ${df.schema}")
+    assert(df.count() == Tables.customer(spark, sf).count())
+    assert(jobsAndStagesOf(Tables.t(spark, dir, "x"))._1 == 0)
+  }
+
+  test("Tables.t re-resolves when a conf that changes inference is set") {
+    val dir = Files.createTempDirectory("schema-conf").toString
+    Files.copy(Paths.get(fixture), Paths.get(s"$dir/events.parquet"))
+    assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+      // Spark cannot read timestamp[ns] without the conf: the cached
+      // LongType schema must not be served under it
+      intercept[Exception](Tables.t(spark, dir, "events").collect())
+    }
+    assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
+  }
+
+  test("Tables.t from 4 threads on one session gives equal schemas") {
+    val dir = Files.createTempDirectory("schema-threads").toString
+    copyTable(dir, "x", "lineitem")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (1 to 16).map(_ => pool.submit(
+        () => Tables.t(spark, dir, "x").schema))
+      val schemas = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(schemas.distinct == Seq(Tables.lineitem(spark, sf).schema))
+    } finally pool.shutdown()
+    assert(jobsAndStagesOf(Tables.t(spark, dir, "x"))._1 == 0)
+  }
 }
