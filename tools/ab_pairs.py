@@ -198,7 +198,7 @@ def main():
         for s in ("parent", "change"):
             med = traced[s].get("detail", {}).get("steady_median_s", {})
             print(f"    steady medians ({s}): " + ", ".join(
-                f"{q.split('_')[0]} {t:.3f}" for q, t in sorted(med.items())))
+                f"{q} {t:.3f}" for q, t in sorted(med.items())))
     return 0
 
 
