@@ -158,8 +158,9 @@ class StreamingSpec extends SparkSpec {
     assertTableRows(out, Tables.readRankingsCsv(spark, in))
   }
 
-  test("T7: an empty micro-batch adds no data file, and numInputRows sums " +
-    "to the rows ingested") {
+  // The ingest is a foreachBatch write: an empty micro-batch adds no data
+  // file, and numInputRows sums to the rows ingested.
+  test("T7: foreachBatch skips empty batches and sees all rows once") {
     def dataFiles(dir: String): Int = Files.walk(Paths.get(dir)).toArray
       .count(_.toString.endsWith(".parquet"))
     Seq(Seq.empty[String], Seq("date")).foreach { parts =>
