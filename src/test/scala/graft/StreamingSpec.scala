@@ -158,9 +158,22 @@ class StreamingSpec extends SparkSpec {
     assertTableRows(out, Tables.readRankingsCsv(spark, in))
   }
 
-  // The ingest is a foreachBatch write: an empty micro-batch adds no data
-  // file, and numInputRows sums to the rows ingested.
   test("T7: foreachBatch skips empty batches and sees all rows once") {
+    val in = mkTmp("shards2")
+    val (out, ckpt) = (mkTmp("t7one"), mkTmp("ckpt2"))
+    writeShard(in, "s1.csv", Seq(
+      "foo.com,2023-01-01,t,https://foo.com/a,1,100,0.5"))
+    val q = StreamingIngest.ingestAvailableNow(
+      StreamingIngest.csvStream(spark, Tables.rankingsV1Schema, in, 10),
+      out, ckpt)
+    assert(q.awaitTermination(60000),
+      "stream did not finish in 60s")
+    assert(q.recentProgress.map(_.numInputRows).toSeq == Seq(1L))
+    assertTableRows(out, Tables.readRankingsCsv(spark, in))
+  }
+
+  test("T7: an empty micro-batch adds no data file, and numInputRows sums " +
+    "to the rows ingested") {
     def dataFiles(dir: String): Int = Files.walk(Paths.get(dir)).toArray
       .count(_.toString.endsWith(".parquet"))
     Seq(Seq.empty[String], Seq("date")).foreach { parts =>

@@ -140,15 +140,24 @@ class TablesSpec extends SparkSpec {
   }
 
   test("Tables.t re-resolves when a conf that changes inference is set") {
+    // orders.o_orderdate is parquet timestamp[us] without a time zone:
+    // TIMESTAMP_NTZ by default, TIMESTAMP once inferTimestampNTZ is off.
+    // Both schemas read the file, so only the cache key tells them apart.
     val dir = Files.createTempDirectory("schema-conf").toString
-    Files.copy(Paths.get(fixture), Paths.get(s"$dir/events.parquet"))
-    assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
-    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
-      // Spark cannot read timestamp[ns] without the conf: the cached
-      // LongType schema must not be served under it
-      intercept[Exception](Tables.t(spark, dir, "events").collect())
+    copyTable(dir, "x", "orders")
+    def dateType = Tables.t(spark, dir, "x").schema("o_orderdate").dataType
+    assert(dateType == TimestampNTZType)
+    withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
+      val (first, _) = jobsAndStagesOf(Tables.t(spark, dir, "x"))
+      assert(first >= 1, "the read under the new conf was served the cache")
+      assert(dateType == TimestampType,
+        s"the cached schema served under the new conf: $dateType")
+      assert(Tables.t(spark, dir, "x").count() ==
+        Tables.orders(spark, sf).count())
+      assert(jobsAndStagesOf(Tables.t(spark, dir, "x"))._1 == 0)
     }
-    assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
+    assert(dateType == TimestampNTZType)
+    assert(jobsAndStagesOf(Tables.t(spark, dir, "x"))._1 == 0)
   }
 
   test("Tables.t from 4 threads on one session gives equal schemas") {

@@ -12,9 +12,12 @@ back to back on one fresh seed, in an order that rotates from pair to pair,
 with `perfbench/run.py` exactly as the benchmark runs it. Nothing under
 perfbench/ is edited.
 
-Per end-to-end metric of BENCHMARK.json it prints each side's median and
-quartiles, change/parent and parent-copy/parent, the pairs the change won
-(ties count for neither side) and a verdict:
+Each run lasts BENCHMARK.json's `run_seconds`. Per end-to-end metric it
+prints each side's median and quartiles, change/parent and
+parent-copy/parent, the pairs the change won out of all pairs run (ties,
+and pairs where either side crashed, count as not won) and a verdict:
+  - worse (failures): the change crashed more runs, failed more
+    operations or gave more wrong answers than the parent;
   - gain: the change won at least 9/10 of the pairs and its median is
     better than the parent's by more than the parent's IQR;
   - worse: the change's median is worse than the parent's by more than the
@@ -78,7 +81,18 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def verdict(par, cha, lower, bound, won, pairs):
+def faults(runs, side):
+    """(crashed runs, failed operations, runs not correct) of one side."""
+    mine = [r for r in runs if r["side"] == side]
+    ok = [r for r in mine if "metrics" in r]
+    return (len(mine) - len(ok), sum(r["failed"] for r in ok),
+            sum(not r["correct"] for r in ok))
+
+
+def verdict(par, cha, lower, bound, won, pairs, par_faults, cha_faults):
+    """`won` of `pairs` run; the faults are `faults()` of each side."""
+    if any(c > p for p, c in zip(par_faults, cha_faults)):
+        return "worse (failures)"
     q1, pm, q3 = quartiles(par)
     cm = statistics.median(cha)
     better = (pm - cm) if lower else (cm - pm)
@@ -101,7 +115,6 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", required=True,
                     help="e.g. 1401-1410 or 5,7,9; one seed per pair")
-    ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", action="store_true")
     ap.add_argument("--workdir", help="where the clones go (default: a "
                     "temporary dir, removed at the end)")
@@ -130,7 +143,8 @@ def main():
         for i, seed in enumerate(seeds[:args.pairs]):
             order = SIDES[i % 3:] + SIDES[:i % 3]
             for side in order:
-                r = run(trees[side], args.workload, seed, args.seconds, False)
+                r = run(trees[side], args.workload, seed,
+                        spec["run_seconds"], False)
                 runs.append(dict(r, side=side, seed=seed, pair=i,
                                  order=order.index(side)))
                 out.write_text(json.dumps({"revs": revs, "runs": runs}))
@@ -143,7 +157,7 @@ def main():
         if args.trace:
             for side in ("parent", "change"):
                 traced[side] = run(trees[side], args.workload, seeds[0],
-                                   args.seconds, True)
+                                   spec["run_seconds"], True)
             out.write_text(json.dumps({"revs": revs, "runs": runs,
                                        "traced": traced}))
     finally:
@@ -157,13 +171,13 @@ def main():
     print(f"{args.workload}: parent {revs['parent'][:7]}, change "
           f"{revs['change'][:7]}, {args.pairs} triples, seeds "
           f"{seeds[0]}..{seeds[args.pairs - 1]}; raw runs in {out}")
+    fault = {side: faults(runs, side) for side in SIDES}
     for side in SIDES:
         ok = [r for r in runs if r["side"] == side and "metrics" in r]
         cal = [r["detail"]["host_witness"]["calibration_median_s"] for r in ok]
-        print(f"  {side}: {len(ok)} runs, failed ops "
-              f"{sum(r['failed'] for r in ok)}, not correct "
-              f"{sum(not r['correct'] for r in ok)}, crashed "
-              f"{sum('error' in r for r in runs if r['side'] == side)}, "
+        crashed, failed, wrong = fault[side]
+        print(f"  {side}: {len(ok)} runs, failed ops {failed}, not correct "
+              f"{wrong}, crashed {crashed}, "
               f"calibration {min(cal, default=0):.3f}-{max(cal, default=0):.3f} s")
     print(f"  {'metric':16} {'parent med [q1, q3]':>28} {'copy med':>9} "
           f"{'change med [q1, q3]':>28} {'chg/par':>8} {'A/A':>6} "
@@ -184,8 +198,9 @@ def main():
         am = statistics.median(aa)
         print(f"  {name:16} {pm:9.3f} [{pq1:7.3f}, {pq3:7.3f}] {am:9.3f} "
               f"{cm:9.3f} [{cq1:7.3f}, {cq3:7.3f}] {cm / pm:8.3f} "
-              f"{am / pm:6.3f} {won:>2}/{len(pairs):<3}  "
-              f"{verdict(par, cha, lower, m['bound'], won, len(pairs))}")
+              f"{am / pm:6.3f} {won:>2}/{args.pairs:<3}  "
+              + verdict(par, cha, lower, m["bound"], won, args.pairs,
+                        fault["parent"], fault["change"]))
     if traced:
         print("  per layer (one traced run per side, seed "
               f"{seeds[0]}): parent -> change")
