@@ -1070,25 +1070,22 @@ object QueriesCuration {
     // The global rank comes from the distributed prefix sum (GlobalRank,
     // q86's primitive): range partition on the order key + per-partition
     // offsets — NO global window, no single-task sort at any corpus size.
-    // The order key embeds doc_id in its low 32 bits
-    // ((h mod 2^31)·2^32 + doc_id, collision-free by construction):
-    // ordering by the bare hash would be nondeterministic under hash
-    // ties — invisible at small sf, a silent cross-engine divergence at
-    // corpus scale.
+    // The order is (h mod 2^31, doc_id): ordering by the bare hash would
+    // be nondeterministic under hash ties — invisible at small sf, a
+    // silent cross-engine divergence at corpus scale.
     Q("q121_epoch_shuffle",
       (s, d) => {
         val docs = documents(s, d).select(col("doc_id"))
         def one(e: Int): org.apache.spark.sql.DataFrame = {
-          val h = pmod(Scalars.tokenHash(
+          // h is a column, so the sort compares longs and never re-hashes
+          val keyed = docs.withColumn("h", pmod(Scalars.tokenHash(
             concat(lit(s"ep$e-"), col("doc_id").cast("string"))),
-            lit(1L << 31))
-          val keyed = docs.select(col("doc_id"),
-            (h * lit(1L << 32) + col("doc_id")).as("ok"))
-          GlobalRank.prefixSum(keyed, col("ok"), lit(1L))
-            .select(lit(e).as("epoch"),
-              (col("k") % lit(1L << 32)).as("doc_id"),
-              (col("cum_before") % lit(8L)).as("shard"),
-              expr("cum_before DIV 8").as("pos"))
+            lit(1L << 31)))
+          GlobalRank.prefixSum(keyed, Nil, Seq(col("h"), col("doc_id")),
+              lit(1L))._1
+            .select(lit(e).as("epoch"), col("doc_id"),
+              (col("before") % lit(8L)).as("shard"),
+              Scalars.longDiv("before", 8L).as("pos"))
         }
         one(0).union(one(1)).orderBy("epoch", "doc_id")
       },
@@ -1097,11 +1094,11 @@ object QueriesCuration {
              |        (('0x' || substr(md5('ep' ||
              |           CAST(e.epoch AS VARCHAR) || '-' ||
              |           CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT
-             |         % 2147483648) * 4294967296 + d.doc_id AS ok
+             |         % 2147483648) AS h
              |      FROM documents d CROSS JOIN e),
              |r AS (SELECT epoch, doc_id,
              |        row_number() OVER (PARTITION BY epoch
-             |          ORDER BY ok) - 1 AS rnk
+             |          ORDER BY h, doc_id) - 1 AS rnk
              |      FROM k)
              |SELECT CAST(epoch AS INT) AS epoch, doc_id,
              |       CAST(rnk % 8 AS BIGINT) AS shard,
@@ -1486,9 +1483,10 @@ object QueriesCuration {
     // t. No interpolation, no doubles anywhere: pure integer index
     // arithmetic (r·(N−1) accumulates in DECIMAL(38,0) — it overflows
     // BIGINT past ~3e9 docs).
-    // Scale shape: BOTH rank passes are ops/GlobalRank (range-partition
-    // + prefix counts — never a per-source window, never a global-order
-    // single-reducer window); the value lookup is an equi-join on the
+    // Scale shape: BOTH rank passes are ops/GlobalRank.prefixSum over
+    // (ntok, doc_id) (range-partition + prefix counts — never a per-source
+    // window, never a global-order single-reducer window), and their
+    // totals are n_s and N; the value lookup is an equi-join on the
     // 8-byte target rank; n_s / N ride broadcasts. The corpus text is
     // scanned once into the localCheckpointed narrow token table.
     Q("q175_quantile_normalize",
@@ -1496,25 +1494,20 @@ object QueriesCuration {
         val toks = documents(s, d).select(col("source"), col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("ntok"))
           .localCheckpoint(true)
-        val rk = GlobalRank.perGroupRank(toks, col("source"),
-            Scalars.packId(col("ntok"), col("doc_id")))
-          .select(col("g").as("source"),
-            (col("v").cast("long") % lit(2147483648L)).as("doc_id"),
-            expr("CAST(v AS BIGINT) DIV 2147483648L").as("ntok"),
-            col("rank").as("r"))
-        val ns = toks.groupBy("source").agg(count(lit(1)).as("n_s"))
-        val glob = GlobalRank.perGroupRank(toks, lit("all"),
-            Scalars.packId(col("ntok"), col("doc_id")))
-          .select(expr("CAST(v AS BIGINT) DIV 2147483648L").as("norm_tok"),
-            col("rank").as("grank"))
-        val nTot = toks.agg(count(lit(1)).as("n_tot"))
-        rk.join(broadcast(ns), "source")
-          .crossJoin(broadcast(nTot))
+        val order = Seq(col("ntok"), col("doc_id"))
+        val (rk, ns) =
+          GlobalRank.prefixSum(toks, Seq("source"), order, lit(1L))
+        val (glob, nTot) = GlobalRank.prefixSum(
+          toks.select("ntok", "doc_id"), Nil, order, lit(1L))
+        rk.withColumnRenamed("before", "r")
+          .join(broadcast(ns.withColumnRenamed("total", "n_s")), "source")
+          .crossJoin(broadcast(nTot.withColumnRenamed("total", "n_tot")))
           .withColumn("t", when(col("n_s") > 1,
               expr("CAST((CAST(r AS DECIMAL(38,0)) * (n_tot - 1)) " +
                 "DIV (n_s - 1) AS BIGINT)"))
             .otherwise(expr("(n_tot - 1) DIV 2")))
-          .join(glob, col("t") === col("grank"))
+          .join(glob.select(col("ntok").as("norm_tok"),
+            col("before").as("grank")), col("t") === col("grank"))
           .select(col("doc_id"), col("source"), col("ntok"),
             col("norm_tok"))
           .orderBy("doc_id")
@@ -1551,26 +1544,23 @@ object QueriesCuration {
     // probability ∝ its token count, docs longer than the step get
     // multiple picks (the textbook with-replacement systematic form) —
     // all deterministic, no rand(), integer end to end.
-    // Scale shape: the running token total is ops/GlobalRank.prefixSum
-    // (range-partition + per-partition offsets — q86's machinery, no
-    // global-order window, no single reducer); the 1-row total rides a
-    // broadcast; selection is a map-side integer test over the
-    // localCheckpointed prefix table.
+    // Scale shape: the running token total and the 1-row total are
+    // ops/GlobalRank.prefixSum (range-partition + per-partition offsets —
+    // q86's machinery, no global-order window, no single reducer); the
+    // total rides a broadcast; selection is a map-side integer test.
     Q("q178_pps_sample",
       (s, d) => {
         val toks = documents(s, d).select(col("doc_id"),
           greatest(size(split(col("text"), " ")).cast("long"), lit(1L))
             .as("w"))
-        val pre = GlobalRank.prefixSum(toks, col("doc_id"), col("w"))
-          .localCheckpoint(true)
-        val tot = pre.agg(sum("v").as("total"))
+        val (pre, tot) =
+          GlobalRank.prefixSum(toks, Nil, Seq(col("doc_id")), col("w"))
         pre.crossJoin(broadcast(tot))
           .withColumn("step", expr("greatest(total DIV 100, 1L)"))
           .withColumn("n_picks",
-            expr("(cum_before + v) DIV step - cum_before DIV step"))
+            expr("(before + w) DIV step - before DIV step"))
           .filter(col("n_picks") > 0)
-          .select(col("k").as("doc_id"), col("v").as("ntok"),
-            col("n_picks"))
+          .select(col("doc_id"), col("w").as("ntok"), col("n_picks"))
           .orderBy("doc_id")
       },
       Some("""WITH t AS (
@@ -1703,22 +1693,21 @@ object QueriesCuration {
     // deterministic). Audited per (source, quartile of the key space):
     // counts must be flat at n_s/4 ± 1 — the invariant spec pins the
     // spread; this query dumps the audit table.
-    // Scale shape: within-source ranks via ops/GlobalRank (range-
-    // partition + prefix counts — never a per-source window, one source
-    // can be 10 TB); n_s and N ride broadcasts; the position key and
-    // quartile are map-side integer math; the audit is one partial+
-    // final agg to sources×4 rows. r·4·N ≤ N² < 2⁶³ for N < 3e9 docs
-    // (document the bound; a 100 TB corpus of ≥33 KB docs fits).
+    // Scale shape: within-source ranks via ops/GlobalRank.prefixSum
+    // (range-partition + prefix counts — never a per-source window, one
+    // source can be 10 TB), whose totals are n_s; n_s and N ride
+    // broadcasts; the position key and quartile are map-side integer
+    // math; the audit is one partial+final agg to sources×4 rows.
+    // r·4·N ≤ N² < 2⁶³ for N < 3e9 docs (document the bound; a 100 TB
+    // corpus of ≥33 KB docs fits).
     Q("q193_interleaved_mix",
       (s, d) => {
         val docs = documents(s, d).select(col("source"), col("doc_id"))
-        val ranked = GlobalRank
-          .perGroupRank(docs, col("source"), col("doc_id"))
-          .select(col("g").as("source"), col("v").cast("long").as("doc_id"),
-            col("rank").as("r"))
-        val ns = docs.groupBy("source").agg(count(lit(1)).as("n_s"))
+        val (ranked, ns) = GlobalRank.prefixSum(
+          docs, Seq("source"), Seq(col("doc_id")), lit(1L))
         val n = docs.agg(count(lit(1)).as("n"))
-        ranked.join(broadcast(ns), "source")
+        ranked.withColumnRenamed("before", "r")
+          .join(broadcast(ns.withColumnRenamed("total", "n_s")), "source")
           .crossJoin(broadcast(n))
           .select(col("source"),
             expr("((r * n) DIV n_s) * 4 DIV n").as("quartile"))

@@ -594,13 +594,12 @@ object QueriesOlap {
     // fixed point, no accumulation-order-dependent double anywhere.
     // Scale shape: per-source ranks do NOT come from a per-source
     // window (one source can be 10 TB — a single-reducer partition at
-    // 100 TB); they come from ops/GlobalRank.perGroupRank — the q63
-    // range-partition + prefix-count machinery — over the composite
-    // key sig*2^31 + doc_id (< 2^53, so exact through the rank path's
-    // double; doc_id recovered by modulus). Two ranked passes, one
-    // doc_id equi-join, one partial+final agg to sources-many rows;
-    // sum(d^2) accumulates in DECIMAL(38,0) (n^3-scale — overflows
-    // BIGINT past n~1e6 rows/source).
+    // 100 TB); they come from ops/GlobalRank.prefixSum — the q63
+    // range-partition + prefix-count machinery — over the order
+    // (sig, doc_id). Two ranked passes, one doc_id equi-join, one
+    // partial+final agg to sources-many rows; sum(d^2) accumulates in
+    // DECIMAL(38,0) (n^3-scale — overflows BIGINT past n~1e6
+    // rows/source).
     Q("q160_spearman_agreement",
       (s, d) => {
         // size-adaptive fanOut: ONE regexp_replace pass per row is
@@ -621,11 +620,9 @@ object QueriesOlap {
           // text is scanned and the regexes run exactly once.
           .localCheckpoint(true)
         def ranked(sig: String, rk: String) =
-          graft.ops.GlobalRank.perGroupRank(sigs, col("source"),
-              Scalars.packId(col(sig), col("doc_id")))
-            .select(col("g").as("source"),
-              (col("v").cast("long") % lit(2147483648L)).as("doc_id"),
-              col("rank").as(rk))
+          graft.ops.GlobalRank.prefixSum(sigs.select("source", "doc_id", sig),
+              Seq("source"), Seq(col(sig), col("doc_id")), lit(1L))._1
+            .select(col("source"), col("doc_id"), col("before").as(rk))
         ranked("a_fp", "ra").join(ranked("b_fp", "rb"),
             Seq("source", "doc_id"))
           .groupBy("source")
@@ -778,18 +775,17 @@ object QueriesOlap {
     // ALL-INTEGER, emitted as ppm via DIV; Σrx accumulates in
     // DECIMAL(38,0) (n²·x̄-scale — overflows BIGINT past ~1e6
     // rows/source). Scale shape: q160's — per-source ranks come from
-    // ops/GlobalRank.perGroupRank (range-partition + prefix-count) over
-    // the composite key ntok·2³¹ + doc_id, NEVER a per-source window
-    // (one source can be 10 TB = single-reducer); one ranked pass, one
-    // partial+final agg to sources-many rows.
+    // ops/GlobalRank.prefixSum (range-partition + prefix-count) over
+    // the order (ntok, doc_id), NEVER a per-source window (one source
+    // can be 10 TB = single-reducer); one ranked pass, one partial+final
+    // agg to sources-many rows.
     Q("q169_gini_length",
       (s, d) => {
         val sigs = documents(s, d).select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("long").as("ntok"))
-        graft.ops.GlobalRank.perGroupRank(sigs, col("source"),
-            Scalars.packId(col("ntok"), col("doc_id")))
-          .select(col("g").as("source"), (col("rank") + 1L).as("r"),
-            expr("CAST(v AS BIGINT) DIV 2147483648L").as("ntok"))
+        graft.ops.GlobalRank.prefixSum(sigs, Seq("source"),
+            Seq(col("ntok"), col("doc_id")), lit(1L))._1
+          .select(col("source"), (col("before") + 1L).as("r"), col("ntok"))
           .groupBy("source")
           .agg(count(lit(1)).as("n"), sum(col("ntok")).as("tok_sum"),
             sum((col("r") * col("ntok")).cast("decimal(38,0)")).as("srx"))

@@ -627,51 +627,17 @@ object QueriesRel {
     // a full counting job at DataFrame-build time (the round-2 shape —
     // `rdd.zipWithIndex` ran count + shuffle-write inside `Q.build`, so
     // plan-only paths like the PlanSpec sweep executed real data jobs;
-    // ADVICE r02). Instead: range-partition on the key, sort within
-    // partitions, then branch TWICE from the same sorted RDD object —
-    // one branch emits lazy per-partition counts, the other per-row
-    // (pid, local index). Sharing one RDD instance matters for
-    // correctness, not just cost: the range exchange's bounds are sampled
-    // once and its map stage runs once, so both branches see identical
-    // partitioning by construction (no reliance on ReuseExchange).
-    // Cumulative offsets come from a non-equi self-join of the tiny
-    // (numPartitions-row) counts table — no window, no collect — and are
-    // broadcast back onto the fact rows. Every stage stays parallel at
-    // any table size. Residual build-time cost: `.rdd` still constructs
-    // the RangePartitioner, which runs its bounds-SAMPLING job (a pruned
-    // single-column scan, no shuffle write) — documented eager cost, two
-    // orders cheaper than the zipWithIndex count-the-world job.
+    // ADVICE r02). The 0-based row index is the global running count from
+    // ops/GlobalRank.prefixSum (range partition + per-partition offsets).
     Q("q33_chunkify",
-      (s, d) => {
-        val sortedRdd = orders(s, d).select(col("o_orderkey"))
-          .repartitionByRange(col("o_orderkey"))
-          .sortWithinPartitions("o_orderkey")
-          .rdd // builds the RDD DAG; eager part = bounds sampling only
-        val counts = s.createDataFrame(
-          sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-            Iterator.single((pid, it.size.toLong))
-          }).toDF("pid", "cnt")
-        // offset(pid) = sum of counts of all earlier partitions; O(P^2)
-        // on a P~=shuffle.partitions-row table — trivial at any scale.
-        val offsets = counts.as("a")
-          .join(counts.as("b"), col("b.pid") < col("a.pid"), "left")
-          .groupBy(col("a.pid").as("pid"))
-          .agg(coalesce(sum(col("b.cnt")), lit(0L)).as("offset"))
-        val local = s.createDataFrame(
-          sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-            var i = -1L
-            // getAs[Number] decouples from the parquet physical type
-            // (INT32 vs INT64 o_orderkey both work; ADVICE r02)
-            it.map { r => i += 1; (pid, i, r.getAs[Number](0).longValue) }
-          }).toDF("pid", "local_idx", "o_orderkey")
-        local.join(broadcast(offsets), "pid")
-          .withColumn("chunk",
-            graft.ops.Scalars.longDiv("(offset + local_idx)", 1000L))
-          .groupBy("chunk")
-          .agg(count(lit(1)).as("cnt"),
-            min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
-          .orderBy("chunk")
-      },
+      (s, d) => graft.ops.GlobalRank.prefixSum(
+          orders(s, d).select(col("o_orderkey")),
+          Nil, Seq(col("o_orderkey")), lit(1L))._1
+        .withColumn("chunk", Scalars.chunkId(col("before") + 1, 1000))
+        .groupBy("chunk")
+        .agg(count(lit(1)).as("cnt"),
+          min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
+        .orderBy("chunk"),
       Some("""SELECT chunk, CAST(count(*) AS BIGINT) AS cnt,
              |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
              |FROM (SELECT o_orderkey,

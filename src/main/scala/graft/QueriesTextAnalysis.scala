@@ -482,46 +482,27 @@ object QueriesTextAnalysis {
     // boundary rule 3·n_before < n / < 2n over docs strictly better.
     // Scale shape — NO corpus-sized window anywhere: (1) per-doc scores
     // (q125's three aggs + one equi-join); (2) aggregate to the DISTINCT
-    // (lang, avg_fp) value table; (3) cumulative doc counts over that
-    // table via ops/GlobalRank.prefixSum on the composite key
-    // lidx·2^32 + (2^32−1−avg_fp) — range-partitioned, every stage
-    // parallel (the q86 primitive); (4) per-lang offsets from the
-    // languages-cardinality totals table via a tiny non-equi self-join
-    // (no window, no index collect); (5) rollup to (lang, bucket).
+    // (lang, avg_fp) value table; (3) per-lang cumulative doc counts over
+    // that table via ops/GlobalRank.prefixSum (group = lang, order =
+    // −avg_fp: `before` is n_before, the totals give n) — range-
+    // partitioned, every stage parallel; (4) rollup to (lang, bucket).
     Q("q144_ccnet_buckets",
       (s, d) => {
-        import graft.ops.GlobalRank
         val scored = bigramDocScores(s, d)
           .withColumn("avg_fp", expr("score_fp DIV n_bigrams"))
           .join(documents(s, d).select("doc_id", "lang"), "doc_id")
         // materialized ONCE (localCheckpoint = the production write of the
-        // per-language score-distribution table): the prefix sum (an RDD
-        // subtree that cannot share exchanges), the per-lang totals, and
-        // the final bucket join all read this value table — the corpus is
-        // scored exactly once. Cardinality is value-space-bounded
+        // per-language score-distribution table): the prefix sum's bounds
+        // sampling and its map stage both read this value table — the
+        // corpus is scored exactly once. Cardinality is value-space-bounded
         // (≤ distinct avg_fp values), never corpus-sized.
         val byVal = scored.groupBy("lang", "avg_fp")
           .agg(count(lit(1)).as("n_v"), sum("n_bigrams").as("vol"))
           .localCheckpoint(true)
-        val langs = byVal.select("lang").distinct()
-        val langIdx = langs.as("a")
-          .join(langs.as("b"), col("b.lang") < col("a.lang"), "left")
-          .groupBy(col("a.lang").as("lang"))
-          .agg(count(col("b.lang")).as("lidx"))
-        val keyed = byVal.join(broadcast(langIdx), "lang")
-          .withColumn("key",
-            expr("lidx * 4294967296L + (4294967295L - avg_fp)"))
-        val ps = GlobalRank.prefixSum(keyed, col("key"), col("n_v"))
-          .select(col("k"), col("cum_before"))
-        val totals = keyed.groupBy("lang", "lidx")
-          .agg(sum("n_v").as("n"))
-        val offsets = totals.as("a")
-          .join(totals.as("b"), col("b.lidx") < col("a.lidx"), "left")
-          .groupBy(col("a.lang").as("lang"), col("a.n").as("n"))
-          .agg(coalesce(sum(col("b.n")), lit(0L)).as("off"))
-        keyed.join(ps, col("key") === col("k"))
-          .join(broadcast(offsets), "lang")
-          .withColumn("n_before", col("cum_before") - col("off"))
+        val (rows, totals) = graft.ops.GlobalRank.prefixSum(
+          byVal, Seq("lang"), Seq(-col("avg_fp")), col("n_v"))
+        rows.withColumnRenamed("before", "n_before")
+          .join(broadcast(totals.withColumnRenamed("total", "n")), "lang")
           .withColumn("bucket",
             when(col("n_before") * 3 < col("n"), "head")
               .when(col("n_before") * 3 < col("n") * 2, "middle")

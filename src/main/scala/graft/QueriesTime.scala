@@ -1258,8 +1258,8 @@ object QueriesTime {
     // fano_ppm = (1e6·var_num) DIV (n·S) — no float variance anywhere,
     // so both engines agree bit-for-bit. Exactness window: 1e6·n·Q must
     // stay in long, i.e. n·Q < 9.2e12 — guarded PER GROUP by
-    // assert_true (the packId precedent: overflow would otherwise be a
-    // silently wrong ppm, not an error). The guard itself is in
+    // assert_true (overflow would otherwise be a silently wrong ppm,
+    // not an error). The guard itself is in
     // DIVISION form (sq < bound DIV n_days) because the product form
     // n_days*sq could ITSELF wrap past 2^63 at extreme scale and land
     // back under the bound — a silently-passing guard, the exact

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * logical tree grows exponentially (observed OOM just *stringifying* the
   * plan at ~14 rounds). Checkpoints are eager (lazy checkpoints were
   * measured in r16 and bought nothing: AQE materializes interior stages
-  * at .rdd time regardless). [[labelMinProp]]'s r17 self-loop form
+  * at RDD build regardless). [[labelMinProp]]'s r17 self-loop form
   * references the previous round exactly once, so a round is one join +
   * one agg with no separate own-label pool branch; rounds stay eager
   * localCheckpoints (caching them partition-aware was measured slower —

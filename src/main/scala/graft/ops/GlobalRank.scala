@@ -1,91 +1,153 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
-/** Distributed per-group global ranking — the building block for exact
-  * order statistics (percentiles, medians, top-rank selection) without
-  * buffering a group's values in one reducer.
+/** Distributed running sums over a range order — the one building block
+  * for exact order statistics (percentiles, medians, ranks), stride
+  * chunking and running totals, without a window and without buffering a
+  * group's values in one reducer.
   *
   * Spark's exact `percentile()` is a TypedImperative aggregate: every value
   * of a group is buffered and shipped to that group's single final reducer
   * — with a 3-value group key that is the whole fact table in 3 tasks, tens
   * of GB per reducer at 100 TB (VERDICT r02 flagged q63 as the one
-  * remaining scale-killer). The scale-safe form is the q33 technique, per
-  * group: range-partition by (group, value) so each task owns a contiguous
-  * slice of one-or-more groups' value ranges, sort within partitions, then
-  * derive each row's global rank within its group from lazily-computed
-  * per-(partition, group) counts. No window, no collect, no single-task
-  * stage; the only driver-side work is the range exchange's bounds
-  * sampling.
+  * remaining scale-killer), and a `Window` with no `partitionBy` funnels
+  * the whole table through one task. The scale-safe form: range-partition
+  * by (group, order) so each task owns a contiguous slice of one-or-more
+  * groups' order ranges, sort within partitions, then derive each row's
+  * running value from per-(partition, group) totals. No window, no
+  * collect, no single-task stage.
   *
   * Reference behavior replicated: ClickHouse `quantileExact*` /
   * `medianExact` family (the reference's OLAP store exposes exact
-  * quantiles; see SURVEY.md §2.4 A10).
+  * quantiles; see SURVEY.md §2.4 A10) and the collector's `_chunkify`
+  * stride chunking (F12).
   */
 object GlobalRank {
 
-  /** Ascending 0-based rank of every row's `value` within its `group`.
+  /** Exclusive running sum of `weight` within each `group`, in ascending
+    * `order` — the one range-prefix primitive every rank, running count
+    * and running sum goes through.
     *
-    * Returns `(g string, v double, rank long)`. Group values must be
-    * non-null (cast to string internally); ties get distinct consecutive
-    * ranks in arbitrary order, which is exactly what order statistics
-    * need (equal values make interpolation tie-insensitive).
+    * Returns `(rows, totals)`. `rows` is `df`'s own columns, with their
+    * own types, plus `before` (long): the sum of `weight` over the rows of
+    * the same group strictly earlier in `order`. Rows tied on `order` are
+    * taken in arbitrary order, so `before` is exact for a unique order (a
+    * rank is `weight = lit(1L)` over an order with a unique tiebreak,
+    * e.g. `Seq(sig, doc_id)`). `totals` is one row per group: the group
+    * columns plus `total` (long), the group's sum of `weight`. `group`
+    * names non-null columns of `df`; an empty `group` is one global
+    * order. A descending order passes the negated key. `weight` must be
+    * non-null and fit a long.
     *
-    * Both derived branches (per-partition-per-group counts; per-row local
-    * indices) hang off ONE sorted RDD instance, so the range exchange's
-    * sampled bounds and map stage are shared by construction — correctness
-    * does not depend on ReuseExchange firing. Cumulative offsets come from
-    * a non-equi self-join of the tiny (numPartitions × numGroups)-row
-    * counts table, broadcast back onto the rows.
+    * Shape: ONE sorted RDD, from which both branches hang, so the range
+    * exchange's bounds and map output are shared by construction —
+    * correctness does not depend on ReuseExchange firing, and every row
+    * sees the partitioning its offset was computed on. Branch one sums
+    * each run (a group's rows in one partition) into a cached table of
+    * numPartitions × groups-per-partition rows; a non-equi self-join of
+    * that table gives each run's offset (the sum over the same group's
+    * earlier partitions), and a group-by gives `totals`. Branch two emits
+    * every row with its run key and its running sum within the run; the
+    * offsets ride a broadcast back onto the rows, joined on the run key —
+    * one long, whatever the group's type.
+    *
+    * Build-time cost: `.rdd` runs jobs inside the query build. With AQE
+    * on (the default) it executes the adaptive plan up to its final
+    * stage: the range exchange's bounds-sampling job, its map stage, and
+    * every shuffle stage below it (BuildJobsSpec: 2 jobs for a scan under
+    * the exchange, q33; 3 with an aggregate exchange below it, q202).
+    * With AQE off it runs one job, the bounds sampling, which also
+    * computes any shuffle below the exchange; the range map stage waits
+    * for the query. A lazy form is a change to this one function
+    * (ROADMAP item 6).
     */
-  def perGroupRank(df: DataFrame, group: Column, value: Column): DataFrame =
-    rankedWithCounts(df, group, value)._1
-
-  /** (ranked rows, per-(pid, group) counts) — counts exposed so callers
-    * needing per-group totals can aggregate the tiny counts table instead
-    * of re-traversing the ranked fact rows. */
-  private def rankedWithCounts(
+  def prefixSum(
       df: DataFrame,
-      group: Column,
-      value: Column): (DataFrame, DataFrame) = {
+      group: Seq[String],
+      order: Seq[Column],
+      weight: Column): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
+    val fields = df.schema.fields.toSeq
+    val gIdx = group.map(df.schema.fieldIndex)
+    val wIdx = fields.length
+    val key = group.map(col) ++ order
+    // the weight is projected after the sort, so a literal weight never
+    // rides the shuffle
     val sortedRdd = df
-      .select(group.cast("string").as("g"), value.cast("double").as("v"))
-      .repartitionByRange(col("g"), col("v"))
-      .sortWithinPartitions("g", "v")
-      .rdd // lazy DAG; eager part = range-bounds sampling only
-    val countsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      // groups are contiguous after the sort; keep insertion order so
-      // the few (group, count) pairs per partition stay cheap
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { r => val g = r.getString(0); m(g) = m.getOrElse(g, 0L) + 1 }
-      m.iterator.map { case (g, c) => (pid, g, c) }
-    }.cache() // numPartitions×numGroups rows. Several downstream subtrees
-    // (offsets; per-group totals) each execute this branch; without the
-    // cache each one re-runs a full sorted reduce pass over the data.
-    // Lifecycle: ContextCleaner auto-unpersists once the query's RDDs are
-    // unreferenced, so builder-scoped caching doesn't accumulate.
-    val counts = spark.createDataFrame(countsRdd).toDF("pid", "g", "cnt")
-    val offsets = counts.as("a")
-      .join(counts.as("b"),
-        col("a.g") === col("b.g") && col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"), col("a.g").as("g"))
-      .agg(coalesce(sum(col("b.cnt")), lit(0L)).as("offset"))
-    val local = spark.createDataFrame(
-      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-        var curG: String = null
-        var i = -1L
-        it.map { r =>
-          val g = r.getString(0)
-          if (g != curG) { curG = g; i = 0L } else i += 1
-          (pid, g, i, r.getDouble(1))
+      .repartitionByRange(key: _*)
+      .sortWithinPartitions(key: _*)
+      .select(col("*"), weight.cast("long").as("__w"))
+      .rdd
+    // a run (one group's rows in one partition) is keyed pid·2^32 + its
+    // index in the partition: one long, so the join back onto the rows
+    // probes a long-keyed hash relation
+    val runKey = StructField("__run", LongType, nullable = false)
+    val sumsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
+      val out = Seq.newBuilder[Row]
+      var run = pid.toLong << 32
+      var head: Row = null
+      var s = 0L
+      def emit(): Unit = if (head != null) {
+        out += Row.fromSeq(Seq[Any](pid, run) ++ gIdx.map(head.get) :+ s)
+        run += 1
+      }
+      it.foreach { r =>
+        if (head == null || !sameGroup(gIdx, head, r)) {
+          emit(); head = r; s = 0L
         }
-      }).toDF("pid", "g", "local_idx", "v")
-    val ranked = local.join(broadcast(offsets), Seq("pid", "g"))
-      .select(col("g"), col("v"), (col("offset") + col("local_idx")).as("rank"))
-    (ranked, counts)
+        s += r.getLong(wIdx)
+      }
+      emit()
+      out.result().iterator
+    }.cache() // numPartitions × groups-per-partition rows. The offsets and
+    // the totals each execute this branch; without the cache each one
+    // re-runs a full sorted reduce pass over the data. Lifecycle:
+    // ContextCleaner unpersists it once the query's RDDs are unreferenced,
+    // so builder-scoped caching doesn't accumulate.
+    val sums = spark.createDataFrame(sumsRdd, StructType(
+      StructField("__pid", IntegerType, nullable = false) +: runKey +:
+        gIdx.map(fields(_)) :+
+        StructField("__sum", LongType, nullable = false)))
+    val offsets = sums.as("a")
+      .join(sums.as("b"), group.foldLeft(col("b.__pid") < col("a.__pid")) {
+        (c, g) => c && col(s"a.$g") === col(s"b.$g") }, "left")
+      // grouped by the group columns too: the join's partitioning on them
+      // then satisfies the aggregate, with no second exchange
+      .groupBy(("__run" +: group).map(c => col(s"a.$c")): _*)
+      .agg(coalesce(sum(col("b.__sum")), lit(0L)).as("__off"))
+      .select("__run", "__off")
+    val local = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
+      var run = (pid.toLong << 32) - 1
+      var head: Row = null
+      var s = 0L
+      it.map { r =>
+        if (head == null || !sameGroup(gIdx, head, r)) {
+          run += 1; head = r; s = 0L
+        }
+        val out = new Array[Any](wIdx + 2)
+        out(0) = run; out(wIdx + 1) = s
+        var i = 0
+        while (i < wIdx) { out(i + 1) = r.get(i); i += 1 }
+        s += r.getLong(wIdx)
+        new GenericRow(out): Row
+      }
+    }
+    val rows = spark.createDataFrame(local, StructType(runKey +: fields :+
+        StructField("__local", LongType, nullable = false)))
+      .join(broadcast(offsets), Seq("__run"))
+      .select(fields.map(f => col(s"`${f.name}`")) :+
+        (col("__off") + col("__local")).as("before"): _*)
+    val totals = sums.groupBy(group.map(col): _*)
+      .agg(sum("__sum").as("total"))
+    (rows, totals)
   }
+
+  private def sameGroup(gIdx: Seq[Int], a: Row, b: Row): Boolean =
+    gIdx.forall(i => a.get(i) == b.get(i))
 
   /** Exact linear-interpolated percentiles per group, distributed.
     *
@@ -110,8 +172,9 @@ object GlobalRank {
     * of Percentile's occasionally-1-ulp-low weighted result (matching
     * DuckDB, which also returns the exact value there).
     *
-    * Cost at scale: one full shuffle of (group, value) pairs — narrow, two
-    * columns — plus two reduce passes over it and tiny broadcast joins.
+    * Cost at scale: one [[prefixSum]] — one full shuffle of narrow
+    * (group, value, weight 1) rows, two reduce passes over it and tiny
+    * broadcast joins.
     * Compare: the TypedImperative form shuffles the same pairs but then
     * concentrates each group on ONE reducer; here every stage is parallel.
     */
@@ -120,12 +183,12 @@ object GlobalRank {
       group: Column,
       value: Column,
       percentages: Seq[Double]): DataFrame = {
-    val (ranked, counts) = rankedWithCounts(df, group, value)
-    // totals per group → target ranks lo=floor(q·(n−1)), hi=ceil(q·(n−1));
-    // aggregated from the tiny counts table, not the ranked fact rows
-    val totals = counts.groupBy("g").agg(sum("cnt").as("n"))
+    val (ranked, totals) = prefixSum(
+      df.select(group.cast("string").as("g"), value.cast("double").as("v")),
+      Seq("g"), Seq(col("v")), lit(1L))
+    // totals per group → target ranks lo=floor(q·(n−1)), hi=ceil(q·(n−1))
     val targets = totals
-      .select(col("g"), col("n"),
+      .select(col("g"), col("total").as("n"),
         explode(array(percentages.map(lit(_)): _*)).as("q"))
       .withColumn("pos", col("q") * (col("n") - lit(1L)))
       .withColumn("lo", floor(col("pos")).cast("long"))
@@ -133,7 +196,8 @@ object GlobalRank {
     val needed = targets
       .select(col("g"), col("q"), col("pos"), col("lo"), col("hi"),
         explode(array(col("lo"), col("hi"))).as("rank"))
-    ranked.join(broadcast(needed), Seq("g", "rank"))
+    ranked.withColumnRenamed("before", "rank")
+      .join(broadcast(needed), Seq("g", "rank"))
       .groupBy("g", "q")
       .agg(first("pos").as("pos"), first("lo").as("lo"), first("hi").as("hi"),
         max(when(col("rank") === col("lo"), col("v"))).as("vlo"),
@@ -167,11 +231,9 @@ object GlobalRank {
     * `min(v)` is well-defined under both row- and range-framed cumsums.
     * Weight-k rows behave exactly like k repeated rows (spec-pinned).
     *
-    * Scale shape — the [[perGroupRank]] machinery with weights: ONE range
-    * exchange of narrow (g, v, w) triples, per-(partition, group) weight
-    * sums cumulated through the tiny non-equi self-join, within-partition
-    * running sums, then a broadcast (group × level) target join + filter +
-    * min agg. No window over the fact rows, no single-reducer group
+    * Scale shape — [[prefixSum]] with weights (`cum_w = before + w`):
+    * ONE range exchange of the narrow (g, v, w) table, then a broadcast
+    * (group × level) target join + filter + min agg. No window over the fact rows, no single-reducer group
     * buffering, every stage parallel. Comparisons run in DECIMAL:
     * cumW·1e6 and q_ppm·W both reach ~1e19 at 100 TB token weights, past
     * long range (DuckDB's HUGEINT sums are safe by default; the Spark
@@ -186,7 +248,6 @@ object GlobalRank {
       value: Column,
       weight: Column,
       qPpms: Seq[Int]): DataFrame = {
-    val spark = df.sparkSession
     // r16 (guide §2.3): weight-k rows behave exactly like k repeated rows
     // (spec-pinned), so equal (g, v) rows collapse to one row summing the
     // weights before the range exchange — a map-side-combinable agg; the
@@ -194,89 +255,18 @@ object GlobalRank {
     // table (callers pass bounded value domains — q202's doc lengths —
     // where the contraction is large; for near-unique values use
     // exactPercentiles' per-row machinery instead).
-    val sortedRdd = df
-      .select(group.cast("string").as("g"), value.cast("double").as("v"),
-        weight.cast("long").as("w"))
-      .groupBy("g", "v").agg(sum("w").as("w"))
-      .repartitionByRange(col("g"), col("v"))
-      .sortWithinPartitions("g", "v")
-      .rdd // lazy DAG; eager part = range-bounds sampling only
-    val wsumsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { r =>
-        val g = r.getString(0); m(g) = m.getOrElse(g, 0L) + r.getLong(2)
-      }
-      m.iterator.map { case (g, s) => (pid, g, s) }
-    }.cache() // numPartitions×numGroups rows; lifecycle as rankedWithCounts
-    val wsums = spark.createDataFrame(wsumsRdd).toDF("pid", "g", "wsum")
-    val offsets = wsums.as("a")
-      .join(wsums.as("b"),
-        col("a.g") === col("b.g") && col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"), col("a.g").as("g"))
-      .agg(coalesce(sum(col("b.wsum")), lit(0L)).as("offset"))
-    val local = spark.createDataFrame(
-      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-        var curG: String = null
-        var run = 0L
-        it.map { r =>
-          val g = r.getString(0)
-          if (g != curG) { curG = g; run = 0L }
-          run += r.getLong(2)
-          (pid, g, r.getDouble(1), run) // inclusive cum within (pid, g)
-        }
-      }).toDF("pid", "g", "v", "local_cum")
-    val rows = local.join(broadcast(offsets), Seq("pid", "g"))
-      .select(col("g"), col("v"),
-        (col("offset") + col("local_cum")).as("cum_w"))
-    val totals = wsums.groupBy("g").agg(sum("wsum").as("wt"))
-    val targets = totals.select(col("g"), col("wt"),
+    val (rows, totals) = prefixSum(
+      df.select(group.cast("string").as("g"), value.cast("double").as("v"),
+          weight.cast("long").as("w"))
+        .groupBy("g", "v").agg(sum("w").as("w")),
+      Seq("g"), Seq(col("v")), col("w"))
+    val targets = totals.select(col("g"), col("total").as("wt"),
       explode(array(qPpms.map(lit(_)): _*)).as("q_ppm"))
     rows.join(broadcast(targets), Seq("g"))
-      .filter(col("cum_w").cast("decimal(20,0)") * lit(1000000L) >=
+      .filter((col("before") + col("w")).cast("decimal(20,0)") *
+        lit(1000000L) >=
         col("q_ppm").cast("decimal(7,0)") * col("wt").cast("decimal(20,0)"))
       .groupBy("g", "q_ppm")
       .agg(min("v").as("wq"))
-  }
-
-  /** Distributed exclusive prefix sum over a total order — the q33/q63
-    * machinery with SUMS instead of COUNTS: range-partition by `order`,
-    * lazily derive per-partition value sums, cumulate them through the
-    * tiny non-equi self-join, and add each row's within-partition running
-    * sum. Returns `(k long, v long, cum_before long)` where `cum_before`
-    * is the sum of `v` over all rows strictly before `k` in ascending
-    * order. No window, no collect, every stage parallel — this is the
-    * primitive behind token-budget context packing (q86), byte-budget
-    * shard cutting, and any "running total over a 100 TB order".
-    * `order` values must be unique (they define the total order).
-    */
-  def prefixSum(df: DataFrame, order: Column, value: Column): DataFrame = {
-    val spark = df.sparkSession
-    val sortedRdd = df
-      .select(order.cast("long").as("k"), value.cast("long").as("v"))
-      .repartitionByRange(col("k"))
-      .sortWithinPartitions("k")
-      .rdd // lazy DAG; eager part = range-bounds sampling only
-    val sumsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L
-      it.foreach(r => s += r.getLong(1))
-      Iterator.single((pid, s))
-    }.cache() // numPartitions rows; see rankedWithCounts for lifecycle
-    val sums = spark.createDataFrame(sumsRdd).toDF("pid", "psum")
-    val offsets = sums.as("a")
-      .join(sums.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.psum")), lit(0L)).as("offset"))
-    val local = spark.createDataFrame(
-      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-        var run = 0L
-        it.map { r =>
-          val before = run
-          run += r.getLong(1)
-          (pid, r.getLong(0), r.getLong(1), before)
-        }
-      }).toDF("pid", "k", "v", "local_before")
-    local.join(broadcast(offsets), Seq("pid"))
-      .select(col("k"), col("v"),
-        (col("offset") + col("local_before")).as("cum_before"))
   }
 }

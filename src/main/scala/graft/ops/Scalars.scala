@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{EvalMode, Expression, MakeDecimal, NumericEvalContext, UnscaledValue}
+import org.apache.spark.sql.catalyst.expressions.{EvalMode, Expression, IntegralDivide, Literal, MakeDecimal, NumericEvalContext, UnscaledValue}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -93,9 +93,12 @@ object Scalars {
   def parsePyListFast(s: Column): Column =
     split(regexp_replace(s, "^\\['|'\\]$", ""), "', '")
 
-  /** Stride chunk id for a 1-based row_number: floor((rn-1)/size). */
+  /** Stride chunk id for a 1-based row number: `(rn - 1) DIV size`, exact
+    * long division (a double quotient rounds past 2^53 rows).
+    */
   def chunkId(rowNumber1Based: Column, size: Int): Column =
-    floor((rowNumber1Based - 1) / size).cast("long")
+    native(IntegralDivide(_, Literal(size.toLong)))(
+      (rowNumber1Based - 1).cast("long"))
 
   /** Cross-engine deterministic 60-bit token hash: first 15 hex digits of
     * md5, as a non-negative long. DuckDB equivalent:
@@ -170,33 +173,6 @@ object Scalars {
   /** DuckDB rendition of cents for oracle SQL. */
   def centsSql(x: String): String =
     s"CAST(floor(($x) * 100 + 0.5) AS BIGINT)"
-
-  /** Composite (sig, doc_id) sort key for GlobalRank's double-typed rank
-    * path: sig·2³¹ + doc_id, with doc_id recovered downstream by % 2³¹.
-    * Exactness window: the rank machinery casts the key to double, so the
-    * pack is exact only while sig·2³¹ + doc_id < 2⁵³, i.e. sig ∈ [0, 2²²)
-    * (2²² = 4 194 304 — ppm signals and token counts qualify) AND
-    * doc_id ∈ [0, 2³¹). BOTH bounds are enforced PER ROW via assert_true
-    * because violation is otherwise silent: both the rank order and the
-    * recovered doc_id corrupt, with no error (an oversized sig — e.g. a
-    * >4.1M-token doc — would corrupt just as silently as an oversized
-    * doc_id). Testdata stays inside the doc_id bound only by construction
-    * (tools/scale_testdata.py shifts ids by copy·STRIDE=1e8; FACTOR ≥ 23
-    * breaches 2³¹ — see the STRIDE note there), and a real corpus has no
-    * cap at all — this guard turns that assumption into an error instead
-    * of wrong answers.
-    */
-  def packId(sig: Column, docId: Column): Column = {
-    val guard = coalesce(
-      assert_true(
-        docId >= 0 && docId < lit(2147483648L) &&
-          sig >= 0 && sig < lit(4194304L),
-        lit("Scalars.packId: doc_id outside [0, 2^31) or sig outside " +
-          "[0, 2^22) silently corrupts the packed rank key — re-key or " +
-          "widen the radix")).cast("long"),
-      lit(0L))
-    sig * lit(2147483648L) + docId + guard
-  }
 
   /** Order-independent money sum. A double sum over millions of rows is
     * accumulation-order-dependent: at sf1 (6M lineitem rows) Spark's

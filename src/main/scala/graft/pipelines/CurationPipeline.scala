@@ -118,11 +118,11 @@ object CurationPipeline {
     * bins via the distributed prefix sum (never a global window).
     */
   def packBins(toks: DataFrame): DataFrame =
-    GlobalRank.prefixSum(toks, col("doc_id"), col("tokens"))
-      .withColumn("bin", expr("cum_before DIV 2000L"))
+    GlobalRank.prefixSum(toks, Nil, Seq(col("doc_id")), col("tokens"))._1
+      .withColumn("bin", Scalars.longDiv("before", 2000L))
       .groupBy("bin")
-      .agg(count(lit(1)).as("n_docs"), sum("v").as("sum_tokens"),
-        min("k").as("first_doc"), max("k").as("last_doc"))
+      .agg(count(lit(1)).as("n_docs"), sum("tokens").as("sum_tokens"),
+        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
       .orderBy("bin")
 
   private val stageNames = Seq(

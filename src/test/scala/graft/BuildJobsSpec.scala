@@ -19,8 +19,9 @@ class BuildJobsSpec extends SparkSpec {
     "run a driver action per round"
   private val SqlText = "SQL text over Tables.sqlFrom: Spark infers each " +
     "parquet.`path` relation's schema at analysis, one job per read"
-  private val RddSort = "GlobalRank (or q33's chunk index) turns a sorted " +
-    "DataFrame into an RDD: the RangePartitioner samples its bounds eagerly"
+  private val RddSort = "GlobalRank.prefixSum turns a range-sorted " +
+    "DataFrame into an RDD: under AQE that runs the range exchange's " +
+    "bounds sampling, its map stage and every stage upstream of it"
   private val Action = "a driver-side action of the algorithm: the typed " +
     "sketch head() (q106, q214, q217), the PQ codebook and ANN probe " +
     "collect() (q110)"
@@ -40,7 +41,7 @@ class BuildJobsSpec extends SparkSpec {
       "q137_mix_allocation" -> 2,
       "q140_dsir_score" -> 3,
       "q142_quality_yield" -> 3,
-      "q144_ccnet_buckets" -> 15,
+      "q144_ccnet_buckets" -> 12,
       "q145_dedup_threshold_sweep" -> 17,
       "q146_source_overlap" -> 4,
       "q147_containment_verify" -> 13,
@@ -59,7 +60,6 @@ class BuildJobsSpec extends SparkSpec {
       "q174_setsim_prefix" -> 3,
       "q175_quantile_normalize" -> 5,
       "q176_label_propagation" -> 14,
-      "q178_pps_sample" -> 6,
       "q180_cohort_retention" -> 2,
       "q195_boilerplate_strip" -> 2,
       "q196_kcore_peel" -> 25,
@@ -87,6 +87,7 @@ class BuildJobsSpec extends SparkSpec {
       "q86_token_packing" -> 2,
       "q121_epoch_shuffle" -> 4,
       "q169_gini_length" -> 2,
+      "q178_pps_sample" -> 2,
       "q184_conversion_latency" -> 5,
       "q193_interleaved_mix" -> 2,
       "q202_weighted_percentiles" -> 3),

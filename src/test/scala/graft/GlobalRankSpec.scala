@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.ops.GlobalRank
 
@@ -24,7 +28,9 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("perGroupRank equals window row_number - 1 on every group") {
-    val ranked = GlobalRank.perGroupRank(sample, col("g"), col("v"))
+    val ranked = GlobalRank.prefixSum(sample, Seq("g"), Seq(col("v")),
+        lit(1L))._1
+      .select(col("g"), col("v"), col("before").as("rank"))
     val expected = sample
       .withColumn("rank",
         row_number().over(Window.partitionBy("g").orderBy("v")) - 1)
@@ -40,7 +46,7 @@ class GlobalRankSpec extends SparkSpec {
     import spark.implicits._
     val rows = (1 to 257).map(i => (i.toLong * 3 + 1, (i * 17 % 23).toLong))
     val df = rows.toDF("k", "v").repartition(11)
-    val got = GlobalRank.prefixSum(df, col("k"), col("v"))
+    val got = GlobalRank.prefixSum(df, Nil, Seq(col("k")), col("v"))._1
       .orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     var run = 0L
@@ -48,6 +54,81 @@ class GlobalRankSpec extends SparkSpec {
       val r = (k, v, run); run += v; r
     }
     assert(got.toSeq == exp)
+  }
+
+  /** `prefixSum(df, group, order, w)` against its window definition:
+    * `before` = sum(w) over the group's rows up to this one, minus w;
+    * `totals` = the group-by sum. Compared as multisets, so rows of one
+    * group tied on `order` must be equal rows (their tie order is
+    * arbitrary).
+    */
+  private def assertWindowEqual(df: DataFrame, group: Seq[String],
+      order: Seq[String]): Unit = {
+    val (rows, totals) =
+      GlobalRank.prefixSum(df, group, order.map(col), col("w"))
+    val frame = Window.partitionBy(group.map(col): _*)
+      .orderBy(order.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val expected = df.withColumn("before", sum("w").over(frame) - col("w"))
+    assert(rows.schema.fields.toSeq ==
+      df.schema.fields.toSeq :+ StructField("before", LongType, false),
+      rows.schema.treeString)
+    assert(rows.exceptAll(expected).isEmpty && expected.exceptAll(rows).isEmpty,
+      s"got ${rows.collect().toSeq}\nwant ${expected.collect().toSeq}")
+    val sums = df.groupBy(group.map(col): _*).agg(sum("w").as("total"))
+    assert(totals.exceptAll(sums).isEmpty && sums.exceptAll(totals).isEmpty,
+      s"totals ${totals.collect().toSeq}\nwant ${sums.collect().toSeq}")
+  }
+
+  test("prefixSum equals the window sum minus the weight on degenerate " +
+      "inputs: empty, one row, all tied, zero weights, one group over 11 " +
+      "partitions, and the global form") {
+    import spark.implicits._
+    def frame(rows: Seq[(String, Long, Long)]) =
+      rows.toDF("g", "k", "w").repartition(3)
+    val grouped = Seq("g")
+    assertWindowEqual(frame(Nil), grouped, Seq("k"))
+    assertWindowEqual(frame(Nil), Nil, Seq("k"))
+    assertWindowEqual(frame(Seq(("a", 5L, 7L))), grouped, Seq("k"))
+    assertWindowEqual(frame(Seq(("a", 5L, 7L))), Nil, Seq("k"))
+    val tied = (1 to 40).map(i => (if (i % 3 == 0) "a" else "b", 9L, 2L))
+    assertWindowEqual(frame(tied), grouped, Seq("k"))
+    assertWindowEqual(frame(tied.map(t => ("a", t._2, t._3))), Nil, Seq("k"))
+    val zeros = (1 to 30).map(i =>
+      (s"g${i % 2}", i.toLong, if (i % 4 == 0) 3L else 0L))
+    assertWindowEqual(frame(zeros), grouped, Seq("k"))
+    assertWindowEqual(frame(zeros.map(t => (t._1, t._2, 0L))), grouped,
+      Seq("k"))
+    val mixed = (1 to 300).map(i =>
+      (s"g${i % 4}", (i * 7919 % 1009).toLong, (i % 13).toLong))
+    assertWindowEqual(frame(mixed), Nil, Seq("k"))
+    assertWindowEqual(frame(mixed), grouped, Seq("k"))
+    withConf("spark.sql.shuffle.partitions" -> "11",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val one = frame((1 to 500).map(i =>
+        ("only", (i * 37 % 500).toLong, (i % 7 + 1).toLong)))
+      val rows = GlobalRank.prefixSum(one, grouped, Seq(col("k")),
+        col("w"))._1
+      val filled = rows.rdd.mapPartitions(it => Iterator(it.size))
+        .collect().count(_ > 0)
+      assert(filled == 11, s"the group filled $filled partitions, not 11")
+      assertWindowEqual(one, grouped, Seq("k"))
+    }
+  }
+
+  test("ranks over (sig, doc_id) with sig >= 2^22 and doc_id >= 2^31 " +
+      "equal row_number() - 1") {
+    import spark.implicits._
+    val rows = (1 to 200).map(i => (s"s${i % 3}",
+      (1L << 22) + i * 31 % 17, (1L << 31) + i * 104729L))
+    val df = rows.toDF("source", "sig", "doc_id").repartition(5)
+    val got = GlobalRank.prefixSum(df, Seq("source"),
+        Seq(col("sig"), col("doc_id")), lit(1L))._1
+      .withColumnRenamed("before", "rank")
+    val expected = df.withColumn("rank", (row_number().over(
+      Window.partitionBy("source").orderBy("sig", "doc_id")) - 1)
+      .cast("long"))
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 
   test("exactPercentiles matches Spark's percentile() bit-for-bit") {
@@ -122,5 +203,21 @@ class GlobalRankSpec extends SparkSpec {
       col("g"), col("v"), col("w"), Seq(500000))
       .collect().map(r => r.getDouble(2))
     assert(got.toSeq == Seq(1.0), got.toSeq)
+  }
+
+  test(".rdd and mapPartitionsWithIndex appear under src/main only in " +
+      "ops/GlobalRank.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val words = Seq("\\.rdd\\b".r, "mapPartitionsWithIndex".r)
+    val hits = graft.ops.Nio.walk(root)
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GlobalRank.scala")
+      .flatMap { p =>
+        val src = Files.readString(p)
+        words.filter(_.findFirstIn(src).isDefined)
+          .map(w => s"${root.relativize(p)}: $w")
+      }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

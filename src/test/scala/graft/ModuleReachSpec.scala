@@ -61,9 +61,7 @@ class ModuleReachSpec extends AnyFunSuite {
     "RankingsPipelines.topicsSchema" ->
       "reference step: the topics_to_schedule table, SURVEY §3.2",
     "RankingsPipelines.serpIndexSchema" ->
-      "reference step: the serp_index table, SURVEY §3.2",
-    "Scalars.chunkId" ->
-      "reference step: the collector's _chunkify, SURVEY §3.2")
+      "reference step: the serp_index table, SURVEY §3.2")
 
   private val ObjectHead =
     """^(?:(?:final|private(?:\[\w+\])?)\s+)*object\s+(\w+)""".r.unanchored

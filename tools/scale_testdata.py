@@ -36,13 +36,9 @@ DST = sys.argv[2] if len(sys.argv) > 2 else "/tmp/testdata-sf1"
 FACTOR = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
 # Key stride: far above any sf0.1 key (max observed ~6e5), small enough
-# that (FACTOR-1)*STRIDE never overflows int64 or even int32 domains that
-# downstream arithmetic might cast through.
-# BOUND: Scalars.packId (the q160/q169 composite rank key) requires
-# doc_id < 2^31 ≈ 2.147e9 — FACTOR >= 23 breaches it ((23-1)*STRIDE =
-# 2.2e9 plus the base id; FACTOR = 22 tops out at ~2.1006e9, still
-# inside). packId raise_error's per row rather than corrupt silently,
-# but keep FACTOR <= 22 here.
+# that (FACTOR-1)*STRIDE never overflows int64. No query packs doc_id into
+# a narrower key (ranks order by (sig, doc_id) as columns), so FACTOR has
+# no doc_id bound.
 STRIDE = 100_000_000
 
 # Per-table int64 key columns to shift per copy. Tables absent from this
