@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,6 +46,31 @@ object QueriesCuration {
   private[graft] def bucketSql(tag: String) =
     s"(('0x' || substr(md5('$tag' || CAST(doc_id AS VARCHAR)), 1, 15))" +
       s"::BIGINT % 100)"
+
+  /** Largest-remainder (Hamilton) allocation of an integer `budget` over
+    * the rows of `t` in proportion to their integer `weight` column (q137,
+    * q154): each row gets `budget·w DIV W`, and the leftover units go one
+    * each to the largest remainders `budget·w % W`, ties to the smaller
+    * `key`. Adds `alloc`, with Σ alloc = budget EXACTLY — exact BIGINT
+    * arithmetic end to end. `budget` is a literal or an aggregate over
+    * `t`. `t` is small by nature (a mixing table, one row per source): its
+    * totals are broadcast back and the remainder ranking is a window over
+    * it.
+    */
+  private def largestRemainder(t: DataFrame, key: String, weight: String,
+      budget: Column): DataFrame = {
+    val tot = t.agg(sum(weight).as("w_tot"), budget.as("b"))
+    val base = t.crossJoin(broadcast(tot))
+      .withColumn("alloc_base", expr(s"(b * $weight) DIV w_tot"))
+      .withColumn("rem", expr(s"(b * $weight) % w_tot"))
+    val lo = base.agg((max("b") - sum("alloc_base")).as("leftover"))
+    val wr = Window.orderBy(col("rem").desc, col(key).asc)
+    base.crossJoin(broadcast(lo))
+      .withColumn("rk", row_number().over(wr))
+      .withColumn("alloc", col("alloc_base") +
+        when(col("rk") <= col("leftover"), 1L).otherwise(0L))
+      .drop("w_tot", "b", "alloc_base", "rem", "leftover", "rk")
+  }
 
   /** q203's corpus stage: per-doc rendezvous argmax under 8 and 9 shards,
     * contracted to (s8, s9) pair counts. Weights/argmax compute per-row in
@@ -420,17 +446,7 @@ object QueriesCuration {
           .withColumn("w_fp",
             floor(lit(1e6) * sqrt(col("n_docs").cast("double"))))
           .localCheckpoint(true)
-        val tot = counts.agg(sum("w_fp").as("w_tot"))
-        val base = counts.crossJoin(broadcast(tot))
-          .withColumn("alloc_base", expr("(100000L * w_fp) DIV w_tot"))
-          .withColumn("rem", expr("(100000L * w_fp) % w_tot"))
-        val lo = base.agg((lit(100000L) - sum("alloc_base")).as("leftover"))
-        val wr = Window.orderBy(col("rem").desc, col("source").asc)
-        base.crossJoin(broadcast(lo))
-          .withColumn("rk", row_number().over(wr))
-          .withColumn("alloc",
-            col("alloc_base") +
-              when(col("rk") <= col("leftover"), 1L).otherwise(0L))
+        largestRemainder(counts, "source", "w_fp", lit(100000L))
           .select("source", "n_docs", "w_fp", "alloc")
           .orderBy("source")
       },
@@ -472,57 +488,28 @@ object QueriesCuration {
     // that the mix needs multiple epochs of that source.
     // Scale shape — the per-source ordered prefix sum is the trap: a
     // window PARTITIONed BY source alone puts an entire source (possibly
-    // half of 100 TB) in ONE task. Materialized instead as a two-phase
-    // prefix sum over the order key's top bits: the 60-bit hash DIV 2^52
-    // gives 256 ORDER-PRESERVING buckets per source; phase 1 is a
-    // partial+final agg to (source, bucket) partials, phase 2 computes
-    // bucket offsets with a window over that sources×256-row table
-    // (tiny), phase 3 broadcasts offsets + budgets back and finishes the
-    // cumsum with windows partitioned by (source, bucket) — every task
-    // bounded by 1/256 of a source, narrower buckets if needed. The
-    // narrow (source, h, ntok, bkt) projection is materialized once
-    // (localCheckpoint = the production write), so text is split exactly
-    // once; budgets derive from the phase-1 partials, not a second scan.
+    // half of 100 TB) in ONE task. It is GlobalRank.prefixSum instead:
+    // range-partitioned on (source, h, doc_id), so a source spreads over
+    // as many tasks as its rows need, and `before` is each doc's running
+    // token sum within its source. Its totals are the per-source n_tok
+    // the budgets derive from, so the corpus is scanned and its text
+    // split exactly once.
     Q("q154_budget_materialize",
       (s, d) => {
         val t = fanOut(documents(s, d))
           .select(col("source"), col("doc_id"),
             bucketFull("pack:").as("h"),
             size(split(col("text"), " ")).cast("long").as("ntok"))
-          .withColumn("bkt", expr("h DIV 4503599627370496L"))
-          .localCheckpoint(true)
-        val partials = t.groupBy("source", "bkt")
-          .agg(sum("ntok").as("psum")).localCheckpoint(true)
-        val wOff = Window.partitionBy("source").orderBy("bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = partials
-          .withColumn("off", coalesce(sum("psum").over(wOff), lit(0L)))
-          .select("source", "bkt", "off")
-        val st = partials.groupBy("source").agg(sum("psum").as("n_tok"))
+        val (rows, totals) = GlobalRank.prefixSum(t, Seq("source"),
+          Seq(col("h"), col("doc_id")), col("ntok"))
+        val st = totals.select(col("source"), col("total").as("n_tok"))
           .withColumn("w_fp",
             floor(lit(1e6) * sqrt(col("n_tok").cast("double"))))
-          .localCheckpoint(true)
-        val tot = st.agg(sum("w_fp").as("w_tot"),
-          expr("sum(n_tok) DIV 2").as("b"))
-        val base = st.crossJoin(broadcast(tot))
-          .withColumn("alloc_base", expr("(b * w_fp) DIV w_tot"))
-          .withColumn("rem", expr("(b * w_fp) % w_tot"))
-        val lo = base.agg((max("b") - sum("alloc_base")).as("leftover"))
-        val wr = Window.orderBy(col("rem").desc, col("source").asc)
-        val budgets = base.crossJoin(broadcast(lo))
-          .withColumn("rk", row_number().over(wr))
-          .withColumn("budget_tok",
-            col("alloc_base") +
-              when(col("rk") <= col("leftover"), 1L).otherwise(0L))
-          .select("source", "budget_tok")
-        val wCum = Window.partitionBy("source", "bkt")
-          .orderBy(col("h").asc, col("doc_id").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        t.join(broadcast(offsets), Seq("source", "bkt"))
-          .withColumn("cum_before",
-            col("off") + sum("ntok").over(wCum) - col("ntok"))
-          .join(broadcast(budgets), Seq("source"))
-          .withColumn("kept", col("cum_before") < col("budget_tok"))
+        val budgets = largestRemainder(st, "source", "w_fp",
+            expr("sum(n_tok) DIV 2"))
+          .select(col("source"), col("alloc").as("budget_tok"))
+        rows.join(broadcast(budgets), Seq("source"))
+          .withColumn("kept", col("before") < col("budget_tok"))
           .groupBy("source")
           .agg(max("budget_tok").as("budget_tok"),
             sum(when(col("kept"), 1L).otherwise(0L)).as("kept_docs"),

@@ -227,7 +227,7 @@ object QueriesText {
 
   /** LSH band keys per doc, `(doc_id, band_key)` — the PERSISTABLE form of
     * the signature index: band keys are what candidate joins probe, so the
-    * incremental pipeline ([[graft.pipelines.DedupPipeline.addBatch]])
+    * incremental pipeline ([[graft.pipelines.DedupPipeline.addBatchBands]])
     * stores exactly this table and joins each new batch against it instead
     * of re-shingling the corpus.
     */

@@ -358,7 +358,7 @@ object QueriesTextAnalysis {
       (s, d) => {
         // (source, tok) counts materialized ONCE (localCheckpoint stands in
         // for the production parquet write of the aggregate, as in
-        // DedupPipeline.run): both the vocab fit and the coverage probe
+        // q137's mixing table): both the vocab fit and the coverage probe
         // read the vocab×sources-sized table — the corpus token stream is
         // exploded and aggregated exactly once (plan-gated: the declared
         // plan contains no second corpus explode).

@@ -222,11 +222,10 @@ object QueriesTextDedup {
     // (A~B, B~C with A,C never band-colliding), so cluster-level dedup
     // labels every paired doc with its connected component
     // (ops/ConnectedComponents.labelMinProp: min-label propagation,
-    // O(diameter) shuffle rounds, no collect — measured ~2x cheaper than
-    // the star-contraction default on dense near-dup graphs, whose
-    // diameter is tiny at any corpus size; it fail-fasts rather than
-    // under-merging if that assumption ever breaks, and labelStar is the
-    // O(log n)-rounds fallback). Output = cluster-size histogram.
+    // O(diameter) shuffle rounds, no collect — dense near-dup graphs have
+    // a tiny diameter at any corpus size; it fail-fasts rather than
+    // under-merging if that assumption ever breaks). Output = cluster-size
+    // histogram.
     // Oracle replays the closure with a recursive CTE.
     // Bench profile: ~40% is the one-time pair generation (q53's shared
     // pipeline), the rest is per-round scheduling over EDGE-LIST-sized
@@ -235,8 +234,8 @@ object QueriesTextDedup {
     Q("q92_dedup_components",
       (s, d) => {
         // standalone per driver contract: fresh closure. The shared-
-        // materialization form (one closure, many consumers) is
-        // pipelines/DedupPipeline.run — same stage functions.
+        // materialization form runs DedupPipeline.labels once and feeds
+        // both consumers — same stage functions.
         val docs = documents(s, d)
         graft.pipelines.DedupPipeline.sizeHistogram(
           graft.pipelines.DedupPipeline.labels(docs))
@@ -261,8 +260,7 @@ object QueriesTextDedup {
     // (recursive CTE) + argmax window.
     Q("q93_cluster_representatives",
       (s, d) => {
-        // standalone per driver contract: fresh closure (see q92 note;
-        // the amortized form is pipelines/DedupPipeline.run).
+        // standalone per driver contract: fresh closure (see q92 note).
         val docs = documents(s, d)
         graft.pipelines.DedupPipeline.representatives(docs,
           graft.pipelines.DedupPipeline.labels(docs))
@@ -346,7 +344,7 @@ object QueriesTextDedup {
     // X27 incremental dedup — the index-maintenance form of q92: the corpus
     // arrives as 3 batches; each batch is shingled ONCE, joined against the
     // persisted (doc_id, band_key) index, and only components touched by a
-    // new edge are re-closed (pipelines/DedupPipeline.addBatch). The final
+    // new edge are re-closed (pipelines/DedupPipeline.addBatchBands). The final
     // labels are bit-identical to the from-scratch closure — which is
     // exactly what the oracle replays (q92's recursive CTE over the FULL
     // corpus). At 100 TB this is the daily-ingest shape: per-day cost

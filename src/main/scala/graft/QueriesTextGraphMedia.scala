@@ -390,9 +390,9 @@ object QueriesTextGraphMedia {
     // (round 12, VERDICT r11 #4): each peel round's edge set is a
     // SUBSET of the previous (both semi-joins only remove rows), so an
     // unchanged edge COUNT proves the edge set itself is unchanged —
-    // a monotonicity argument strictly stronger than the (count,
-    // hash-xor) signature ConnectedComponents needs for its
-    // non-monotone label updates. Remaining rounds are no-ops by
+    // a monotonicity argument, so no per-round label comparison (the
+    // changed-label count ConnectedComponents.labelMinProp needs for its
+    // non-monotone label updates). Remaining rounds are no-ops by
     // idempotence, so exiting is bit-identical to running all 8 (the
     // DuckDB oracle still replays the fixed-8 form — same fixpoint).
     // The count is one cheap action over the already-checkpointed

@@ -2389,7 +2389,7 @@ object QueriesTime {
   /** T32 post-agg stage of q199: the all-integer Fano arithmetic over a
     * MATERIALIZED (event_type, day, n) table. Exposed separately because
     * it is also a CONSUMER of the X97 maintained aggregate state
-    * (`pipelines/AggPipeline.dailyCounts` feeds it without a fact scan;
+    * (its `(event_type, day, n)` columns feed it without a fact scan;
     * `AggPipelineSpec` pins the parity). Runs on types×days rows, never
     * corpus-sized; see q199's scaladoc for the exactness window and the
     * division-form guard.

@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   *  - **Incremental**: only partitions with more files than their data
   *    needs are rewritten (a partition already at its packed file count is
   *    untouched), so steady-state cost tracks RECENT ingest, not table
-  *    size — the same argument as DedupPipeline.addBatch.
+  *    size — the same argument as DedupPipeline.addBatchBands.
   *  - **Idempotent**: re-running immediately after a compaction rewrites
   *    zero partitions ([[CompactionSpec]] pins this).
   *  - **Data-identical**: a rewrite is read-coalesce-write of the

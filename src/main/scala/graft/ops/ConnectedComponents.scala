@@ -12,43 +12,26 @@ import org.apache.spark.sql.functions._
   * doc labeled with its component, then one representative kept per
   * component.
   *
-  * Two algorithms, same per-round shuffle profile (edge-list-sized, never
-  * corpus-sized; no collect, no windows):
+  * Min-label propagation ([[labelMinProp]]): O(component diameter)
+  * rounds, each ONE join + one partial/final min-agg whose shuffle is
+  * edge-list-sized, never corpus-sized (no collect, no windows). Every
+  * closure in the program runs on it: real near-dup graphs are dense
+  * clusters of diameter 1-3, and the incremental index
+  * (`DedupPipeline.addBatchBands`) closes only the contracted graph of
+  * each batch's new edges.
   *
-  *  - [[labelStar]] (default behind [[label]]): alternating
-  *    large-star/small-star contraction (Kiveris et al., "Connected
-  *    Components in MapReduce and Beyond", SoCC'14). Converges in
-  *    O(log^2 n) rounds worst-case — ~log n in practice — on ANY graph
-  *    shape, so an adversarial long-path candidate graph cannot stretch
-  *    the job into thousands of rounds. Each round halves-or-better the
-  *    distance-to-star, and each round's edge output is at most the
-  *    (deduped) input edge count, so the shuffle volume is monotonically
-  *    non-increasing. Like [[labelMinProp]], it THROWS past `maxIter`
-  *    rather than extracting labels from a non-star edge set (which would
-  *    silently under-merge).
-  *  - [[labelMinProp]]: min-label propagation, O(component diameter)
-  *    rounds with ONE join + one partial/final min-agg per round. On real
-  *    near-dup graphs (dense clusters, diameter 1-3) it does less work
-  *    per round than the two star phases; it THROWS if the graph fails to
-  *    converge within `maxIter` rather than silently returning a partial
-  *    closure — callers that cannot bound the diameter use the default.
-  *
-  * Determinism: both algorithms compute min() folds over vertex ids —
+  * Determinism: labels are min() folds over vertex ids —
   * order-independent, so retries/partitionings cannot change the result.
   *
-  * Lineage: [[labelStar]] local-checkpoints every round — without
-  * truncation each round's plan embeds the previous round's twice and the
-  * logical tree grows exponentially (observed OOM just *stringifying* the
-  * plan at ~14 rounds). Checkpoints are eager (lazy checkpoints were
+  * Lineage: the r17 self-loop form references the previous round exactly
+  * once, so a round is one join + one agg with no separate own-label pool
+  * branch; rounds are eager localCheckpoints (lazy checkpoints were
   * measured in r16 and bought nothing: AQE materializes interior stages
-  * at RDD build regardless). [[labelMinProp]]'s r17 self-loop form
-  * references the previous round exactly once, so a round is one join +
-  * one agg with no separate own-label pool branch; rounds stay eager
-  * localCheckpoints (caching them partition-aware was measured slower —
-  * see the in-method note). Local checkpoints trade executor-loss
-  * recovery for truncation; a production run on a lossy cluster uses
-  * reliable `checkpoint()` on a durable dir — same algorithm, one-line
-  * swap.
+  * at RDD build regardless; caching them partition-aware was measured
+  * slower — see the in-method note). Local checkpoints trade
+  * executor-loss recovery for truncation; a production run on a lossy
+  * cluster uses reliable `checkpoint()` on a durable dir — same
+  * algorithm, one-line swap.
   */
 object ConnectedComponents {
 
@@ -57,84 +40,8 @@ object ConnectedComponents {
     * `(v, component)`. Isolated vertices don't appear in edges and so
     * don't appear in the output — callers keep un-paired rows with a left
     * join, exactly like q75's anti-join shape.
-    */
-  def label(edges: DataFrame, maxIter: Int = 50): DataFrame =
-    labelStar(edges, maxIter)._1
-
-  /** Alternating large-star/small-star contraction. Returns
-    * `(labels, rounds)` — rounds is exposed so tests can pin the O(log n)
-    * convergence claim on adversarial graphs.
     *
-    * Edges live in canonical `(hi, lo)` form (hi > lo). Per round, over
-    * the symmetric neighborhood view:
-    *  - LARGE-STAR: each center u connects every strictly larger neighbor
-    *    v to m = min(N(u) ∪ {u}) — long chains of large ids collapse
-    *    toward small ids in parallel.
-    *  - SMALL-STAR: each center u connects every smaller neighbor and u
-    *    itself to m — local stars re-root at their minimum.
-    * Fixpoint = every component is a star rooted at its min id, detected
-    * by an order-independent (count, xxhash-xor) signature computed in
-    * one cheap agg over the already-checkpointed round output (no
-    * edge-set equality join; XOR instead of SUM because ANSI mode makes a
-    * long-sum over many edges an overflow error).
-    */
-  def labelStar(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    var e = edges.toDF("src", "dst")
-      .filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .distinct()
-      .localCheckpoint(true)
-    var prevSig = (-1L, 0L)
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxIter) {
-      // large-star over the symmetric view; output (v, m) has v > u >= m,
-      // so it is already canonical (hi, lo)
-      val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-        .union(e.select(col("lo").as("u"), col("hi").as("v")))
-      val mn = sym.groupBy("u").agg(min("v").as("mnv"))
-        .select(col("u"), least(col("u"), col("mnv")).as("m"))
-      val large = sym.join(mn, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-        .filter(col("hi") =!= col("lo"))
-        .distinct()
-      // small-star on the large-star output; m <= v <= u keeps (v, m) and
-      // (u, m) canonical
-      val sym2 = large.select(col("hi").as("u"), col("lo").as("v"))
-        .union(large.select(col("lo").as("u"), col("hi").as("v")))
-      val mn2 = sym2.groupBy("u").agg(min("v").as("mnv"))
-        .select(col("u"), least(col("u"), col("mnv")).as("m"))
-      val small = sym2.join(mn2, "u")
-        .filter(col("v") < col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-        .union(mn2.select(col("u").as("hi"), col("m").as("lo")))
-        .filter(col("hi") =!= col("lo"))
-        .distinct()
-        .localCheckpoint(true)
-      val sigRow = small
-        .agg(count(lit(1)), expr("bit_xor(xxhash64(hi, lo))")).head()
-      val sig = (sigRow.getLong(0),
-        if (sigRow.isNullAt(1)) 0L else sigRow.getLong(1))
-      done = sig == prevSig
-      prevSig = sig
-      e = small
-      rounds += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"labelStar did not converge in $maxIter rounds — extracting labels " +
-        "from a non-star edge set would silently under-merge components; " +
-        "raise maxIter (worst case is O(log^2 n) rounds)")
-    // fixpoint is a star per component: every edge is (member, root);
-    // roots label themselves
-    val labels = e.select(col("hi").as("v"), col("lo").as("component"))
-      .union(e.select(col("lo").as("v"), col("lo").as("component")))
-      .distinct()
-    (labels, rounds)
-  }
-
-  /** Min-label propagation: every vertex starts labeled with its own id;
+    * Min-label propagation: every vertex starts labeled with its own id;
     * each round every vertex takes the min of its own and its neighbors'
     * labels; fixpoint in O(component diameter) rounds. The convergence
     * check rides the SAME aggregate as the label fold (the previous label
@@ -145,7 +52,6 @@ object ConnectedComponents {
     *
     * Throws `IllegalStateException` if the diameter exceeds `maxIter` —
     * returning a partially-propagated labeling would be silently wrong.
-    * Use [[label]]/[[labelStar]] when the graph shape is unbounded.
     */
   def labelMinProp(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val e = edges.toDF("src", "dst")
@@ -199,7 +105,7 @@ object ConnectedComponents {
     }
     if (!converged) throw new IllegalStateException(
       s"labelMinProp did not converge in $maxIter rounds " +
-        "(component diameter too large) — use labelStar")
+        "(component diameter too large)")
     labels
   }
 }

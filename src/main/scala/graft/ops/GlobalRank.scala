@@ -39,9 +39,9 @@ object GlobalRank {
     * rank is `weight = lit(1L)` over an order with a unique tiebreak,
     * e.g. `Seq(sig, doc_id)`). `totals` is one row per group: the group
     * columns plus `total` (long), the group's sum of `weight`. `group`
-    * names non-null columns of `df`; an empty `group` is one global
-    * order. A descending order passes the negated key. `weight` must be
-    * non-null and fit a long.
+    * names columns of `df`, and a null group value is one group; an empty
+    * `group` is one global order. A descending order passes the negated
+    * key. `weight` must be non-null and fit a long.
     *
     * Shape: ONE sorted RDD, from which both branches hang, so the range
     * exchange's bounds and map output are shared by construction —
@@ -112,12 +112,19 @@ object GlobalRank {
       StructField("__pid", IntegerType, nullable = false) +: runKey +:
         gIdx.map(fields(_)) :+
         StructField("__sum", LongType, nullable = false)))
-    val offsets = sums.as("a")
-      .join(sums.as("b"), group.foldLeft(col("b.__pid") < col("a.__pid")) {
-        (c, g) => c && col(s"a.$g") === col(s"b.$g") }, "left")
-      // grouped by the group columns too: the join's partitioning on them
-      // then satisfies the aggregate, with no second exchange
-      .groupBy(("__run" +: group).map(c => col(s"a.$c")): _*)
+    // the group as one struct column: struct equality is null-safe, as
+    // `sameGroup` is, so a null group's runs in later partitions get the
+    // earlier runs' sums (`<=>` on the columns would hash the join on
+    // derived keys, which the aggregate's grouping could not reuse)
+    val gKey = if (group.isEmpty) Nil else Seq("__g")
+    val keyed = sums.select(col("*") +:
+      gKey.map(k => struct(group.map(col): _*).as(k)): _*)
+    val offsets = keyed.as("a")
+      .join(keyed.as("b"), gKey.foldLeft(col("b.__pid") < col("a.__pid")) {
+        (c, k) => c && col(s"a.$k") === col(s"b.$k") }, "left")
+      // grouped by the group key too: the join's partitioning on it then
+      // satisfies the aggregate, with no second exchange
+      .groupBy(("__run" +: gKey).map(c => col(s"a.$c")): _*)
       .agg(coalesce(sum(col("b.__sum")), lit(0L)).as("__off"))
       .select("__run", "__off")
     val local = sortedRdd.mapPartitionsWithIndex { (pid, it) =>

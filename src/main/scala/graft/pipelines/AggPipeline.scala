@@ -157,14 +157,6 @@ object AggPipeline {
       col("open"), col("high"), col("low"), col("close"),
       col("n").as("n_events"), col("vol").cast("double").as("vol"))
 
-  /** The (event_type, day, n) daily-count table q197/q199/q206 build on —
-    * identical to `QueriesTime.typeDailyCounts(events)` by the fold
-    * identity (ns-day and µs-day bucketing agree: both are
-    * floor(ts / 1 day) on the non-negative epoch domain).
-    */
-  def dailyCounts(state: DataFrame): DataFrame =
-    state.select(col("event_type"), col("day"), col("n"))
-
   /** Coarser-grain partial state by RE-AGGREGATING the daily state —
     * `day DIV days` buckets (7 = weekly aligned to the epoch week, 30 =
     * monthly-ish). Output is again partial state (same schema, coarser

@@ -18,8 +18,8 @@ import graft.ops.{GlobalRank, Scalars}
   * the difference between one corpus scan per STAGE and one per QUERY is
   * the whole job cost. Here the corpus parquet is scanned ONCE into an
   * eager materialization (`localCheckpoint` standing in for the
-  * production parquet write, as in DedupPipeline.run); the three
-  * text-derived verdict families (token classifier, shingle closure,
+  * production parquet write, as at DedupPipeline's index cut points); the
+  * three text-derived verdict families (token classifier, shingle closure,
   * 5-gram contamination) each read that materialization, land in ONE
   * narrow per-doc flag table (doc_id, source, lang, counts, 4 booleans)
   * that is materialized once, and everything downstream — funnel, kept
@@ -67,8 +67,8 @@ object CurationPipeline {
     * survive as their own cluster.
     *
     * r17 (guide §1.2/§2.4): the labels table is consumed ONCE here, so
-    * the extra `localCheckpoint` it carried (a leftover of
-    * DedupPipeline.run's two-consumer shape) was a pure job; and since
+    * the extra `localCheckpoint` it carried (a leftover of a
+    * two-consumer labels table) was a pure job; and since
     * only survivor doc_ids are needed (not q93's ordered dump), the
     * per-cluster rank window is replaced by the aggregation-form argmax
     * (q158's max(struct) idiom — map-side combinable, no window
@@ -135,7 +135,7 @@ object CurationPipeline {
     */
   def run(docs: DataFrame): CurationOutputs = {
     // the ONE corpus scan — localCheckpoint stands in for the production
-    // write of the scanned/normalized corpus snapshot (DedupPipeline.run's
+    // write of the scanned/normalized corpus snapshot (DedupPipeline's
     // cut-point discipline); every family below reads this, not parquet
     val corpus = graft.Tables.fanOut(docs).localCheckpoint(true)
     val isBench = col("doc_id") % 100 === 0

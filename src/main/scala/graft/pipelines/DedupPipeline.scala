@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.QueriesText
 import graft.ops.ConnectedComponents
 
-/** The near-dup dedup closure as a PIPELINE: run the expensive part
-  * (minhash signatures → LSH band join → connected components) ONCE,
-  * materialize the labels table, and serve every downstream consumer —
-  * cluster-size histogram (q92's output) and cluster representatives
-  * (q93's output) — from that one materialization.
+/** The near-dup dedup closure as a PIPELINE of stage functions: run the
+  * expensive part ([[labels]]: minhash signatures → LSH band join →
+  * connected components) ONCE, and serve every downstream consumer —
+  * cluster-size histogram ([[sizeHistogram]], q92's output) and cluster
+  * representatives ([[representatives]], q93's output) — from that one
+  * labels table.
   *
   * Why this exists (VERDICT r04 #3 / SCALE.md "shared closure"): the
   * DECLARED queries q92/q93 are standalone by driver contract (Verify runs
@@ -29,14 +30,6 @@ import graft.ops.ConnectedComponents
   * `DedupPipelineSpec` additionally asserts their outputs are equal.
   */
 object DedupPipeline {
-
-  /** Everything downstream of one closure run. `labels` is the
-    * materialized `(v, component)` table both outputs consume.
-    */
-  final case class DedupOutputs(
-      labels: DataFrame,
-      histogram: DataFrame,
-      representatives: DataFrame)
 
   /** Stage 1 — the expensive part, run once per corpus snapshot:
     * 3-shingle minhash signatures → banded LSH equi-join → transitive
@@ -70,25 +63,13 @@ object DedupPipeline {
       .orderBy("cluster")
   }
 
-  /** The pipeline: one closure, one materialization, every consumer.
-    * `localCheckpoint(true)` stands in for the production write of the
-    * labels table to durable storage (same cut point in the lineage); on
-    * a lossy cluster use `checkpoint()`/a parquet write instead.
-    */
-  def run(docs: DataFrame): DedupOutputs = {
-    // labelMinProp already returns a materialized (checkpointed) table
-    // (r17) — re-checkpointing it here was one pure job per run
-    val l = labels(docs)
-    DedupOutputs(l, sizeHistogram(l), representatives(docs, l))
-  }
-
   // ---- incremental index maintenance ---------------------------------------
 
   /** The persisted dedup index: `bands` is the `(doc_id, band_key)` LSH
     * index of every document ever processed; `labels` is the current
     * `(v, component)` closure over them (paired docs only, like
     * [[labels]]). Both stand in for durable tables — the
-    * `localCheckpoint(true)` cut points in [[addBatch]] are where a
+    * `localCheckpoint(true)` cut points in [[addBatchBands]] are where a
     * production run writes parquet.
     */
   final case class DedupIndex(bands: DataFrame, labels: DataFrame)
@@ -110,10 +91,13 @@ object DedupPipeline {
     * closure — the daily-ingest form of dedup at 100 TB (the full corpus
     * is shingled exactly once, on the day each document arrives):
     *
-    *  1. Shingle + sign ONLY the batch; candidate edges come from the
-    *     batch's band self-join plus one equi-join of batch bands against
-    *     the persisted band index. Per-batch cost is O(batch + collisions),
-    *     never O(corpus).
+    *  1. Shingle + sign ONLY the batch: `nb` is its `(doc_id, band_key)`
+    *     rows (`QueriesText.bandKeys`), the exact rows the index persists
+    *     (q112's standalone simulation signs the whole corpus in one pass
+    *     and slices it per batch — same per-doc work, fewer jobs).
+    *     Candidate edges come from the batch's band self-join plus one
+    *     equi-join of batch bands against the persisted band index.
+    *     Per-batch cost is O(batch + collisions), never O(corpus).
     *  2. The closure runs on the CONTRACTED graph: each new-edge endpoint
     *     maps to its current component id (itself if unlabeled), so the
     *     transitive closure sees one node per touched component — its
@@ -131,16 +115,6 @@ object DedupPipeline {
     * from-scratch form, so the results are bit-identical whatever the
     * batch split — `DedupPipelineSpec` proves it over a 3-batch sequence
     * and q112's oracle replays the from-scratch closure in DuckDB.
-    */
-  def addBatch(index: DedupIndex, batch: DataFrame): DedupIndex =
-    addBatchBands(index,
-      QueriesText.bandKeys(batch).localCheckpoint(true))
-
-  /** [[addBatch]] with the batch's band keys already computed —
-    * `(doc_id, band_key)`, the exact rows the index persists. Lets a
-    * caller that signed the documents elsewhere (or, as q112's standalone
-    * simulation does, signed the whole corpus in one pass and sliced it
-    * per batch — same per-doc work, fewer jobs) skip the signature stage.
     */
   def addBatchBands(index: DedupIndex, nb: DataFrame): DedupIndex = {
     val a = nb.select(col("doc_id").as("a_id"), col("band_key"))
@@ -212,7 +186,7 @@ object DedupPipeline {
     * labels land in the session warehouse as parquet, and every consumer
     * (q112's labels dump, q115's batch verdict, q128's leakage audit)
     * reads the tables instead of re-folding. This is the production shape
-    * the simulation queries document — per-day cost is one [[addBatch]];
+    * the simulation queries document — per-day cost is one [[addBatchBands]];
     * CONSUMERS pay one batch-sized (or probe-sized) join, never a corpus
     * re-shingle. Cached-vs-scratch bit-identity is pinned by
     * DedupPipelineSpec.

@@ -154,18 +154,4 @@ object JdbcSource {
         Conn(s"jdbc:derby:$dir")
       })
     }
-
-  /** Local-table fallback for environments with no reachable database:
-    * same output schema as [[trackedTopics]] so downstream pipelines are
-    * source-agnostic. Topics are derived from the documents table's
-    * distinct languages ++ a synthetic id — any dimension-shaped local
-    * frame works; the contract is the (topic: string) column.
-    */
-  def trackedTopicsLocal(
-      spark: SparkSession,
-      sfDir: String,
-      pageSize: Int): DataFrame =
-    graft.Tables.t(spark, sfDir, "documents")
-      .select(col("lang").as("topic")).distinct()
-      .orderBy("topic").limit(pageSize)
 }

@@ -17,6 +17,12 @@ class AggPipelineSpec extends SparkSpec {
 
   private def ev = Tables.events(spark, sf)
 
+  /** The (event_type, day, n) daily-count table the q197/q199/q219
+    * consumers take, read off the maintained state.
+    */
+  private def dailyCounts(state: DataFrame): DataFrame =
+    state.select(col("event_type"), col("day"), col("n"))
+
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted.toIndexedSeq
     df.select(cols.map(col): _*).collect()
@@ -54,7 +60,7 @@ class AggPipelineSpec extends SparkSpec {
       "state equals the declared from-raw query") {
     val st = AggPipeline.merge(AggPipeline.dayPartials(ev))
     val derived = QueriesTime.seasonalityFromDaily(
-        AggPipeline.dailyCounts(st))
+        dailyCounts(st))
       .collect().map(_.toString).toSeq
     val declared = Queries.byName("q197_weekday_seasonality")
       .build(spark, sf).collect().map(_.toString).toSeq
@@ -64,7 +70,7 @@ class AggPipelineSpec extends SparkSpec {
   test("q199 parity: burstiness Fano derived from the maintained state " +
       "equals the declared from-raw query") {
     val st = AggPipeline.merge(AggPipeline.dayPartials(ev))
-    val derived = QueriesTime.fanoFromDaily(AggPipeline.dailyCounts(st))
+    val derived = QueriesTime.fanoFromDaily(dailyCounts(st))
       .collect().map(_.toString).toSeq
     val declared = Queries.byName("q199_burstiness_fano").build(spark, sf)
       .collect().map(_.toString).toSeq
@@ -74,7 +80,7 @@ class AggPipelineSpec extends SparkSpec {
   test("q219 parity: the trend line derived from the maintained state " +
       "equals the declared from-raw query") {
     val st = AggPipeline.merge(AggPipeline.dayPartials(ev))
-    val derived = QueriesTime.trendFromDaily(AggPipeline.dailyCounts(st))
+    val derived = QueriesTime.trendFromDaily(dailyCounts(st))
       .collect().map(_.toString).toSeq
     val declared = Queries.byName("q219_trend_line").build(spark, sf)
       .collect().map(_.toString).toSeq

@@ -47,7 +47,6 @@ class BuildJobsSpec extends SparkSpec {
       "q147_containment_verify" -> 13,
       "q148_drift_audit" -> 2,
       "q150_boilerplate_ngrams" -> 3,
-      "q154_budget_materialize" -> 6,
       "q155_interpolate" -> 2,
       "q158_keep_policy" -> 2,
       "q160_spearman_agreement" -> 5,
@@ -86,6 +85,7 @@ class BuildJobsSpec extends SparkSpec {
       "q63_percentiles" -> 2,
       "q86_token_packing" -> 2,
       "q121_epoch_shuffle" -> 4,
+      "q154_budget_materialize" -> 3,
       "q169_gini_length" -> 2,
       "q178_pps_sample" -> 2,
       "q184_conversion_latency" -> 5,

@@ -29,7 +29,8 @@ class CurationPipelineSpec extends SparkSpec {
 
   test("stage 2 parity: flags.k_dedup doc set equals DedupPipeline's " +
       "representative set (itself spec-pinned equal to q93)") {
-    val expected = DedupPipeline.run(corp).representatives
+    val expected = DedupPipeline.representatives(corp,
+        DedupPipeline.labels(corp))
       .select(col("doc_id"))
     val got = out.flags.filter(col("k_dedup")).select("doc_id")
     assert(got.exceptAll(expected).count() == 0 &&

@@ -9,15 +9,25 @@ import graft.pipelines.DedupPipeline
   */
 class DedupPipelineSpec extends SparkSpec {
 
+  /** One batch folded in the production shape: sign only the batch, cut
+    * its band keys (the rows the index appends), fold them.
+    */
+  private def addBatch(ix: DedupPipeline.DedupIndex,
+      batch: org.apache.spark.sql.DataFrame): DedupPipeline.DedupIndex =
+    DedupPipeline.addBatchBands(ix,
+      QueriesText.bandKeys(batch).localCheckpoint(true))
+
   test("persisted-labels pipeline equals the q92/q93 recompute paths") {
     val docs = Tables.documents(spark, sf)
-    val out = DedupPipeline.run(docs)
+    val labels = DedupPipeline.labels(docs)
 
     val q92 = Queries.byName("q92_dedup_components").build(spark, sf)
     val q93 = Queries.byName("q93_cluster_representatives").build(spark, sf)
 
-    assert(out.histogram.collect().toSeq == q92.collect().toSeq)
-    assert(out.representatives.collect().toSeq == q93.collect().toSeq)
+    assert(DedupPipeline.sizeHistogram(labels).collect().toSeq ==
+      q92.collect().toSeq)
+    assert(DedupPipeline.representatives(docs, labels).collect().toSeq ==
+      q93.collect().toSeq)
   }
 
   test("incremental 3-batch index maintenance equals the from-scratch closure") {
@@ -29,7 +39,7 @@ class DedupPipelineSpec extends SparkSpec {
     val batches = (0 until 3).map(i =>
       docs.filter(pmod(col("doc_id"), lit(3)) === i))
     val idx = batches.foldLeft(
-      DedupPipeline.emptyIndex(spark))(DedupPipeline.addBatch)
+      DedupPipeline.emptyIndex(spark))(addBatch)
     assert(idx.labels.orderBy("v", "component").collect().toSeq ==
       scratchRows)
     // sign-once-slice-per-batch path (the declared q112/q115 shape)
@@ -57,7 +67,7 @@ class DedupPipelineSpec extends SparkSpec {
         (50L, "zz-untouched"), (51L, "zz-untouched")).toDF("doc_id", "band_key"),
       labels = Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L),
         (50L, 50L), (51L, 50L)).toDF("v", "component"))
-    val out = DedupPipeline.addBatch(index, batch)
+    val out = addBatch(index, batch)
     val got = out.labels.orderBy("v").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L,
@@ -70,7 +80,7 @@ class DedupPipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(v1 == Seq((100L, 1L, false)))
     val batch2 = Seq((200L, "zz yy xx ww vv")).toDF("doc_id", "text")
-    val out2 = DedupPipeline.addBatch(out, batch2)
+    val out2 = addBatch(out, batch2)
     val v2 = DedupPipeline.batchVerdict(out2.labels, batch2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(v2 == Seq((200L, 200L, true)))
@@ -98,7 +108,7 @@ class DedupPipelineSpec extends SparkSpec {
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("dedup_ckpt").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        index = DedupPipeline.addBatch(index, batch)
+        index = addBatch(index, batch)
       }.start()
     assert(q.awaitTermination(180000), "stream did not finish")
     val scratch = DedupPipeline.labels(docs)
@@ -128,10 +138,12 @@ class DedupPipelineSpec extends SparkSpec {
 
   test("labels materialize once: downstream plans read the checkpoint, " +
     "not the closure pipeline") {
-    val out = DedupPipeline.run(Tables.documents(spark, sf))
+    val docs = Tables.documents(spark, sf)
+    val labels = DedupPipeline.labels(docs)
     // a localCheckpoint cuts the lineage: the consumers' logical plans
     // must contain no trace of the upstream band join / minhash stages
-    Seq(out.histogram, out.representatives).foreach { df =>
+    Seq(DedupPipeline.sizeHistogram(labels),
+        DedupPipeline.representatives(docs, labels)).foreach { df =>
       val plan = df.queryExecution.optimizedPlan.toString
       assert(!plan.contains("band_key"),
         s"consumer plan re-runs the closure pipeline:\n$plan")

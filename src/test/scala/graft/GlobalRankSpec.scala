@@ -116,6 +116,25 @@ class GlobalRankSpec extends SparkSpec {
     }
   }
 
+  test("prefixSum treats a null group as one group when it spans several " +
+      "range partitions") {
+    import spark.implicits._
+    withConf("spark.sql.shuffle.partitions" -> "6",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val df = ((1 to 400).map(i =>
+          (Option.empty[String], (i * 37 % 400).toLong, (i % 5 + 1).toLong)) ++
+        (1 to 80).map(i => (Some(s"g${i % 2}"), i.toLong, 2L)))
+        .toDF("g", "k", "w").repartition(3)
+      val rows = GlobalRank.prefixSum(df, Seq("g"), Seq(col("k")),
+        col("w"))._1
+      val filled = rows.rdd
+        .mapPartitions(it => Iterator(it.exists(_.isNullAt(0))))
+        .collect().count(identity)
+      assert(filled >= 3, s"the null group filled $filled partitions")
+      assertWindowEqual(df, Seq("g"), Seq("k"))
+    }
+  }
+
   test("ranks over (sig, doc_id) with sig >= 2^22 and doc_id >= 2^31 " +
       "equal row_number() - 1") {
     import spark.implicits._

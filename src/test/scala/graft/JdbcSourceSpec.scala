@@ -75,10 +75,4 @@ class JdbcSourceSpec extends SparkSpec {
     assert(df.count() == 40)
     assert(df.select("id").distinct().count() == 40)
   }
-
-  test("S10: local-table fallback matches the topic-source contract") {
-    val df = JdbcSource.trackedTopicsLocal(spark, sf, pageSize = 10)
-    assert(df.columns.toSeq == Seq("topic"))
-    assert(df.count() > 0)
-  }
 }
