@@ -92,7 +92,7 @@ class ModuleReachSpec extends AnyFunSuite {
 
   test("comment and string-literal text reaches nothing; interpolations do") {
     val src = "val a = \"b.c { // d\" // e.f\n/* g /* h */ i */ s\"$j ${k.l(\"}\")}\"" +
-      " + '{' + '\\'' + raw\"\"\"m\"n\"\"\"\" + f\"$$o\""
+      " + '{' + '\\'' + '\\u007b' + raw\"\"\"m\"n\"\"\"\" + f\"$$o\""
     val words = "\\w+".r.findAllIn(code(src)).toList
     assert(words == List("val", "a", "s", "j", "k", "l", "raw", "f"))
     assert(code(src).count(_ == '\n') == src.count(_ == '\n'))
@@ -305,7 +305,7 @@ object ModuleReachSpec {
       }
     }
     def charLit(): Boolean = {
-      val end = if (src.startsWith("\\u", i + 1)) i + 6
+      val end = if (src.startsWith("\\u", i + 1)) i + 7
         else if (i + 1 < src.length && src(i + 1) == '\\') i + 3 else i + 2
       val ok = end < src.length && src(end) == '\''
       if (ok) { out += ' '; i += 1; while (i <= end) blank() }
