@@ -88,6 +88,8 @@ class CountMinAggregator
     extends Aggregator[String, Array[Long], Array[Long]] {
   import CountMin._
 
+  override def toString: String = s"CountMinAggregator($Depth, $Width)"
+
   override def zero: Array[Long] = new Array[Long](Depth * Width)
 
   override def reduce(buf: Array[Long], tok: String): Array[Long] = {

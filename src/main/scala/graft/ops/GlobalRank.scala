@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType,
+  StructField, StructType}
 
 /** Distributed running sums over a range order — the one building block
   * for exact order statistics (percentiles, medians, ranks), stride
@@ -41,115 +42,107 @@ object GlobalRank {
     * columns plus `total` (long), the group's sum of `weight`. `group`
     * names columns of `df`, and a null group value is one group; an empty
     * `group` is one global order. A descending order passes the negated
-    * key. `weight` must be non-null and fit a long.
+    * key. `weight` must be non-null and fit a long. Building runs no job.
     *
-    * Shape: ONE sorted RDD, from which both branches hang, so the range
-    * exchange's bounds and map output are shared by construction —
-    * correctness does not depend on ReuseExchange firing, and every row
-    * sees the partitioning its offset was computed on. Branch one sums
-    * each run (a group's rows in one partition) into a cached table of
-    * numPartitions × groups-per-partition rows; a non-equi self-join of
-    * that table gives each run's offset (the sum over the same group's
-    * earlier partitions), and a group-by gives `totals`. Branch two emits
-    * every row with its run key and its running sum within the run; the
-    * offsets ride a broadcast back onto the rows, joined on the run key —
-    * one long, whatever the group's type.
+    * Shape: one lazy plan. `sorted` range-partitions and sorts `df` on
+    * (group, order). A run is one group's rows in one partition, keyed
+    * pid·2^32 + its index there. The row pass gives each row its run and
+    * its running sum in the run; the summary pass gives each run's first
+    * row and sum, which, hashed on the group, yield each run's offset and
+    * each group's total; a broadcast joins the offsets back on the run.
+    * Both passes are `mapPartitions` over every column of `sorted`, so
+    * column pruning cannot split their range exchange and Spark reuses
+    * one; the offsets and totals share the summary's exchange likewise.
     *
-    * Build-time cost: `.rdd` runs jobs inside the query build. With AQE
-    * on (the default) it executes the adaptive plan up to its final
-    * stage: the range exchange's bounds-sampling job, its map stage, and
-    * every shuffle stage below it (BuildJobsSpec: 2 jobs for a scan under
-    * the exchange, q33; 3 with an aggregate exchange below it, q202).
-    * With AQE off it runs one job, the bounds sampling, which also
-    * computes any shuffle below the exchange; the range map stage waits
-    * for the query. A lazy form is a change to this one function
-    * (ROADMAP item 6).
+    * A run's offset is exact whenever its first full (group, order) key
+    * equals that of the summary run it joins, whatever bounds each pass
+    * cut at; a run without such a match fails the query through
+    * `raise_error`, so a missed exchange reuse is an error, never a wrong
+    * answer. Reuse is missed with `spark.sql.exchange.reuse=false`, and
+    * over a `localCheckpoint`ed scan carrying an output partitioning or
+    * ordering (a sort, or an aggregate checkpointed with AQE off), whose
+    * canonical form keeps its attribute ids in Spark 4.1. Precondition:
+    * no such scan under `df`.
     */
   def prefixSum(
       df: DataFrame,
       group: Seq[String],
       order: Seq[Column],
       weight: Column): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
     val fields = df.schema.fields.toSeq
+    val n = fields.length
     val gIdx = group.map(df.schema.fieldIndex)
-    val wIdx = fields.length
-    val key = group.map(col) ++ order
-    // the weight is projected after the sort, so a literal weight never
-    // rides the shuffle
-    val sortedRdd = df
-      .repartitionByRange(key: _*)
-      .sortWithinPartitions(key: _*)
-      .select(col("*"), weight.cast("long").as("__w"))
-      .rdd
-    // a run (one group's rows in one partition) is keyed pid·2^32 + its
-    // index in the partition: one long, so the join back onto the rows
-    // probes a long-keyed hash relation
-    val runKey = StructField("__run", LongType, nullable = false)
-    val sumsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val out = Seq.newBuilder[Row]
-      var run = pid.toLong << 32
+    val gCols = group.map(col)
+    val key = gCols ++ order
+    def field(f: String, t: DataType = LongType) = StructField(f, t, false)
+    // after the sort: a literal weight never rides the shuffle, and the id
+    // is the range partition's, not a Union's task index
+    val sorted = df.repartitionByRange(key: _*).sortWithinPartitions(key: _*)
+      .select(col("*"), weight.cast("long").as("__w"),
+        spark_partition_id().as("__pid"))
+    // the row pass emits every row with its run and running sum in the
+    // run; the summary pass, each run's first row and sum
+    def walk(summary: Boolean)(it: Iterator[Row]): Iterator[Row] = {
+      val in = it.buffered
+      var run = -1L
       var head: Row = null
       var s = 0L
-      def emit(): Unit = if (head != null) {
-        out += Row.fromSeq(Seq[Any](pid, run) ++ gIdx.map(head.get) :+ s)
-        run += 1
-      }
-      it.foreach { r =>
-        if (head == null || !sameGroup(gIdx, head, r)) {
-          emit(); head = r; s = 0L
+      in.flatMap { r =>
+        val first = head == null || !sameGroup(gIdx, head, r)
+        if (first) {
+          run = if (head == null) r.getInt(n + 1).toLong << 32 else run + 1
+          head = r; s = 0L
         }
-        s += r.getLong(wIdx)
-      }
-      emit()
-      out.result().iterator
-    }.cache() // numPartitions × groups-per-partition rows. The offsets and
-    // the totals each execute this branch; without the cache each one
-    // re-runs a full sorted reduce pass over the data. Lifecycle:
-    // ContextCleaner unpersists it once the query's RDDs are unreferenced,
-    // so builder-scoped caching doesn't accumulate.
-    val sums = spark.createDataFrame(sumsRdd, StructType(
-      StructField("__pid", IntegerType, nullable = false) +: runKey +:
-        gIdx.map(fields(_)) :+
-        StructField("__sum", LongType, nullable = false)))
-    // the group as one struct column: struct equality is null-safe, as
-    // `sameGroup` is, so a null group's runs in later partitions get the
-    // earlier runs' sums (`<=>` on the columns would hash the join on
-    // derived keys, which the aggregate's grouping could not reuse)
-    val gKey = if (group.isEmpty) Nil else Seq("__g")
-    val keyed = sums.select(col("*") +:
-      gKey.map(k => struct(group.map(col): _*).as(k)): _*)
-    val offsets = keyed.as("a")
-      .join(keyed.as("b"), gKey.foldLeft(col("b.__pid") < col("a.__pid")) {
-        (c, k) => c && col(s"a.$k") === col(s"b.$k") }, "left")
-      // grouped by the group key too: the join's partitioning on it then
-      // satisfies the aggregate, with no second exchange
-      .groupBy(("__run" +: gKey).map(c => col(s"a.$c")): _*)
-      .agg(coalesce(sum(col("b.__sum")), lit(0L)).as("__off"))
-      .select("__run", "__off")
-    val local = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var run = (pid.toLong << 32) - 1
-      var head: Row = null
-      var s = 0L
-      it.map { r =>
-        if (head == null || !sameGroup(gIdx, head, r)) {
-          run += 1; head = r; s = 0L
-        }
-        val out = new Array[Any](wIdx + 2)
-        out(0) = run; out(wIdx + 1) = s
-        var i = 0
-        while (i < wIdx) { out(i + 1) = r.get(i); i += 1 }
-        s += r.getLong(wIdx)
-        new GenericRow(out): Row
+        s += r.getLong(n)
+        if (!summary) {
+          val out = new Array[Any](n + 3)
+          out(0) = run; out(1) = first; out(n + 2) = s - r.getLong(n)
+          var i = 0
+          while (i < n) { out(i + 2) = r.get(i); i += 1 }
+          Iterator.single(new GenericRow(out): Row)
+        } else if (in.hasNext && sameGroup(gIdx, head, in.head)) Iterator.empty
+        else Iterator.single(Row.fromSeq(run +: head.toSeq.take(n) :+ s))
       }
     }
-    val rows = spark.createDataFrame(local, StructType(runKey +: fields :+
-        StructField("__local", LongType, nullable = false)))
-      .join(broadcast(offsets), Seq("__run"))
-      .select(fields.map(f => col(s"`${f.name}`")) :+
-        (col("__off") + col("__local")).as("before"): _*)
-    val totals = sums.groupBy(group.map(col): _*)
-      .agg(sum("__sum").as("total"))
+    val rowPass = sorted.mapPartitions(walk(summary = false))(Encoders.row(
+      StructType(field("__run") +: field("__head", BooleanType) +: fields :+
+        field("__local"))))
+    val summaryPass = sorted.mapPartitions(walk(summary = true))(
+      Encoders.row(StructType(field("__run") +: fields :+ field("__sum"))))
+    // per run: its offset, the group's sum through it (its total on the
+    // last run, nullable as a sum() is) and whether it is the last
+    val sIdx = gIdx.map(_ + 1)
+    val runs = (if (group.isEmpty) summaryPass.repartition(1)
+        else summaryPass.repartition(gCols: _*))
+      .sortWithinPartitions(gCols :+ col("__run"): _*)
+      .mapPartitions { (it: Iterator[Row]) =>
+        val in = it.buffered
+        var upTo = 0L
+        in.map { r =>
+          val off = upTo
+          upTo += r.getLong(n + 1)
+          val last = !in.hasNext || !sameGroup(sIdx, r, in.head)
+          val out = Row.fromSeq(r.toSeq.init ++ Seq(off, upTo, last))
+          if (last) upTo = 0L
+          out
+        }
+      }(Encoders.row(StructType(field("__run") +: fields :+ field("__off") :+
+        StructField("__upto", LongType, nullable = true) :+
+        field("__last", BooleanType))))
+    val offsets = runs.select(col("__run"), struct(key: _*).as("__fk"),
+      col("__off"))
+    // the coalesce only keeps `before` non-null in the schema
+    val rows = rowPass.join(broadcast(offsets), Seq("__run"), "left")
+      .select(fields.map(f => col(s"`${f.name}`")) :+ coalesce(
+        when(col("__off").isNull ||
+            (col("__head") && !(struct(key: _*) === col("__fk"))),
+          raise_error(lit("GlobalRank.prefixSum: a run has no equal summary")))
+          .otherwise(col("__off") + col("__local")),
+        lit(0L)).as("before"): _*)
+    val lasts = runs.where(col("__last"))
+    val totals =
+      if (group.isEmpty) lasts.agg(sum("__upto").as("total"))
+      else lasts.select(gCols :+ col("__upto").as("total"): _*)
     (rows, totals)
   }
 
@@ -171,13 +164,10 @@ object GlobalRank {
     * `v_lo + (pos−lo)·(v_hi−v_lo)` mismatched 2 512 of them, so the FORM
     * is load-bearing — do not "simplify" it). Returns
     * `(g string, q double, pct double)` — one row per group × percentage.
-    * One strengthening over Spark's form: when v_lo == v_hi the exact
-    * value is returned directly instead of through the weighted form,
-    * which can land 1 ulp low — see the in-line note. Results are
-    * hash-identical to the single-reducer aggregate they replace EXCEPT
-    * in that v_lo == v_hi case, where the exact value is returned instead
-    * of Percentile's occasionally-1-ulp-low weighted result (matching
-    * DuckDB, which also returns the exact value there).
+    * Results are hash-identical to Spark's single-reducer aggregate except
+    * when v_lo == v_hi: the exact value is returned there, as DuckDB
+    * does, where the weighted form can land 1 ulp low (see the in-line
+    * note).
     *
     * Cost at scale: one [[prefixSum]] — one full shuffle of narrow
     * (group, value, weight 1) rows, two reduce passes over it and tiny
@@ -255,13 +245,11 @@ object GlobalRank {
       value: Column,
       weight: Column,
       qPpms: Seq[Int]): DataFrame = {
-    // r16 (guide §2.3): weight-k rows behave exactly like k repeated rows
-    // (spec-pinned), so equal (g, v) rows collapse to one row summing the
-    // weights before the range exchange — a map-side-combinable agg; the
-    // cumulative-weight threshold test is unchanged on the contracted
-    // table (callers pass bounded value domains — q202's doc lengths —
-    // where the contraction is large; for near-unique values use
-    // exactPercentiles' per-row machinery instead).
+    // weight-k rows behave exactly like k repeated rows (spec-pinned), so
+    // equal (g, v) rows collapse to one, summing their weights, before the
+    // range exchange: a map-side-combinable agg that bounded value domains
+    // (q202's doc lengths) contract a lot; near-unique values belong in
+    // exactPercentiles.
     val (rows, totals) = prefixSum(
       df.select(group.cast("string").as("g"), value.cast("double").as("v"),
           weight.cast("long").as("w"))

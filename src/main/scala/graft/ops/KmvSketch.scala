@@ -57,6 +57,8 @@ class KmvAggregator(k: Int = KmvSketch.K)
   require(k > 1, s"KMV needs k > 1 (k-th order statistic drives the " +
     s"estimator); got $k")
 
+  override def toString: String = s"KmvAggregator($k)"
+
   override def zero: Array[Long] = Array.emptyLongArray
 
   override def reduce(buf: Array[Long], h: Long): Array[Long] = {

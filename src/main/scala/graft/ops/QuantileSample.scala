@@ -54,6 +54,8 @@ class QuantileSampleAggregator(k: Int = QuantileSample.K)
     extends Aggregator[(Long, Double), QsBuf, QsBuf] {
   require(k > 1, s"quantile sample needs k > 1; got $k")
 
+  override def toString: String = s"QuantileSampleAggregator($k)"
+
   override def zero: QsBuf =
     QsBuf(Array.emptyLongArray, Array.emptyDoubleArray)
 

@@ -119,6 +119,8 @@ class SpaceSavingAggregator(capacity: Int)
     extends Aggregator[String, SpaceSaving.Summary,
       Seq[SpaceSaving.Entry]] {
 
+  override def toString: String = s"SpaceSavingAggregator($capacity)"
+
   override def zero: SpaceSaving.Summary = new SpaceSaving.Summary(capacity)
 
   override def reduce(buf: SpaceSaving.Summary,
@@ -144,6 +146,8 @@ class SpaceSavingAggregator(capacity: Int)
 class WeightedSpaceSavingAggregator(capacity: Int)
     extends Aggregator[(String, Long), SpaceSaving.Summary,
       Seq[SpaceSaving.Entry]] {
+
+  override def toString: String = s"WeightedSpaceSavingAggregator($capacity)"
 
   override def zero: SpaceSaving.Summary = new SpaceSaving.Summary(capacity)
 

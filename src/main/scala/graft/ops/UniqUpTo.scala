@@ -33,6 +33,8 @@ class UniqUpToAggregator(n: Int)
   require(n >= 1, s"uniqUpTo needs N >= 1; got $n")
   private val cap = n + 1
 
+  override def toString: String = s"UniqUpToAggregator($n)"
+
   override def zero: Array[Long] = Array.emptyLongArray
 
   override def reduce(buf: Array[Long], v: Long): Array[Long] = {

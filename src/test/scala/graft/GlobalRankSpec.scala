@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+  RangePartitioning}
+import org.apache.spark.sql.execution.MapPartitionsExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
@@ -56,6 +60,16 @@ class GlobalRankSpec extends SparkSpec {
     assert(got.toSeq == exp)
   }
 
+  /** `df` with `before`: sum(w) over the group's rows up to this one in
+    * `order`, minus w — the window definition of `prefixSum`. */
+  private def windowBefore(df: DataFrame, group: Seq[String],
+      order: Seq[String]): DataFrame = {
+    val frame = Window.partitionBy(group.map(col): _*)
+      .orderBy(order.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn("before", sum("w").over(frame) - col("w"))
+  }
+
   /** `prefixSum(df, group, order, w)` against its window definition:
     * `before` = sum(w) over the group's rows up to this one, minus w;
     * `totals` = the group-by sum. Compared as multisets, so rows of one
@@ -66,10 +80,7 @@ class GlobalRankSpec extends SparkSpec {
       order: Seq[String]): Unit = {
     val (rows, totals) =
       GlobalRank.prefixSum(df, group, order.map(col), col("w"))
-    val frame = Window.partitionBy(group.map(col): _*)
-      .orderBy(order.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expected = df.withColumn("before", sum("w").over(frame) - col("w"))
+    val expected = windowBefore(df, group, order)
     assert(rows.schema.fields.toSeq ==
       df.schema.fields.toSeq :+ StructField("before", LongType, false),
       rows.schema.treeString)
@@ -224,14 +235,132 @@ class GlobalRankSpec extends SparkSpec {
     assert(got.toSeq == Seq(1.0), got.toSeq)
   }
 
-  test(".rdd and mapPartitionsWithIndex appear under src/main only in " +
-      "ops/GlobalRank.scala") {
+  private val spreadConf = Seq("spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
+  /** n rows in 3 groups, keys unique per group, weights 1..5. */
+  private def spread(n: Int, keyShift: Long = 0L): DataFrame = {
+    import spark.implicits._
+    (1 to n).map(i =>
+        (s"g${i % 3}", (i * 37 % n).toLong + keyShift, (i % 5 + 1).toLong))
+      .toDF("g", "k", "w").repartition(3)
+  }
+
+  /** Non-empty partitions of `df`'s range partitioning on (g, k), the
+    * one prefixSum cuts under the current conf. */
+  private def filled(df: DataFrame): Int =
+    df.repartitionByRange(col("g"), col("k")).rdd
+      .mapPartitions(it => Iterator(it.nonEmpty)).collect().count(identity)
+
+  /** Runs `check`: true when it passes, false when prefixSum raised its
+    * error. A wrong row fails the assertion inside `check`. */
+  private def equalOrRaised(check: => Unit): Boolean =
+    try { check; true } catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists {
+            case t: SparkThrowable =>
+              t.getCondition == "USER_RAISED_EXCEPTION"
+            case _ => false
+          } => false
+    }
+
+  test("prefixSum under a Union takes each row's partition id from its " +
+      "range partition") {
+    withConf(spreadConf: _*) {
+      val one = spread(1)
+      val many = spread(300, keyShift = 1000L)
+      assert(filled(many) >= 3)
+      for ((a, b) <- Seq((one, one), (many, many), (one, many))) {
+        val got = Seq(a, b).map(df =>
+          GlobalRank.prefixSum(df, Seq("g"), Seq(col("k")), col("w"))._1)
+          .reduce(_ union _)
+        val expected = Seq(a, b).map(windowBefore(_, Seq("g"), Seq("k")))
+          .reduce(_ union _)
+        assert(got.exceptAll(expected).isEmpty &&
+          expected.exceptAll(got).isEmpty,
+          s"got ${got.collect().toSeq}\nwant ${expected.collect().toSeq}")
+      }
+    }
+  }
+
+  test("prefixSum is exact or raises, never wrong, with exchange reuse " +
+      "off, AQE off, and both") {
+    val reuseOff = "spark.sql.exchange.reuse" -> "false"
+    val aqeOff = "spark.sql.adaptive.enabled" -> "false"
+    withConf(spreadConf: _*) {
+      // over 80 rows per input partition: RangePartitioner samples them,
+      // so two unshared exchanges cut at different bounds
+      val df = spread(3000)
+      assert(filled(df) >= 3)
+      for (kvs <- Seq(Seq(reuseOff), Seq(aqeOff), Seq(reuseOff, aqeOff)))
+        withConf(kvs: _*) {
+          val equal =
+            equalOrRaised(assertWindowEqual(df, Seq("g"), Seq("k")))
+          info(s"${kvs.mkString(", ")}: ${if (equal) "equal" else "raised"}")
+          // with reuse on, the one range exchange is shared: exact
+          if (!kvs.contains(reuseOff)) assert(equal)
+        }
+    }
+  }
+
+  test("prefixSum over a localCheckpointed hash-partitioned scan is exact " +
+      "or raises") {
+    withConf(spreadConf: _*) {
+      // an aggregate checkpointed with AQE off keeps its hash partitioning
+      // (q144's value table in the AQE-off leg); RDDScanExec keeps its
+      // attribute ids in the canonical form, so the deduplicated copy on
+      // the join's build side reuses no exchange
+      val df = withConf("spark.sql.adaptive.enabled" -> "false") {
+        spread(3000).groupBy("g", "k").agg(sum("w").as("w"))
+          .localCheckpoint(true)
+      }
+      assert(df.queryExecution.executedPlan.outputPartitioning
+        .isInstanceOf[HashPartitioning])
+      assert(filled(df) >= 3)
+      for (aqe <- Seq("true", "false"))
+        withConf("spark.sql.adaptive.enabled" -> aqe) {
+          val equal =
+            equalOrRaised(assertWindowEqual(df, Seq("g"), Seq("k")))
+          info(s"AQE $aqe: ${if (equal) "equal" else "raised"}")
+        }
+    }
+  }
+
+  test("a second build of prefixSum runs 0 jobs") {
+    def build() = {
+      val (rows, totals) = GlobalRank.prefixSum(
+        Tables.orders(spark, sf).select("o_custkey", "o_orderkey"),
+        Seq("o_custkey"), Seq(col("o_orderkey")), lit(1L))
+      rows.join(broadcast(totals), "o_custkey")
+    }
+    build()
+    assert(jobsAndStagesOf(build())._1 == 0)
+  }
+
+  test("prefixSum's two passes read one range exchange, and its summary " +
+      "pass runs once for the offsets and the totals") {
+    withConf(spreadConf: _*) {
+      def q = {
+        val (rows, totals) =
+          GlobalRank.prefixSum(spread(400), Seq("g"), Seq(col("k")), col("w"))
+        rows.join(broadcast(totals), "g")
+      }
+      assert(exchangeReads(q)(
+        _.outputPartitioning.isInstanceOf[RangePartitioning]) == Seq(2))
+      assert(exchangeReads(q)(e =>
+        e.outputPartitioning.isInstanceOf[HashPartitioning] &&
+          e.child.exists(_.isInstanceOf[MapPartitionsExec])) == Seq(2))
+    }
+  }
+
+  test("no .rdd, mapPartitionsWithIndex, .cache() or .persist( under " +
+      "src/main") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val words = Seq("\\.rdd\\b".r, "mapPartitionsWithIndex".r)
+    val words = Seq("\\.rdd\\b".r, "mapPartitionsWithIndex".r,
+      "\\.cache\\(\\)".r, "\\.persist\\(".r)
     val hits = graft.ops.Nio.walk(root)
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "GlobalRank.scala")
+      .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = Files.readString(p)
         words.filter(_.findFirstIn(src).isDefined)

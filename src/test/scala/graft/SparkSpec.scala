@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -105,4 +107,20 @@ abstract class SparkSpec extends AnyFunSuite {
       drain(); (started.get(), submitted.get())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The shuffle exchanges `keep` selects in `df`'s plan, planned with AQE
+    * off: for each exchange Spark plans, how many operators read it (1,
+    * plus one per ReusedExchange of it). `df` is built inside, under the
+    * same conf.
+    */
+  def exchangeReads(df: => DataFrame)(
+      keep: ShuffleExchangeExec => Boolean): Seq[Int] =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val plan = df.queryExecution.executedPlan
+      val reused = plan.collect {
+        case ReusedExchangeExec(_, e: ShuffleExchangeExec) => e
+      }
+      plan.collect { case e: ShuffleExchangeExec if keep(e) => e }
+        .map(e => 1 + reused.count(_ eq e))
+    }
 }
