@@ -53,23 +53,24 @@ object QueriesCuration {
     * each to the largest remainders `budget·w % W`, ties to the smaller
     * `key`. Adds `alloc`, with Σ alloc = budget EXACTLY — exact BIGINT
     * arithmetic end to end. `budget` is a literal or an aggregate over
-    * `t`. `t` is small by nature (a mixing table, one row per source): its
-    * totals are broadcast back and the remainder ranking is a window over
-    * it.
+    * `t`. `t` is small by nature (a mixing table, one row per source), so
+    * one aggregate collects it into one row and the ranking is a sort of
+    * that row's array: `t` is read once, so a lazy `t` (q154's prefix-sum
+    * totals) enters the plan once.
     */
   private def largestRemainder(t: DataFrame, key: String, weight: String,
       budget: Column): DataFrame = {
-    val tot = t.agg(sum(weight).as("w_tot"), budget.as("b"))
-    val base = t.crossJoin(broadcast(tot))
-      .withColumn("alloc_base", expr(s"(b * $weight) DIV w_tot"))
-      .withColumn("rem", expr(s"(b * $weight) % w_tot"))
-    val lo = base.agg((max("b") - sum("alloc_base")).as("leftover"))
-    val wr = Window.orderBy(col("rem").desc, col(key).asc)
-    base.crossJoin(broadcast(lo))
-      .withColumn("rk", row_number().over(wr))
-      .withColumn("alloc", col("alloc_base") +
-        when(col("rk") <= col("leftover"), 1L).otherwise(0L))
-      .drop("w_tot", "b", "alloc_base", "rem", "leftover", "rk")
+    val share = s"(b * r.`$weight`)"
+    t.agg(collect_list(struct(t.columns.toSeq.map(c => col(s"`$c`")): _*))
+        .as("rs"), sum(weight).as("w_tot"), budget.as("b"))
+      // -rem first: ascending order ranks the largest remainder first
+      .select(posexplode(expr(s"""array_sort(transform(rs, r -> struct(
+          -($share % w_tot) AS nrem, r.`$key` AS k,
+          $share DIV w_tot AS base, r AS row)))""")),
+        expr(s"b - aggregate(rs, 0L, (a, r) -> a + $share DIV w_tot)")
+          .as("leftover"))
+      .select(col("col.row.*"), (col("col.base") +
+        when(col("pos") < col("leftover"), 1L).otherwise(0L)).as("alloc"))
   }
 
   /** q203's corpus stage: per-doc rendezvous argmax under 8 and 9 shards,

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType,
   StructField, StructType}
 
@@ -48,40 +49,43 @@ object GlobalRank {
     * (group, order). A run is one group's rows in one partition, keyed
     * pid·2^32 + its index there. The row pass gives each row its run and
     * its running sum in the run; the summary pass gives each run's first
-    * row and sum, which, hashed on the group, yield each run's offset and
-    * each group's total; a broadcast joins the offsets back on the run.
-    * Both passes are `mapPartitions` over every column of `sorted`, so
-    * column pruning cannot split their range exchange and Spark reuses
-    * one; the offsets and totals share the summary's exchange likewise.
+    * (group, order) key and its sum, which, hashed on the group, yield
+    * each run's offset and each group's total; a broadcast joins the
+    * offsets back on the run. Both passes are `mapPartitions` over every
+    * column of `sorted`, so column pruning cannot split their range
+    * exchange and Spark reuses one; the offsets and totals share the
+    * summary's exchange likewise. Checkpointed scans under `df` forget
+    * their partitioning and ordering first: Spark 4.1 keeps those
+    * attribute ids in a scan's canonical form, which would keep the
+    * join's two copies of the scan from sharing an exchange.
     *
-    * A run's offset is exact whenever its first full (group, order) key
-    * equals that of the summary run it joins, whatever bounds each pass
-    * cut at; a run without such a match fails the query through
-    * `raise_error`, so a missed exchange reuse is an error, never a wrong
-    * answer. Reuse is missed with `spark.sql.exchange.reuse=false`, and
-    * over a `localCheckpoint`ed scan carrying an output partitioning or
-    * ordering (a sort, or an aggregate checkpointed with AQE off), whose
-    * canonical form keeps its attribute ids in Spark 4.1. Precondition:
-    * no such scan under `df`.
+    * A run's offset is exact whenever its first key equals that of the
+    * summary run it joins, whatever bounds each pass cut at; a run
+    * without such a match fails the query through `raise_error`, so a
+    * missed exchange reuse (`spark.sql.exchange.reuse=false`) is an
+    * error, never a wrong answer.
     */
   def prefixSum(
       df: DataFrame,
       group: Seq[String],
       order: Seq[Column],
       weight: Column): (DataFrame, DataFrame) = {
-    val fields = df.schema.fields.toSeq
+    val in = PlanBridge.withoutScanLayout(df)
+    val fields = in.schema.fields.toSeq
     val n = fields.length
-    val gIdx = group.map(df.schema.fieldIndex)
+    val gIdx = group.map(in.schema.fieldIndex)
     val gCols = group.map(col)
     val key = gCols ++ order
+    // the summary carries a run's first key as __k0, __k1, ...
+    val kNames = key.indices.map(i => s"__k$i")
     def field(f: String, t: DataType = LongType) = StructField(f, t, false)
     // after the sort: a literal weight never rides the shuffle, and the id
     // is the range partition's, not a Union's task index
-    val sorted = df.repartitionByRange(key: _*).sortWithinPartitions(key: _*)
+    val sorted = in.repartitionByRange(key: _*).sortWithinPartitions(key: _*)
       .select(col("*"), weight.cast("long").as("__w"),
         spark_partition_id().as("__pid"))
     // the row pass emits every row with its run and running sum in the
-    // run; the summary pass, each run's first row and sum
+    // run; the summary pass, each run's first key and sum
     def walk(summary: Boolean)(it: Iterator[Row]): Iterator[Row] = {
       val in = it.buffered
       var run = -1L
@@ -101,48 +105,56 @@ object GlobalRank {
           while (i < n) { out(i + 2) = r.get(i); i += 1 }
           Iterator.single(new GenericRow(out): Row)
         } else if (in.hasNext && sameGroup(gIdx, head, in.head)) Iterator.empty
-        else Iterator.single(Row.fromSeq(run +: head.toSeq.take(n) :+ s))
+        else Iterator.single(
+          Row.fromSeq(run +: head.toSeq.drop(n + 2) :+ s))
       }
     }
     val rowPass = sorted.mapPartitions(walk(summary = false))(Encoders.row(
       StructType(field("__run") +: field("__head", BooleanType) +: fields :+
         field("__local"))))
-    val summaryPass = sorted.mapPartitions(walk(summary = true))(
-      Encoders.row(StructType(field("__run") +: fields :+ field("__sum"))))
+    val keyed = sorted.select(col("*") +:
+      key.zip(kNames).map { case (c, k) => c.as(k) }: _*)
+    val summaryPass = keyed.mapPartitions(walk(summary = true))(Encoders.row(
+      StructType(field("__run") +: keyed.schema.fields.drop(n + 2) :+
+        field("__sum"))))
     // per run: its offset, the group's sum through it (its total on the
     // last run, nullable as a sum() is) and whether it is the last
-    val sIdx = gIdx.map(_ + 1)
+    val kGroup = kNames.take(group.length).map(col)
+    val sIdx = group.indices.map(_ + 1)
+    val sumIdx = key.length + 1
     val runs = (if (group.isEmpty) summaryPass.repartition(1)
-        else summaryPass.repartition(gCols: _*))
-      .sortWithinPartitions(gCols :+ col("__run"): _*)
+        else summaryPass.repartition(kGroup: _*))
+      .sortWithinPartitions(kGroup :+ col("__run"): _*)
       .mapPartitions { (it: Iterator[Row]) =>
         val in = it.buffered
         var upTo = 0L
         in.map { r =>
           val off = upTo
-          upTo += r.getLong(n + 1)
+          upTo += r.getLong(sumIdx)
           val last = !in.hasNext || !sameGroup(sIdx, r, in.head)
           val out = Row.fromSeq(r.toSeq.init ++ Seq(off, upTo, last))
           if (last) upTo = 0L
           out
         }
-      }(Encoders.row(StructType(field("__run") +: fields :+ field("__off") :+
-        StructField("__upto", LongType, nullable = true) :+
-        field("__last", BooleanType))))
-    val offsets = runs.select(col("__run"), struct(key: _*).as("__fk"),
-      col("__off"))
-    // the coalesce only keeps `before` non-null in the schema
+      }(Encoders.row(StructType(summaryPass.schema.fields.init ++ Seq(
+        field("__off"), StructField("__upto", LongType, nullable = true),
+        field("__last", BooleanType)))))
+    val offsets = runs.select(("__run" +: kNames :+ "__off").map(col): _*)
+    // a run's head row must carry its summary's first key; the coalesce
+    // only keeps `before` non-null in the schema
+    val sameKey = key.zip(kNames).map { case (c, k) => c <=> col(k) }
+      .reduce(_ && _)
     val rows = rowPass.join(broadcast(offsets), Seq("__run"), "left")
       .select(fields.map(f => col(s"`${f.name}`")) :+ coalesce(
-        when(col("__off").isNull ||
-            (col("__head") && !(struct(key: _*) === col("__fk"))),
+        when(col("__off").isNull || (col("__head") && !sameKey),
           raise_error(lit("GlobalRank.prefixSum: a run has no equal summary")))
           .otherwise(col("__off") + col("__local")),
         lit(0L)).as("before"): _*)
     val lasts = runs.where(col("__last"))
     val totals =
       if (group.isEmpty) lasts.agg(sum("__upto").as("total"))
-      else lasts.select(gCols :+ col("__upto").as("total"): _*)
+      else lasts.select(kGroup.zip(group).map { case (c, g) => c.as(g) } :+
+        col("__upto").as("total"): _*)
     (rows, totals)
   }
 
@@ -164,10 +176,13 @@ object GlobalRank {
     * `v_lo + (pos−lo)·(v_hi−v_lo)` mismatched 2 512 of them, so the FORM
     * is load-bearing — do not "simplify" it). Returns
     * `(g string, q double, pct double)` — one row per group × percentage.
-    * Results are hash-identical to Spark's single-reducer aggregate except
-    * when v_lo == v_hi: the exact value is returned there, as DuckDB
-    * does, where the weighted form can land 1 ulp low (see the in-line
-    * note).
+    * One strengthening over Spark's form: when v_lo == v_hi the exact
+    * value is returned directly instead of through the weighted form,
+    * which can land 1 ulp low — see the in-line note. Results are
+    * hash-identical to the single-reducer aggregate they replace EXCEPT
+    * in that v_lo == v_hi case, where the exact value is returned instead
+    * of Percentile's occasionally-1-ulp-low weighted result (matching
+    * DuckDB, which also returns the exact value there).
     *
     * Cost at scale: one [[prefixSum]] — one full shuffle of narrow
     * (group, value, weight 1) rows, two reduce passes over it and tiny
@@ -245,11 +260,13 @@ object GlobalRank {
       value: Column,
       weight: Column,
       qPpms: Seq[Int]): DataFrame = {
-    // weight-k rows behave exactly like k repeated rows (spec-pinned), so
-    // equal (g, v) rows collapse to one, summing their weights, before the
-    // range exchange: a map-side-combinable agg that bounded value domains
-    // (q202's doc lengths) contract a lot; near-unique values belong in
-    // exactPercentiles.
+    // r16 (guide §2.3): weight-k rows behave exactly like k repeated rows
+    // (spec-pinned), so equal (g, v) rows collapse to one row summing the
+    // weights before the range exchange — a map-side-combinable agg; the
+    // cumulative-weight threshold test is unchanged on the contracted
+    // table (callers pass bounded value domains — q202's doc lengths —
+    // where the contraction is large; for near-unique values use
+    // exactPercentiles' per-row machinery instead).
     val (rows, totals) = prefixSum(
       df.select(group.cast("string").as("g"), value.cast("double").as("v"),
           weight.cast("long").as("w"))

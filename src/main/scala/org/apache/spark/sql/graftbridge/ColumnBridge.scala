@@ -9,10 +9,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4's `Column` wraps a ColumnNode (the Connect-era refactor), so
   * a library can no longer construct `new Column(expr)`; the sanctioned
   * conversion lives in `org.apache.spark.sql.classic.ExpressionUtils`,
-  * which is `private[sql]`. This one-file subpackage of
-  * `org.apache.spark.sql` re-exposes exactly the two conversions —
-  * the same pattern every Spark extension library uses for classic-mode
-  * expression columns. Nothing else of Spark's internals is touched.
+  * which is `private[sql]`. This subpackage of `org.apache.spark.sql`
+  * re-exposes exactly the two conversions — the same pattern every Spark
+  * extension library uses for classic-mode expression columns. Its one
+  * other use of Spark's internals is [[PlanBridge]].
   * Calling a registered function by name instead would need a live
   * SparkSession, which pure `Column => Column` scalar helpers
   * (graft.ops.Scalars) don't have, and would make building a query

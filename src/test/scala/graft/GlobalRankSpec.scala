@@ -303,26 +303,32 @@ class GlobalRankSpec extends SparkSpec {
     }
   }
 
-  test("prefixSum over a localCheckpointed hash-partitioned scan is exact " +
-      "or raises") {
+  test("prefixSum over a localCheckpointed scan with an output " +
+      "partitioning or ordering is exact and reads one range exchange") {
     withConf(spreadConf: _*) {
-      // an aggregate checkpointed with AQE off keeps its hash partitioning
-      // (q144's value table in the AQE-off leg); RDDScanExec keeps its
-      // attribute ids in the canonical form, so the deduplicated copy on
-      // the join's build side reuses no exchange
-      val df = withConf("spark.sql.adaptive.enabled" -> "false") {
-        spread(3000).groupBy("g", "k").agg(sum("w").as("w"))
-          .localCheckpoint(true)
+      // checkpointed with AQE off, an aggregate keeps its hash partitioning
+      // (q144's value table in the AQE-off leg) and a sort its range
+      // partitioning and ordering; RDDScanExec keeps their attribute ids
+      // in its canonical form
+      val (hashed, ordered) =
+        withConf("spark.sql.adaptive.enabled" -> "false") {
+        (spread(3000).groupBy("g", "k").agg(sum("w").as("w"))
+          .localCheckpoint(true),
+          spread(3000).orderBy("g", "k").localCheckpoint(true))
       }
-      assert(df.queryExecution.executedPlan.outputPartitioning
+      assert(hashed.queryExecution.executedPlan.outputPartitioning
         .isInstanceOf[HashPartitioning])
-      assert(filled(df) >= 3)
-      for (aqe <- Seq("true", "false"))
-        withConf("spark.sql.adaptive.enabled" -> aqe) {
-          val equal =
-            equalOrRaised(assertWindowEqual(df, Seq("g"), Seq("k")))
-          info(s"AQE $aqe: ${if (equal) "equal" else "raised"}")
-        }
+      assert(ordered.queryExecution.executedPlan.outputOrdering.nonEmpty)
+      for (df <- Seq(hashed, ordered)) {
+        assert(filled(df) >= 3)
+        for (aqe <- Seq("true", "false"))
+          withConf("spark.sql.adaptive.enabled" -> aqe) {
+            assertWindowEqual(df, Seq("g"), Seq("k"))
+          }
+        assert(exchangeReads(
+          GlobalRank.prefixSum(df, Seq("g"), Seq(col("k")), col("w"))._1)(
+          _.outputPartitioning.isInstanceOf[RangePartitioning]) == Seq(2))
+      }
     }
   }
 

@@ -223,7 +223,6 @@ class PlanSpec extends SparkSpec {
   test("q23 running total: one range exchange over the order rows, none " +
     "between the Window and the output, and the rows come out ordered") {
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
       AdaptiveSparkPlanHelper, QueryStageExec}
@@ -407,18 +406,13 @@ import org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL
     // is a plain tree, so generic traversal sees every WindowExec.
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     import org.apache.spark.sql.execution.{TakeOrderedAndProjectExec,
-      GlobalLimitExec, MapPartitionsExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      GlobalLimitExec}
     // An un-partitioned window is legal ONLY when its input is
     // structurally bounded — proven in the plan itself: a limit operator
     // (TakeOrderedAndProject / GlobalLimit) below the window caps the rows
     // the single task sees (q134's rank-the-top-20 windows), or the window
     // reads a materialized checkpoint (Scan ExistingRDD) of a by-nature
-    // tiny table (q137's remainder ranking over the sources-cardinality
-    // mixing table — human-curated cardinality, never corpus-sized), or
-    // `GlobalRank.prefixSum`'s totals, one row per group: its pass over
-    // the hash-exchanged run summaries.
+    // tiny table (q142's cumulative yield over an 11-row bin table).
     // r17 audit (VERDICT r16 #5): beyond the structural-boundedness rule,
     // ENUMERATE every query that plans an un-partitioned window and PIN
     // the set — a new fact-row-sized offender now fails this test by
@@ -430,33 +424,23 @@ import org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL
     // their definition sites):
     //   q134_rrf_hybrid (2): rank fusion over TakeOrdered top-20 lists —
     //     limit-bounded.
-    //   q137_mix_allocation (1): largest-remainder ranking over the
-    //     checkpointed sources-cardinality mixing table (RDD scan of a
-    //     human-curated-size table; the precedent the gate names).
     //   q142_quality_yield (1): cumulative yield over the checkpointed
     //     11-row bin table (q_fp DIV 100000 ∈ 0..10) — k-sized RDD scan.
     //   q145_dedup_threshold_sweep (1): cumulative sweep over the
     //     checkpointed 21-row threshold-bin table (sim_ppm DIV 50000).
-    //   q154_budget_materialize (1): largest-remainder apportionment rank
-    //     over prefixSum's per-source totals (q137's pattern).
-    // Every other registered query (243/248) plans zero un-partitioned
+    // q137 and q154 ranked their largest remainders with such a window
+    // until that ranking became a sort of the one collected row.
+    // Every other registered query (245/248) plans zero un-partitioned
     // windows; fact-row-sized offenders: none.
     val pinned = Map(
       "q134_rrf_hybrid" -> 2,
-      "q137_mix_allocation" -> 1,
       "q142_quality_yield" -> 1,
-      "q145_dedup_threshold_sweep" -> 1,
-      "q154_budget_materialize" -> 1)
+      "q145_dedup_threshold_sweep" -> 1)
     def boundedInput(w: WindowExec): Boolean =
       w.child.collectFirst {
         case l: TakeOrderedAndProjectExec => l: Any
         case l: GlobalLimitExec => l: Any
         case r if r.getClass.getSimpleName == "RDDScanExec" => r: Any
-        case m: MapPartitionsExec
-            if m.func.getClass.getName.startsWith("graft.ops.GlobalRank") &&
-              m.child.collectFirst { case e: ShuffleExchangeExec => e }
-                .exists(_.outputPartitioning.isInstanceOf[HashPartitioning]) =>
-          m: Any
       }.nonEmpty
     val found = scala.collection.mutable.LinkedHashMap[String, Int]()
     Queries.all.foreach { q =>
