@@ -120,7 +120,7 @@ object Profile {
     * bus delivers it (its executedPlan is then the final AQE plan with
     * metrics). `df.queryExecution` would be the un-executed initial plan:
     * the write runs its own QueryExecution. Warm-up writes, earlier runs
-    * and every eager `localCheckpoint` inside `build` also fire
+    * and every `Materialize.cut` inside `build` also fire
     * QueryExecutionListener events, so the write's event is matched by its
     * name and by its QueryExecution being created after `df`'s (ids are
     * issued in creation order), never as "the latest plan seen".

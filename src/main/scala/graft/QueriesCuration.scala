@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{GlobalRank, Scalars}
+import graft.ops.{GlobalRank, Materialize, Scalars}
 
 /** Training-data pipeline tier III — dataset CURATION operators (round 3):
   * the steps between "deduped corpus" and "training shards" that every
@@ -205,7 +205,7 @@ object QueriesCuration {
     Q("q203_rendezvous_shard",
       (s, d) => {
         val pairs = rendezvousPairs(documents(s, d))
-          .localCheckpoint(true) // <= 81 rows, read by both shard views
+          .transform(Materialize.cut) // the views' joins infer distinct filters
         val d8 = pairs.groupBy(col("s8").as("shard"))
           .agg(sum("c").as("docs_8"))
         val d9 = pairs.groupBy(col("s9").as("shard"))
@@ -438,15 +438,10 @@ object QueriesCuration {
     // that same tiny table. The corpus is scanned once, for the counts.
     Q("q137_mix_allocation",
       (s, d) => {
-        // the sources-sized weight table is materialized ONCE
-        // (localCheckpoint = the production write of the mixing table):
-        // totals, quotients, and the remainder ranking all derive from it,
-        // so the corpus is scanned exactly once, for the counts.
         val counts = documents(s, d)
           .groupBy("source").agg(count(lit(1)).as("n_docs"))
           .withColumn("w_fp",
             floor(lit(1e6) * sqrt(col("n_docs").cast("double"))))
-          .localCheckpoint(true)
         largestRemainder(counts, "source", "w_fp", lit(100000L))
           .select("source", "n_docs", "w_fp", "alloc")
           .orderBy("source")
@@ -594,8 +589,8 @@ object QueriesCuration {
     // point of importance resampling over a plain source filter.
     // Scale shape (q136's read-once discipline): the corpus token stream
     // is exploded ONCE into per-(doc, bucket) counts (partial map-side
-    // combine; ≤4096 distinct buckets per doc) and materialized
-    // (localCheckpoint = the production parquet write); BOTH distribution
+    // combine; ≤4096 distinct buckets per doc), whose exchange is read
+    // by both consumers (ReusedExchange, plan-gated); BOTH distribution
     // marginals reduce from that table (4096-row output), the ratio table
     // re-joins BROADCAST, and the top-k is TakeOrdered — never a global
     // sort. At 100 TB: one corpus scan, one doc-sized exchange, 4 KB of
@@ -615,7 +610,6 @@ object QueriesCuration {
             pmod(Scalars.tokenHash(col("bg")), lit(4096L)).as("bucket"))
         val db = bg.groupBy("doc_id", "source", "bucket")
           .agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)
         val ratio = db.groupBy("bucket")
           .agg(sum("n").as("cnt_r"),
             sum(when(col("source") === "src0", col("n")).otherwise(0L))
@@ -710,10 +704,9 @@ object QueriesCuration {
     // trade-off curve — "cut at 0.5 keeps 62% of tokens" — read directly
     // off the result.
     // Scale shape: score + bin are map-side; one partial+final agg to ~10
-    // bins; the bin table is MATERIALIZED (localCheckpoint = the
-    // production write of the sweep table, q137's precedent) so the
-    // cumulative windows provably run over the constant-size aggregate,
-    // never over docs.
+    // bins; the bin table is cut so the un-partitioned cumulative
+    // windows provably read a bin-sized scan (PlanSpec's window gate),
+    // never docs.
     Q("q142_quality_yield",
       (s, d) => {
         // fanOut: the quality fingerprint's regexp_replace over full text
@@ -732,7 +725,7 @@ object QueriesCuration {
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         qd.groupBy("bin")
           .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("bin_tok"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
           .withColumn("thr_ppm", (col("bin") * 100000L).cast("long"))
           .withColumn("cum_docs", sum("n_docs").over(wCum))
           .withColumn("cum_tok", sum("bin_tok").over(wCum))
@@ -839,13 +832,13 @@ object QueriesCuration {
     // the products are n_sb·n ≤ n², fine to ~3·10^9 docs/source — chunk
     // the audit per shard family beyond that).
     // Scale shape: ONE corpus scan, map-side bucket, one partial+final agg
-    // to the (source × bucket)-bounded cell table, MATERIALIZED (q137's
-    // localCheckpoint precedent = the production write of the drift table);
+    // to the (source × bucket)-bounded cell table, cut: the grid's
+    // joins infer distinct filters, so its consumers share no exchange;
     // every marginal and the TVD arithmetic run over that constant-size
     // table — sources×buckets rows — never over docs.
     Q("q148_drift_audit",
       (s, d) => driftFromCells(
-        lengthCells(documents(s, d)).localCheckpoint(true)),
+        lengthCells(documents(s, d)).transform(Materialize.cut)),
       Some("""WITH cells AS (
              |  SELECT source,
              |    least(CAST(len(str_split(text, ' ')) AS BIGINT) // 8, 24)
@@ -1408,12 +1401,11 @@ object QueriesCuration {
     // concentrates on one reducer.
     Q("q163_winsorized_mean",
       (s, d) => {
-        // materialized ONCE (the q136/q160 localCheckpoint precedent):
-        // both the percentile pass and the clamp pass read the narrow
-        // 2-column table — corpus text is scanned and split once.
+        // cut: the percentile and clamp passes share no exchange below
+        // it, so the lazy plan splits the corpus text twice
         val toks = documents(s, d).select(col("source"),
           size(split(col("text"), " ")).cast("long").as("ntok"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val bounds = GlobalRank.exactPercentiles(
             toks, col("source"), col("ntok"), Seq(0.05, 0.95))
           .groupBy(col("g").as("source"))
@@ -1476,12 +1468,13 @@ object QueriesCuration {
     // window, never a global-order single-reducer window), and their
     // totals are n_s and N; the value lookup is an equi-join on the
     // 8-byte target rank; n_s / N ride broadcasts. The corpus text is
-    // scanned once into the localCheckpointed narrow token table.
+    // scanned once into the cut narrow token table.
     Q("q175_quantile_normalize",
       (s, d) => {
+        // cut: as in q163
         val toks = documents(s, d).select(col("source"), col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("ntok"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val order = Seq(col("ntok"), col("doc_id"))
         val (rk, ns) =
           GlobalRank.prefixSum(toks, Seq("source"), order, lit(1L))
@@ -1739,7 +1732,7 @@ object QueriesCuration {
     // downstream runs on sources×31 cells.
     Q("q207_chi2_drift",
       (s, d) => chi2FromCounts(
-        sourceTokenCounts(documents(s, d)).localCheckpoint(true)),
+        sourceTokenCounts(documents(s, d)).transform(Materialize.cut)),
       Some(s"""WITH toks AS (
              |  SELECT source, unnest(str_split(text, ' ')) AS tok
              |  FROM documents),
@@ -2026,7 +2019,6 @@ object QueriesCuration {
           .agg(count(lit(1)).as("n_docs"))
           .withColumn("isq",
             floor(sqrt(col("n_docs").cast("double")) * 1000).cast("long"))
-          .localCheckpoint(true) // read twice: totals + the ratio rows
         val tot = nl.agg(sum("n_docs").as("n"), sum("isq").as("s_isq"))
         nl.crossJoin(broadcast(tot))
           .select(col("lang"), col("n_docs"),
@@ -2247,7 +2239,7 @@ object QueriesCuration {
   private[graft] def chi2FromCounts(
       tok: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val corpus = tok.groupBy("th").agg(sum("c").as("ct"))
-      .localCheckpoint(true) // read twice: probe mining + grand total
+      .transform(Materialize.cut)
     val tt = corpus.agg(sum("ct").as("t"))
     // exactness window: every 1e6·count product in this audit is bounded
     // by 1e6·t, so ONE guard on the grand total covers them all — t must

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Advanced OLAP tier — grouping sets, pivot, statistical and positional
   * aggregates, the full window-function family, and subquery forms. These
@@ -614,11 +614,9 @@ object QueriesOlap {
             .cast("long").as("a_fp"),
           expr("(1000000L * size(array_distinct(split(text, ' ')))) " +
             "DIV size(split(text, ' '))").as("b_fp"))
-          // materialized ONCE (localCheckpoint stands in for the
-          // production parquet write, the q136 precedent): both rank
-          // passes read the narrow 4-column signal table — the corpus
-          // text is scanned and the regexes run exactly once.
-          .localCheckpoint(true)
+          // cut: the two rank passes share no exchange below this table,
+          // so the lazy plan scans the corpus and runs the regexes twice
+          .transform(Materialize.cut)
         def ranked(sig: String, rk: String) =
           graft.ops.GlobalRank.prefixSum(sigs.select("source", "doc_id", sig),
               Seq("source"), Seq(col(sig), col("doc_id")), lit(1L))._1

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Training-data pipeline tier II — SURVEY.md §2.11 extension beyond the
   * first wave (QueriesText): order-sensitive content fingerprints, blocked
@@ -266,7 +266,7 @@ object QueriesPipeline {
     // DuckDB HUGEINT `//` — both exact integral division on the
     // non-negative domain; 38 digits holds any corpus this engine
     // will ever see). Scale shape: one gram window pass (q72's
-    // machinery) into a (ha, hb) partial+final agg, localCheckpointed
+    // machinery) into a (ha, hb) partial+final agg, cut
     // ONCE (it is read 4×: both marginals, the total, the join);
     // marginals and N are PAIR-TABLE aggs, never corpus scans; the
     // report reduces via TakeOrdered.
@@ -284,7 +284,7 @@ object QueriesPipeline {
             concat_ws(" ", col("p.tok"), col("p.nxt")).as("gram"))
         val cab = pairs.groupBy("ha", "hb")
           .agg(count(lit(1)).as("cab"), min("gram").as("gram"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val ca = cab.groupBy("ha").agg(sum("cab").as("ca"))
         val cb = cab.groupBy("hb").agg(sum("cab").as("cb"))
         val n = cab.agg(sum("cab").as("n_total"))

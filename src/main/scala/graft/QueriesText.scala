@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Extension tier — SURVEY.md §2.11 / BASELINE.json north star: the
   * operations a large-scale training-data pipeline needs, designed for
@@ -52,7 +52,7 @@ object QueriesText {
       .repartition(col("vec_id"))
 
   /** q119's candidate stage, extracted so PlanSpec can gate its join shape
-    * (the closure's internal checkpoint truncates lineage, hiding this
+    * (the closure's internal cut truncates lineage, hiding this
     * plan from the declared query's executedPlan): cosine-τ edges over the
     * (coarse IVF cell × 4-bit sign sub-bucket) composite block.
     */
@@ -62,14 +62,13 @@ object QueriesText {
       when(element_at(col("embedding"), j + 1) > 0f, lit(1 << j))
         .otherwise(0)
     }.reduce(_ + _)
-    // r16: materialize the blocked table once — exchange reuse does not
-    // fire across the aliased self-join sides, so the assign stage
-    // (centroid scoring + argmax window) otherwise ran on BOTH sides
+    // cut: the aliased self-join sides share no exchange, so the assign
+    // stage (centroid scoring + argmax window) would run on both
     val blocked = AnnIndexPipeline
       .assign(e, AnnIndexPipeline.centroids(e))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("cell"), sub.as("sub"))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val x = blocked.select(col("vec_id").as("a_id"),
       col("embedding").as("a_e"), col("nrm").as("a_n"),
       col("cell"), col("sub"))
@@ -155,14 +154,10 @@ object QueriesText {
     * plain longs per doc, never the shingle+md5 pipeline.
     */
   private[graft] def bandPairs(docs: DataFrame): DataFrame =
-    // r16: materialize the band index before the aliased self-join —
-    // once AQE broadcasts one side, the sides' subtrees differ (broadcast
-    // vs shuffle exchange) and NO exchange/stage reuse can fire, so the
-    // whole shingle+signature pipeline ran TWICE (verified on q53's
-    // executed plan: two parquet scans, two Generate+agg chains). The
-    // checkpoint is doc-sized (2 band keys per doc) and is exactly the
-    // table the incremental pipeline persists anyway.
-    bandPairsFrom(bandKeys(docs).localCheckpoint(true))
+    // cut: once AQE broadcasts one side of the aliased self-join, the
+    // sides share no exchange and the signature pipeline would run twice;
+    // the cut is the doc-sized band table the incremental pipeline keeps
+    bandPairsFrom(bandKeys(docs).transform(Materialize.cut))
 
   /** The candidate self-join over an EXISTING `(doc_id, band_key)` table —
     * shared by the from-scratch path ([[bandPairs]]) and consumers of the
@@ -193,10 +188,8 @@ object QueriesText {
     val docNode = withH.join(nodeOf, "h").select("doc_id", "node")
     val nodeBands = bandKeys(documents(s, d)).join(docNode, "doc_id")
       .select(col("node").as("doc_id"), col("band_key")).distinct()
-      // materialized for the same reason as [[bandPairs]] (r16): the
-      // aliased self-join sides cannot share stages once one side
-      // broadcasts, so the contraction pipeline ran twice
-      .localCheckpoint(true)
+      // cut: as in [[bandPairs]]
+      .transform(Materialize.cut)
     bandPairsFrom(nodeBands)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Text-analysis family (SURVEY.md §2.11 X4–X8/X20/X21/X36/X37/X40/
   X48/X50/X56/X65/X73/X81): stats, language id, quality scoring, token
@@ -356,16 +356,9 @@ object QueriesTextAnalysis {
     // corpus is scanned and shuffled exactly once.
     Q("q136_vocab_coverage",
       (s, d) => {
-        // (source, tok) counts materialized ONCE (localCheckpoint stands in
-        // for the production parquet write of the aggregate, as in
-        // q137's mixing table): both the vocab fit and the coverage probe
-        // read the vocab×sources-sized table — the corpus token stream is
-        // exploded and aggregated exactly once (plan-gated: the declared
-        // plan contains no second corpus explode).
         val st = documents(s, d)
           .select(col("source"), explode(split(col("text"), " ")).as("tok"))
           .groupBy("source", "tok").agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)
         val vocab = st.groupBy("tok").agg(sum("n").as("freq"))
           .orderBy(col("freq").desc, col("tok").asc).limit(64)
           .select(col("tok"), lit(1).as("iv"))
@@ -491,14 +484,11 @@ object QueriesTextAnalysis {
         val scored = bigramDocScores(s, d)
           .withColumn("avg_fp", expr("score_fp DIV n_bigrams"))
           .join(documents(s, d).select("doc_id", "lang"), "doc_id")
-        // materialized ONCE (localCheckpoint = the production write of the
-        // per-language score-distribution table): the prefix sum's bounds
-        // sampling and its map stage both read this value table — the
-        // corpus is scored exactly once. Cardinality is value-space-bounded
-        // (≤ distinct avg_fp values), never corpus-sized.
+        // cut: the prefix sum's passes share no exchange below the value
+        // table, so the lazy plan scores the corpus three times
         val byVal = scored.groupBy("lang", "avg_fp")
           .agg(count(lit(1)).as("n_v"), sum("n_bigrams").as("vol"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val (rows, totals) = graft.ops.GlobalRank.prefixSum(
           byVal, Seq("lang"), Seq(-col("avg_fp")), col("n_v"))
         rows.withColumnRenamed("before", "n_before")
@@ -730,8 +720,8 @@ object QueriesTextAnalysis {
     // tiebreak), then every document containing it is reported with its
     // per-document occurrence count. Both stages consume ONE stride-1
     // per-doc trigram stream (q150's lead-window machinery) built over
-    // DISTINCT CONTENT and localCheckpointed once; verbatim copies get
-    // their counts back through the content-hash fan-out join (the
+    // DISTINCT CONTENT and cut once (it ends in no exchange); verbatim
+    // copies get their counts back through the content-hash fan-out join (the
     // copy-invariant rule — at sf1 the stream is 10× smaller than the
     // corpus). All aggregation keys are the 8-byte md5 token hash (the
     // gram text rides as a min() measure); the match is a 1-row
@@ -751,7 +741,7 @@ object QueriesTextAnalysis {
           .filter(size(col("t")) >= 3)
           .select(col("h"), explode(Scalars.kgrams("t", 3)).as("gram"))
           .withColumn("g", Scalars.tokenHash(col("gram")) % P)
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val top = grams.groupBy("g")
           .agg(count(lit(1)).as("n_occ"), min("gram").as("gram"))
           .orderBy(col("n_occ").desc, col("gram").asc).limit(1)
@@ -940,8 +930,8 @@ object QueriesTextAnalysis {
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(length(col("word")) >= 1)
           .groupBy("word").agg(count(lit(1)).as("freq"))
-          .localCheckpoint(true) // read by the merge miner AND round 0
-        val merges = bpeMineMerges(words, 8).localCheckpoint(true)
+          .transform(Materialize.cut)
+        val merges = bpeMineMerges(words, 8).transform(Materialize.cut)
         var syms = words
           .select(col("word"), col("freq"),
             posexplode(expr(
@@ -951,7 +941,7 @@ object QueriesTextAnalysis {
           syms = bpeRound(syms, bpeMergeRow(merges, r))
         // one cut after the chain (lineage truncation; also the one
         // materialization the stats pass below re-reads)
-        syms = syms.localCheckpoint(true)
+        syms = syms.transform(Materialize.cut)
         // rank-r merge tokens as one broadcast row ('' when rank absent,
         // exactly bpeMergeRow's sentinel-degenerate mtok)
         val mtokCols = (1 to 8).map(r => coalesce(max(when(col("rk") === r,
@@ -1022,10 +1012,10 @@ object QueriesTextAnalysis {
           .select(col("lang"), explode(split(col("text"), " ")).as("word"))
           .filter(length(col("word")) >= 1)
           .groupBy("lang", "word").agg(count(lit(1)).as("freq"))
-          .localCheckpoint(true) // read twice: word rollup + lang rollup
+          .transform(Materialize.cut)
         val words = wl.groupBy("word").agg(sum("freq").as("freq"))
-          .localCheckpoint(true) // read by the miner AND round 0
-        val merges = bpeMineMerges(words, 8).localCheckpoint(true)
+          .transform(Materialize.cut)
+        val merges = bpeMineMerges(words, 8).transform(Materialize.cut)
         var syms = words
           .select(col("word"), col("freq"),
             posexplode(expr(
@@ -1036,12 +1026,12 @@ object QueriesTextAnalysis {
         // round is read exactly once by the next — so the 8 rounds fuse
         // into ONE job of chained word-partitioned windows on a single
         // exchange (8 eager materializations gone; guide §1.2 "remove
-        // passes", §2.4 shared partitioning). One checkpoint after the
+        // passes", §2.4 shared partitioning). One cut after the
         // last round keeps the declared rollup plan window-free (the
         // PlanSpec gate) and cuts the 16-window lineage before the join.
         for (r <- 1 to 8)
           syms = bpeRound(syms, bpeMergeRow(merges, r))
-        syms = syms.localCheckpoint(true)
+        syms = syms.transform(Materialize.cut)
         val nt = syms.groupBy("word").agg(count(lit(1)).as("nt"))
         wl.join(nt, "word")
           .groupBy("lang")

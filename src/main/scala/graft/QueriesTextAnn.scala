@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Similarity-search / retrieval family (SURVEY.md §2.11 X3/X26/X29/
   X30/X31/X35/X47/X69/X74/X79): brute-force cosine, LSH buckets, IVF,
@@ -529,7 +529,6 @@ object QueriesTextAnn {
             floor(col("e").cast("double") * 1000).cast("long").as("qv"))
           .groupBy("label", "dim")
           .agg(sum(col("qv").cast("decimal(38,0)")).as("sv"))
-          .localCheckpoint(true)
         val n2 = sums.groupBy("label")
           .agg(sum(col("sv") * col("sv")).as("nn"))
         val ratio = (lit(1e6) *
@@ -734,7 +733,7 @@ object QueriesTextAnn {
     // corpus (the only corpus-proportional stage); each round is ONE
     // narrow broadcast (the single new center) + a map-side least() +
     // a TakeOrdered(1) — never a pairwise join, never a corpus shuffle —
-    // cut by eager localCheckpoint (the q196/q201 iterative idiom, flat
+    // cut by Materialize.cut (the q196/q201 iterative idiom, flat
     // lineage at any k). At 100 TB the candidate set is the cluster-
     // representative table (X25), not raw vectors — same code path.
     Q("q208_kcenter_diverse",
@@ -744,7 +743,7 @@ object QueriesTextAnn {
           .agg(min("vec_id").as("rep_id"), count(lit(1)).as("n_dup"))
           .select(col("rep_id"), col("n_dup"), col("embedding"),
             QueriesText.norm(col("embedding")).as("nrm"))
-          .localCheckpoint(true) // read twice: seed pick + round-0 state
+          .transform(Materialize.cut)
         val seed = base.orderBy(col("rep_id").asc).limit(1)
           .select(col("rep_id").as("c_id"), col("embedding").as("c_emb"),
             col("nrm").as("c_nrm"), col("n_dup").as("c_dup"))
@@ -756,7 +755,7 @@ object QueriesTextAnn {
             col("nrm"),
             when(col("rep_id") === col("c_id"), lit(-1.0))
               .otherwise(distToC).as("md"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         var out = seed.select(lit(0).as("round"),
           col("c_id").as("rep_id"), col("c_dup").as("n_dup"),
           lit(0.0).as("sep"))
@@ -766,7 +765,7 @@ object QueriesTextAnn {
             .select(col("rep_id").as("c_id"), col("embedding")
               .as("c_emb"), col("nrm").as("c_nrm"),
               col("n_dup").as("c_dup"), col("md").as("c_md"))
-            .localCheckpoint(true) // read twice: report row + state fold
+            .transform(Materialize.cut)
           out = out.union(pick.select(lit(r).as("round"),
             col("c_id").as("rep_id"), col("c_dup").as("n_dup"),
             Scalars.roundAt(col("c_md"), 6).as("sep")))
@@ -775,7 +774,7 @@ object QueriesTextAnn {
               col("nrm"),
               when(col("rep_id") === col("c_id"), lit(-1.0))
                 .otherwise(least(col("md"), distToC)).as("md"))
-            .localCheckpoint(true)
+            .transform(Materialize.cut)
         }
         out.orderBy("round")
       },

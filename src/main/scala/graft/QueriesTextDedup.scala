@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Dedup family of the text extension tier (SURVEY.md §2.11 X1/X2/X18/
   X27/X46/X51/X57/X58/X60/X61/X62/X64/X68/X75): exact, MinHash/LSH,
@@ -521,7 +521,7 @@ object QueriesTextDedup {
           .select(col("bin"),
             coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
             coalesce(col("n_docs"), lit(0L)).as("n_docs"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val wCum = Window.orderBy(col("bin").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         bins
@@ -609,9 +609,8 @@ object QueriesTextDedup {
         // the DIAGONAL (src_a = src_b), whose count per source is exactly
         // that source's distinct-shingle total — so intersection counts
         // AND set sizes come out of a single sources²-bounded aggregate,
-        // materialized once (localCheckpoint = the production write of
-        // the overlap matrix, q137's precedent); the corpus is provably
-        // scanned once (the declared plan carries no file scan at all).
+        // cut once (the production write of the overlap matrix); the
+        // declared plan carries no file scan at all.
         // 3-shingles built MAP-SIDE (slice-transform, the q87 idiom; the
         // lead-window form paid an exchange+sort of the exploded token
         // stream — guide §2.4); identical shingle set
@@ -627,7 +626,7 @@ object QueriesTextDedup {
           .select(col("src_a"), explode(col("ss")).as("src_b"))
           .filter(col("src_a") <= col("src_b"))
           .groupBy("src_a", "src_b").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val sz = mat.filter(col("src_a") === col("src_b"))
         mat.filter(col("src_a") < col("src_b"))
           .withColumnRenamed("cnt", "inter")
@@ -691,14 +690,13 @@ object QueriesTextDedup {
         // r17 (guide §1.2/§2.4): sha2 over the full text used to be
         // recomputed on THREE separate single-task scans (the doc→content
         // tag for each pair side plus the representative pass) — one
-        // fanned-out narrow (doc_id, ch) checkpoint computes it once,
-        // in parallel. Representative-per-content = min(doc_id), an
+        // fanned-out narrow (doc_id, ch) projection computes it in
+        // parallel. Representative-per-content = min(doc_id), an
         // aggregate instead of the rn=1 window (same doc: ties are exact
         // duplicates of the text anyway); its text is fetched by ONE
         // broadcast join against the corpus scan.
         val ids = fanOutOver(documents(s, d))
           .select(col("doc_id"), sha2(col("text"), 256).as("ch"))
-          .localCheckpoint(true)
         val pairs = bandPairsFrom(
           graft.pipelines.DedupPipeline.cachedFold(s, d).bands)
         val withA = ids
@@ -723,7 +721,7 @@ object QueriesTextDedup {
           .select(col("ch"),
             (Scalars.tokenHash(col("sh")) % P).as("h"))
           .distinct()
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val sz = sh.groupBy("ch").agg(count(lit(1)).as("n"))
         val cp = ab.filter(col("ca") =!= col("cb"))
           .select("ca", "cb").distinct()
@@ -837,9 +835,8 @@ object QueriesTextDedup {
           .withColumn("df", count(lit(1)).over(wfp))
           .filter(col("df") >= 2 && col("df") <= 8)
           .select("doc_id", "fp")
-        // (r16 note: like q174, this fp-keyed self-join keeps both sides
-        // as shuffle exchanges where reuse fires — a tried localCheckpoint
-        // was measurably neutral-to-worse and was reverted.)
+        // no cut here: as in q174, both sides of this fp-keyed self-join
+        // stay shuffle exchanges, where reuse fires
         shared.select(col("doc_id").as("a_id"), col("fp"))
           .join(shared.select(col("doc_id").as("b_id"), col("fp")),
             Seq("fp"))
@@ -975,12 +972,9 @@ object QueriesTextDedup {
           .filter(size(col("t")) >= 5)
           .select(col("doc_id"), explode(Scalars.kgrams("t", 5)).as("gram"))
           .withColumn("g", Scalars.tokenHash(col("gram")) % P)
-        // the map-side gram build carries no reusable exchange, so the
-        // two consumers below would each recompute the explode; ONE
-        // materialization serves both (measured best of three forms:
-        // the old lead-window build sorted the token stream, and a fused
-        // (g, doc) pre-agg shipped gram strings at (g, doc) grain)
-        val gramsM = grams.localCheckpoint(true)
+        // cut: the map-side gram build ends in no exchange, so the two
+        // consumers below would each recompute the explode
+        val gramsM = grams.transform(Materialize.cut)
         val occ = gramsM.groupBy("g")
           .agg(count(lit(1)).as("n_occ"), min("gram").as("gram"))
         val df = gramsM.select("g", "doc_id").distinct()
@@ -1033,8 +1027,8 @@ object QueriesTextDedup {
     // Scale shape: labels come from the PERSISTED dedup index
     // (DedupPipeline.cachedFold — the q115/q128/q135 maintained-artifact
     // contract, no closure rebuild); the doc features + labels join are
-    // materialized ONCE (localCheckpoint = the production write, q137
-    // precedent) and each policy is then ONE partial+final agg per
+    // cut once (the production write of the labeled table) and each
+    // policy is then ONE partial+final agg per
     // cluster using max(struct(...)) — the argmax-by-ordered-tuple form:
     // associative, map-side combinable, no per-cluster window, no
     // pairwise anything. Three cluster-sized aggs + a 3-row union.
@@ -1052,7 +1046,7 @@ object QueriesTextDedup {
           .join(labels.select(col("v").as("doc_id"), col("component")),
             Seq("doc_id"), "left")
           .withColumn("cluster", coalesce(col("component"), col("doc_id")))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         def pick(policy: String, o1: Column, o2: Column) =
           labeled.groupBy("cluster")
             .agg(max(struct(o1.as("o1"), o2.as("o2"),
@@ -1135,7 +1129,7 @@ object QueriesTextDedup {
         val sets = fanOut(base)
           .select(col("id"),
             Scalars.shingles3Text(col("text")).as("sh"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val post = sets.select(col("id"), size(col("sh")).as("n"),
           explode(col("sh")).as("tok"))
         val dfreq = post.groupBy("tok").agg(count(lit(1)).as("dfreq"))
@@ -1144,11 +1138,8 @@ object QueriesTextDedup {
           .withColumn("rn", row_number().over(w))
           .filter(expr("rn <= n - (3 * n + 4) DIV 5 + 1"))
           .select("id", "tok", "rn", "n")
-        // (r16 note: a localCheckpoint here was tried and REVERTED —
-        // this self-join keeps both sides as shuffle exchanges, where
-        // reuse DOES fire, and the materialization more than doubled the
-        // measured time; contrast bandPairs, whose broadcast-converted
-        // side defeats reuse.)
+        // no cut here: both sides of this self-join stay shuffle
+        // exchanges, where reuse fires (contrast bandPairs)
         // PPJoin candidate pruning (Xiao et al. 2008) on top of the
         // prefix join: the LENGTH filter (J ≥ 0.6 forces
         // 5·min(na,nb) ≥ 3·max(na,nb)) and the POSITIONAL filter (the
@@ -1408,11 +1399,9 @@ object QueriesTextDedup {
         val base = fanOut(documents(s, d))
           .select(col("source"), col("doc_id"),
             split(col("text"), " ").as("t"))
-        // r17: materialized ONCE (the q150 single-pass gram rule) — the
-        // boiler membership ends in a BROADCAST side, so no exchange or
-        // stage reuse can fire across its two consumers and the whole
-        // 5-gram md5 build ran TWICE (measured: the gram pipeline is the
-        // query's hottest stage, ~22 s CPU per pass at sf1)
+        // cut: the boiler membership ends in a broadcast side, so its
+        // two consumers share no exchange and the 5-gram md5 build (the
+        // hottest stage) would run twice
         val grams = base
           .filter(size(col("t")) >= 5)
           .select(col("source"), col("doc_id"),
@@ -1420,7 +1409,7 @@ object QueriesTextDedup {
               .as(Seq("pos", "gm")))
           .select(col("source"), col("doc_id"), col("pos"),
             (Scalars.tokenHash(col("gm")) % QueriesText.P).as("g"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         // boiler membership df-counts DISTINCT CONTENT (round 12, the
         // q150 rule): the (g, doc)-distinct pairs — already narrow —
         // join the doc→sha2 map and dedup to (g, content) before the

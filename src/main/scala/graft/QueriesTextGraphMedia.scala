@@ -31,21 +31,19 @@ object QueriesTextGraphMedia {
     // longs. Scale shape: edges come from the band equi-join (never
     // pairwise); each iteration is one src equi-join + one dst
     // partial+final agg — linear in edges, fixed 5 rounds; the edge
-    // table with degrees is localCheckpointed once and reused by all
+    // table with degrees is cut once and reused by all
     // rounds; top-20 via TakeOrdered, never a global sort.
     Q("q167_pagerank_canon",
       (s, d) => {
-        // materialized (r16, q170's precedent): pairs feeds the ed
-        // checkpoint AND the ranks-init degree table — un-materialized,
-        // the whole contraction + band self-join re-ran for the second
-        // consumer
-        val pairs = contractedPairs(s, d).localCheckpoint(true)
+        // cut: pairs feeds ed and the ranks-init degree table, which
+        // share no exchange
+        val pairs = contractedPairs(s, d).transform(ops.Materialize.cut)
         val edges = pairs
           .select(col("a_id").as("src"), col("b_id").as("dst"))
           .unionByName(pairs
             .select(col("b_id").as("src"), col("a_id").as("dst")))
         val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        val ed = edges.join(deg, "src").localCheckpoint(true)
+        val ed = edges.join(deg, "src").transform(ops.Materialize.cut)
         var ranks = deg.select(col("src").as("id"),
           lit(1000000L).as("r"))
         for (_ <- 1 to 5) {
@@ -98,7 +96,7 @@ object QueriesTextGraphMedia {
     // top-20 via TakeOrdered, never a global sort.
     Q("q170_triangle_census",
       (s, d) => {
-        val pairs = contractedPairs(s, d).localCheckpoint(true)
+        val pairs = contractedPairs(s, d).transform(ops.Materialize.cut)
         val deg = pairs.select(col("a_id").as("node"))
           .unionByName(pairs.select(col("b_id").as("node")))
           .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -156,7 +154,7 @@ object QueriesTextGraphMedia {
     // nondeterministic first().
     // Scale shape: the graph is contracted to one node per DISTINCT
     // TEXT (the X71/X72 rule); each round is one edge⋈labels equi-join
-    // + two partial+final aggs over the checkpointed edge list — fixed
+    // + two partial+final aggs over the cut edge list — fixed
     // round count, monotone shuffle volume, q167's cost class.
     Q("q176_label_propagation",
       (s, d) => {
@@ -165,12 +163,12 @@ object QueriesTextGraphMedia {
           .select(col("a_id").as("src"), col("b_id").as("dst"))
           .unionByName(pairs
             .select(col("b_id").as("src"), col("a_id").as("dst")))
-          .localCheckpoint(true)
+          .transform(ops.Materialize.cut)
         val init = edges.select(col("src").as("id")).distinct()
           .join(documents(s, d)
             .select(col("doc_id").as("id"), col("source").as("lbl")),
             "id")
-          .localCheckpoint(true)
+          .transform(ops.Materialize.cut)
         def propagate(cur: org.apache.spark.sql.DataFrame) =
           edges.join(cur.select(col("id").as("dst"), col("lbl")), "dst")
             .groupBy(col("src"), col("lbl"))
@@ -261,7 +259,7 @@ object QueriesTextGraphMedia {
         // Hamming-band self-join — exchange reuse does not fire across
         // the aliased sides, so both sides re-ran the PNG encode+decode
         MultimodalAv.hammingNearDup(
-          Multimodal.perceptualHash(corpus).localCheckpoint(true),
+          Multimodal.perceptualHash(corpus).transform(ops.Materialize.cut),
           "doc_id", "phash", 3)
           .orderBy("a_id", "b_id")
       },
@@ -291,7 +289,7 @@ object QueriesTextGraphMedia {
         // r16: materialize the fingerprints once (q131's rationale —
         // the WAV synth+decode otherwise runs on both self-join sides)
         MultimodalAv.hammingNearDup(
-          MultimodalAv.audioFingerprints(corpus).localCheckpoint(true),
+          MultimodalAv.audioFingerprints(corpus).transform(ops.Materialize.cut),
           "doc_id", "afp", 3)
           .orderBy("a_id", "b_id")
       },
@@ -322,7 +320,8 @@ object QueriesTextGraphMedia {
         // r16: materialize the frame-hash table once (q131's rationale —
         // the GIF synth+decode otherwise runs on both self-join sides)
         MultimodalAv.sceneDupPairs(
-          MultimodalAv.sampleFrameHashes(corpus, 2).localCheckpoint(true),
+          MultimodalAv.sampleFrameHashes(corpus, 2)
+            .transform(ops.Materialize.cut),
           3, 2)
           .orderBy("a_id", "b_id")
       },
@@ -395,13 +394,13 @@ object QueriesTextGraphMedia {
     // non-monotone label updates). Remaining rounds are no-ops by
     // idempotence, so exiting is bit-identical to running all 8 (the
     // DuckDB oracle still replays the fixed-8 form — same fixpoint).
-    // The count is one cheap action over the already-checkpointed
+    // The count is one cheap action over the already-cut
     // round result and saves up to ~5 exchange-barrier rounds of the
     // measured 0.6–1.0 s iterative-tier floor (SCALE.md round-floor
     // section).
     // Scale shape: graph contracted to one node per DISTINCT TEXT
     // (the X71 rule); each round = one partial+final degree agg + two
-    // semi-joins over the round's edge list, localCheckpoint'd (the
+    // semi-joins over the round's edge list, cut each round (the
     // edge set is referenced twice per round — q92's lineage rule);
     // edge volume is monotonically non-increasing, so 8 rounds cost
     // at most 8× one edge pass. No windows, no collect.
@@ -412,7 +411,7 @@ object QueriesTextGraphMedia {
           .select(col("a_id").as("src"), col("b_id").as("dst"))
           .unionByName(pairs
             .select(col("b_id").as("src"), col("a_id").as("dst")))
-          .localCheckpoint(true)
+          .transform(ops.Materialize.cut)
         var prevN = e.count()
         var round = 0
         var done = false
@@ -422,7 +421,7 @@ object QueriesTextGraphMedia {
             .select(col("src").as("k"))
           e = e.join(keep, col("src") === col("k"), "left_semi")
             .join(keep, col("dst") === col("k"), "left_semi")
-            .localCheckpoint(true)
+            .transform(ops.Materialize.cut)
           val n = e.count()
           done = n == prevN // subset + equal count = identical set
           prevN = n
@@ -438,7 +437,7 @@ object QueriesTextGraphMedia {
         // which would cube the plan per round (3^8 leaf scans — observed
         // as a too-many-open-files explosion), so every round CTE is
         // AS MATERIALIZED — evaluated once, exactly like the Spark
-        // side's per-round localCheckpoint
+        // side's per-round Materialize.cut
         val rounds = (1 to 8).map { k =>
           s"""keep$k AS MATERIALIZED (SELECT src AS n FROM e${k - 1}
              |  GROUP BY src HAVING count(*) >= 2),

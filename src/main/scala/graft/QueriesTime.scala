@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{LayoutCache, Scalars}
+import graft.ops.{LayoutCache, Materialize, Scalars}
 
 /** Time-series OLAP tier over the `events` stream table — the analytics a
   * rankings time-series (date-grained facts, SURVEY.md §1.1) delegates to
@@ -804,10 +804,7 @@ object QueriesTime {
     // its valid version window.
     Q("q165_pit_features",
       (s, d) => {
-        // materialized ONCE (the q136/q160 localCheckpoint precedent):
-        // the fact side, the span agg, and both dimension versions all
-        // read the users×active-days daily table — one corpus scan.
-        val daily = dailyCounts(events(s, d)).localCheckpoint(true)
+        val daily = dailyCounts(events(s, d)).transform(Materialize.cut)
         val span = daily.groupBy("user_id")
           .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
         val dim = span.select(col("user_id"), col("d0").as("day"),
@@ -948,7 +945,7 @@ object QueriesTime {
           .groupBy(col("user_id"),
             Scalars.longDiv("ts", 604800000000000L).as("week"))
           .agg(count(lit(1)).as("n_ev"))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val cohort = weekly.groupBy("user_id")
           .agg(min("week").as("cohort_week"))
         val sizes = cohort.groupBy("cohort_week")
@@ -1386,7 +1383,6 @@ object QueriesTime {
     Q("q206_changepoint",
       (s, d) => {
         val daily = typeDailyCounts(events(s, d))
-          .localCheckpoint(true) // read twice: totals + the scored cumsum
         val tot = daily.groupBy("event_type")
           .agg(count(lit(1)).as("nd"), sum("n").as("t"))
         val w = Window.partitionBy("event_type").orderBy("day")
@@ -1396,14 +1392,15 @@ object QueriesTime {
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .join(broadcast(tot), "event_type")
           .filter(col("k") < col("nd"))
+          // nullif: the argmax join's inferred isnotnull(g) can be
+          // evaluated before the k < nd filter, on the k = nd row
           .withColumn("g",
             expr("((s_k * nd - k * t) * (s_k * nd - k * t)) " +
-              "DIV (k * (nd - k))") +
+              "DIV nullif(k * (nd - k), 0)") +
               coalesce(assert_true(col("t") < expr("3037000499 DIV nd"),
                 lit("q206: T >= 2^31.5/n — the contrast square would " +
                   "overflow long; widen to DECIMAL(38,0)")).cast("long"),
                 lit(0L)))
-          .localCheckpoint(true) // read twice: the max and the argmax join
         val gmax = scored.groupBy("event_type").agg(max("g").as("g_max"))
         scored.join(broadcast(gmax), "event_type")
           .filter(col("g") === col("g_max"))
@@ -1495,25 +1492,22 @@ object QueriesTime {
           .select(col("event_type"), col("t0"), col("t1"),
             col("fp.x").as("fx"), col("fp.y").as("fy"),
             col("lp.x").as("lx"), col("lp.y").as("ly"))
-          .localCheckpoint(true) // read twice: bucket map + endpoints
+          .transform(Materialize.cut)
         val bp = pts.join(broadcast(rng), "event_type")
           .select(col("event_type"), col("x"), col("y"), col("o"),
             expr("(x - t0) DIV 1000").as("xm"),
             expr(s"((x - t0) * $B) DIV (t1 - t0 + 1)").as("b"),
             expr("(fx - t0) DIV 1000").as("fxm"), col("fy"),
             expr("(lx - t0) DIV 1000").as("lxm"), col("ly"))
-          // corpus-sized but read twice (bucket stats + candidates): the
-          // r13 sf1 A/B read 2.6-3.0 s checkpointed vs 3.1 s recomputed
-          // — inside the host band but consistently ordered (recompute
-          // repeats the per-row cents/ord/bucket math) — so materialize:
-          // at 100 TB this is the production write of the bucketed
-          // projection, amortized across both consumers
-          .localCheckpoint(true)
+          // cut: corpus-sized, read by the bucket stats and the
+          // candidates, which share no exchange; recomputing repeats the
+          // per-row cents/ord/bucket math
+          .transform(Materialize.cut)
         val bstats = bp.groupBy("event_type", "b")
           .agg(count(lit(1)).as("n"), sum("xm").as("sxm"),
             sum("y").as("syc"), max("xm").as("mxm"),
             max(abs(col("y"))).as("may"), min("y").as("mny"))
-          .localCheckpoint(true) // read thrice: anchors + winner/end n
+          .transform(Materialize.cut)
         // `syc DIV n` (Spark truncates toward zero) matches the oracle's
         // `syc // n` (DuckDB floors) ONLY on a non-negative domain — the
         // Scalars.cents contract. Pin it: a future negative-value events
@@ -1555,9 +1549,9 @@ object QueriesTime {
               .otherwise(abs(
                 (col("ax1") - col("ax2")) * (col("y") - col("ay1")) -
                   (col("ax1") - col("xm")) * (col("ay2") - col("ay1")))))
-          .localCheckpoint(true) // interior candidates, read twice (max +
-          // argmax join) — kept: unlike bp this subtree carries the two
-          // broadcast anchor joins, so recompute is not a bare re-scan
+          // cut: the max and the argmax join share no exchange, and this
+          // subtree carries the two broadcast anchor joins
+          .transform(Materialize.cut)
         val smax = scored.groupBy("event_type", "b")
           .agg(max("s").as("s_max"))
         val winners = scored.join(broadcast(smax), Seq("event_type", "b"))
@@ -2432,7 +2426,7 @@ object QueriesTime {
   private[graft] def trendFromDaily(
       daily0: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val daily = daily0.localCheckpoint(true) // read twice: mins + moments
+    val daily = daily0.transform(Materialize.cut)
     val mins = daily.groupBy("event_type").agg(min("day").as("d0"))
     val xs = daily.join(broadcast(mins), "event_type")
       .select(col("event_type"), (col("day") - col("d0")).as("x"), col("n"))
@@ -2562,10 +2556,7 @@ object QueriesTime {
     val hourly = hourlyAgg
       .withColumn("avg_c", expr("cs DIV n"))
       .select("event_type", "h", "avg_c")
-      // consumed twice (spine bounds + the fill join): materialize the
-      // tiny types×hours table once so events is scanned exactly once
-      // (q154's eager-localCheckpoint precedent = the production write)
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val spine = hourly.groupBy("event_type")
       .agg(min("h").as("h0"), max("h").as("h1"))
       .select(col("event_type"),

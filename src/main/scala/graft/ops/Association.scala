@@ -32,7 +32,9 @@ object Association {
   private def chi2Core(pairs: DataFrame, a: String, b: String): DataFrame = {
     val cells = pairs.groupBy(col(a).as("ka"), col(b).as("kb"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(true) // read 4× below: cells + both marginals + total
+      // cut: each consumer's join infers its own isnotnull filter into
+      // this subtree, so the lazy plan scans the pairs once per consumer
+      .transform(Materialize.cut)
     val ra = cells.groupBy("ka").agg(sum("o").as("r"))
     val cb = cells.groupBy("kb").agg(sum("o").as("c"))
     val tot = cells.agg(sum("o").as("n"),

@@ -25,13 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Lineage: the r17 self-loop form references the previous round exactly
   * once, so a round is one join + one agg with no separate own-label pool
-  * branch; rounds are eager localCheckpoints (lazy checkpoints were
-  * measured in r16 and bought nothing: AQE materializes interior stages
-  * at RDD build regardless; caching them partition-aware was measured
-  * slower — see the in-method note). Local checkpoints trade
-  * executor-loss recovery for truncation; a production run on a lossy
-  * cluster uses reliable `checkpoint()` on a durable dir — same
-  * algorithm, one-line swap.
+  * branch; each round ends in a [[Materialize.cut]], the lineage cut of
+  * the convergence loop (caching the rounds partition-aware was measured
+  * slower — see the in-method note).
   */
 object ConnectedComponents {
 
@@ -71,13 +67,13 @@ object ConnectedComponents {
     // was measured SLOWER at sf1 than eager row-RDD checkpoints: the
     // columnar cache encode/decode cost more than the exchanges it
     // saved; q212's closure read 2.66 s cp-everything vs 3.28 s with a
-    // cached dst-partitioned sym vs 3.88 s all-cached. Checkpoints kept.)
+    // cached dst-partitioned sym vs 3.88 s all-cached. Cuts kept.)
     val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     val sym = und.select(col("src"), col("dst"), lit(false).as("self"))
       .union(und.select(col("src"), col("src").as("dst"),
         lit(true).as("self")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     var labels = sym.filter(col("self"))
       .select(col("src").as("v"), col("src").as("component"))
     var converged = false
@@ -88,7 +84,7 @@ object ConnectedComponents {
         .agg(min("component").as("component"),
           min(when(col("self"), col("component"))).as("prev"))
         .select(col("src").as("v"), col("component"), col("prev"))
-        .localCheckpoint(true)
+        .transform(Materialize.cut)
       // convergence via ONE full aggregate (count of changed labels):
       // a single job, where filter().isEmpty ran escalating take()
       // waves. Round 1 skips the check (r17): any edge (a, b) with

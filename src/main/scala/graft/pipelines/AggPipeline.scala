@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.Scalars
+import graft.ops.{Materialize, Scalars}
 
 /** Incremental materialized-aggregate maintenance for EXACT measures —
   * the AggregatingMergeTree / materialized-view analog of the reference's
@@ -117,11 +117,11 @@ object AggPipeline {
     * types×days-sized state. Batches must partition the stream
     * (exactly-once delivery — AvailableNow file replay or an idempotent
     * upstream); a re-delivered batch would double-count, exactly as it
-    * would in ClickHouse's MV insert path. The localCheckpoint is the
+    * would in ClickHouse's MV insert path. The cut is the
     * production parquet-snapshot cut point (DedupPipeline discipline).
     */
   def addBatch(state: DataFrame, batch: DataFrame): DataFrame =
-    merge(state.unionByName(dayPartials(batch))).localCheckpoint(true)
+    merge(state.unionByName(dayPartials(batch))).transform(Materialize.cut)
 
   /** The declared standalone simulation shape (q112's convention): the
     * stream arrives as `n` batches split by `event_id mod n`; each fold

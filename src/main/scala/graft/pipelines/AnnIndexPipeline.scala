@@ -36,7 +36,7 @@ import graft.QueriesText
 object AnnIndexPipeline {
 
   /** The persisted index table `(vec_id, embedding, nrm, cell)`. The
-    * `localCheckpoint(true)` cut in [[addBatch]] stands in for the durable
+    * `Materialize.cut` in [[addBatch]] stands in for the durable
     * parquet write of a production run (partitioned by `cell`, so a probe
     * reads one directory).
     */
@@ -79,7 +79,7 @@ object AnnIndexPipeline {
   def addBatch(index: AnnIndex, batch: DataFrame,
       cents: DataFrame): AnnIndex =
     AnnIndex(index.assigned.union(assign(batch, cents))
-      .localCheckpoint(true))
+      .transform(graft.ops.Materialize.cut))
 
   /** Top-k cosine search from the index: queries probe their own cell
     * (broadcast — the query set is small by definition), exact re-rank

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.QueriesCuration
-import graft.ops.{GlobalRank, Scalars}
+import graft.ops.{GlobalRank, Materialize, Scalars}
 
 /** The full training-data curation chain as ONE pipeline:
   * quality classify (q120) → near-dup representatives (q92/q93 via
@@ -17,7 +17,7 @@ import graft.ops.{GlobalRank, Scalars}
   * re-scans the corpus. A real curation run never does that — at 100 TB
   * the difference between one corpus scan per STAGE and one per QUERY is
   * the whole job cost. Here the corpus parquet is scanned ONCE into an
-  * eager materialization (`localCheckpoint` standing in for the
+  * eager materialization (`Materialize.cut` standing in for the
   * production parquet write, as at DedupPipeline's index cut points); the
   * three text-derived verdict families (token classifier, shingle closure,
   * 5-gram contamination) each read that materialization, land in ONE
@@ -67,7 +67,7 @@ object CurationPipeline {
     * survive as their own cluster.
     *
     * r17 (guide §1.2/§2.4): the labels table is consumed ONCE here, so
-    * the extra `localCheckpoint` it carried (a leftover of a
+    * the extra cut it carried (a leftover of a
     * two-consumer labels table) was a pure job; and since
     * only survivor doc_ids are needed (not q93's ordered dump), the
     * per-cluster rank window is replaced by the aggregation-form argmax
@@ -134,10 +134,10 @@ object CurationPipeline {
     * (doc_id % 100 = 0); those docs are out of scope for the funnel.
     */
   def run(docs: DataFrame): CurationOutputs = {
-    // the ONE corpus scan — localCheckpoint stands in for the production
+    // the ONE corpus scan — the cut stands in for the production
     // write of the scanned/normalized corpus snapshot (DedupPipeline's
     // cut-point discipline); every family below reads this, not parquet
-    val corpus = graft.Tables.fanOut(docs).localCheckpoint(true)
+    val corpus = graft.Tables.fanOut(docs).transform(Materialize.cut)
     val isBench = col("doc_id") % 100 === 0
     val bench = corpus.filter(isBench)
     val corp = corpus.filter(!isBench)
@@ -161,7 +161,7 @@ object CurationPipeline {
         coalesce(col("k_dedup"), lit(false)).as("k_dedup"),
         (!coalesce(col("contaminated"), lit(false))).as("k_decontam"),
         mixKept.as("k_mix"))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
 
     // q157's funnel over the cumulative conjunctions, stage order fixed
     val conj = Seq(col("k_quality"), col("k_dedup"), col("k_decontam"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueriesText
-import graft.ops.ConnectedComponents
+import graft.ops.{ConnectedComponents, Materialize}
 
 /** The near-dup dedup closure as a PIPELINE of stage functions: run the
   * expensive part ([[labels]]: minhash signatures → LSH band join →
@@ -69,7 +69,7 @@ object DedupPipeline {
     * index of every document ever processed; `labels` is the current
     * `(v, component)` closure over them (paired docs only, like
     * [[labels]]). Both stand in for durable tables — the
-    * `localCheckpoint(true)` cut points in [[addBatchBands]] are where a
+    * `Materialize.cut` points in [[addBatchBands]] are where a
     * production run writes parquet.
     */
   final case class DedupIndex(bands: DataFrame, labels: DataFrame)
@@ -163,7 +163,7 @@ object DedupPipeline {
       labels = merged
         .select(coalesce(col("v"), col("cnode")).as("v"),
           coalesce(col("root"), col("component")).as("component"))
-        .localCheckpoint(true))
+        .transform(Materialize.cut))
   }
 
   /** The declared standalone simulation shape (q112/q115): the corpus
@@ -173,7 +173,7 @@ object DedupPipeline {
     * its band slice.
     */
   def foldBatches(docs: DataFrame, n: Int): DedupIndex = {
-    val allBands = QueriesText.bandKeys(docs).localCheckpoint(true)
+    val allBands = QueriesText.bandKeys(docs).transform(Materialize.cut)
     (0 until n).foldLeft(emptyIndex(docs.sparkSession)) { (ix, i) =>
       addBatchBands(ix, allBands.filter(pmod(col("doc_id"), lit(n)) === i))
     }

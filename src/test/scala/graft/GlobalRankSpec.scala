@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
-import graft.ops.GlobalRank
+import graft.ops.{GlobalRank, Materialize}
 
 /** Distributed per-group ranking / exact percentiles must be value-
   * identical to the single-reducer forms they replace (window row_number;
@@ -307,14 +307,14 @@ class GlobalRankSpec extends SparkSpec {
       "partitioning or ordering is exact and reads one range exchange") {
     withConf(spreadConf: _*) {
       // checkpointed with AQE off, an aggregate keeps its hash partitioning
-      // (q144's value table in the AQE-off leg) and a sort its range
+      // (a value table cut with AQE off) and a sort its range
       // partitioning and ordering; RDDScanExec keeps their attribute ids
       // in its canonical form
       val (hashed, ordered) =
         withConf("spark.sql.adaptive.enabled" -> "false") {
-        (spread(3000).groupBy("g", "k").agg(sum("w").as("w"))
-          .localCheckpoint(true),
-          spread(3000).orderBy("g", "k").localCheckpoint(true))
+        (Materialize.cut(
+            spread(3000).groupBy("g", "k").agg(sum("w").as("w"))),
+          Materialize.cut(spread(3000).orderBy("g", "k")))
       }
       assert(hashed.queryExecution.executedPlan.outputPartitioning
         .isInstanceOf[HashPartitioning])

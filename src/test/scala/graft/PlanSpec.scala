@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
 import org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL
 
 /** Physical-plan quality gates (the "would this survive 100×" checks the
@@ -13,6 +14,25 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     Queries.byName(name).build(spark, sf)
       .queryExecution.executedPlan.toString
+
+  /** `name`'s plan with AQE off: its file scans, and the reads of each
+    * shuffle exchange above a scan (see exchangeReads). */
+  private def scansAndReads(name: String): (Int, Seq[Int]) = {
+    val reads = exchangeReads(Queries.byName(name).build(spark, sf))(
+      _.child.exists(_.isInstanceOf[FileSourceScanExec]))
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      (Queries.byName(name).build(spark, sf).queryExecution.executedPlan
+        .collect { case s: FileSourceScanExec => s }.size, reads)
+    }
+  }
+
+  /** Generate operators in `name`'s plan with AQE off, where a reused
+    * exchange stands for its whole subtree. */
+  private def generates(name: String): Int =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      Queries.byName(name).build(spark, sf).queryExecution.executedPlan
+        .collect { case g: GenerateExec => g }.size
+    }
 
   /** Reads of each `repartitionByRange` exchange in `name`'s plan (see
     * exchangeReads); an orderBy's range exchange is not counted. */
@@ -1047,9 +1067,8 @@ class PlanSpec extends SparkSpec {
       "probe both read the materialized (source, tok) aggregate") {
     val df = Queries.byName("q136_vocab_coverage").build(spark, sf)
     val p = df.queryExecution.executedPlan.toString
-    // the checkpoint truncates lineage: the declared plan must contain NO
-    // corpus explode (it ran once, at materialization time)
-    assert(!p.contains("Generate explode"),
+    // both consumers read the aggregate's exchange: one corpus explode
+    assert(generates("q136_vocab_coverage") == 1,
       s"probe or vocab fit re-explodes the corpus:\n${p.take(800)}")
     assert(p.contains("BroadcastHashJoin"),
       s"64-row vocab not broadcast into the probe:\n${p.take(800)}")
@@ -1080,12 +1099,23 @@ class PlanSpec extends SparkSpec {
       "runs over the materialized sources-sized table") {
     val df = Queries.byName("q137_mix_allocation").build(spark, sf)
     val p = df.queryExecution.executedPlan.toString
-    // counts are checkpointed: no FileScan of documents may remain in the
-    // declared plan (the one corpus scan ran at materialization time)
-    assert(!p.contains("documents.parquet"),
+    assert(scansAndReads("q137_mix_allocation")._1 == 1,
       s"allocation arithmetic re-scans the corpus:\n${p.take(800)}")
     assert(!p.contains("CartesianProduct"),
       s"product in the allocation plan:\n${p.take(800)}")
+  }
+
+  test("a subtree read by several consumers is shared through a reused " +
+      "exchange, not a Materialize.cut: one scan, one exchange read by " +
+      "each consumer") {
+    // query -> consumers of the shared aggregate's exchange
+    for ((q, n) <- Seq("q136_vocab_coverage" -> 2, "q140_dsir_score" -> 2,
+        "q173_centroid_cosine" -> 3, "q206_changepoint" -> 2,
+        "q209_alpha_mix" -> 2)) {
+      val (scans, reads) = scansAndReads(q)
+      assert(scans == 1 && reads.max == n,
+        s"$q: $scans scans, exchange reads $reads")
+    }
   }
 
   test("q154 budget materialization: two-phase prefix sum — corpus " +
@@ -1139,9 +1169,8 @@ class PlanSpec extends SparkSpec {
       "counts; ratio table broadcast; top-k via TakeOrdered") {
     val df = Queries.byName("q140_dsir_score").build(spark, sf)
     val p = df.queryExecution.executedPlan.toString
-    // the checkpoint truncates lineage: the declared plan must contain NO
-    // corpus explode (it ran once, at materialization time)
-    assert(!p.contains("Generate explode"),
+    // both consumers read the counts' exchange: one corpus explode
+    assert(generates("q140_dsir_score") == 1,
       s"score or marginal re-explodes the corpus:\n${p.take(800)}")
     assert(p.contains("BroadcastHashJoin"),
       s"4096-row ratio table not broadcast onto the counts:\n${p.take(800)}")

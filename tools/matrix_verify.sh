@@ -1,8 +1,11 @@
 #!/bin/bash
 # Full-surface correctness matrix: every registered query under each
-# robustness config (codegen-off, AQE-off, local[7], sf0.1, sf1), each
-# followed by the local DuckDB oracle compare. Runs against a class
-# SNAPSHOT (CLASSDIR) so concurrent recompiles can't tear a running JVM.
+# robustness config (codegen-off, AQE-off at sf0.01 and sf0.1, local[7],
+# sf0.1, sf1), each followed by the local DuckDB oracle compare. The
+# AQE-off leg runs at sf0.1 too: at sf0.01 a range exchange samples every
+# row, so plan faults that depend on size stay hidden there. Runs against
+# a class SNAPSHOT (CLASSDIR) so concurrent recompiles can't tear a
+# running JVM.
 # Usage: CLASSDIR=/tmp/graft_classes tools/matrix_verify.sh <tag>
 set -uo pipefail
 TAG=${1:-r13}
@@ -31,6 +34,8 @@ run() { # name, sfdir, outdir, env...
 run cg    /root/testdata/sf0.01 /tmp/verify_${TAG}_cg \
     SPARK_GRAFT_CONF=spark.sql.codegen.wholeStage=false
 run aqe   /root/testdata/sf0.01 /tmp/verify_${TAG}_aqe \
+    SPARK_GRAFT_CONF=spark.sql.adaptive.enabled=false
+run aqe01 /root/testdata/sf0.1  /tmp/verify_sf01_${TAG}_aqe \
     SPARK_GRAFT_CONF=spark.sql.adaptive.enabled=false
 run l7    /root/testdata/sf0.01 /tmp/verify_${TAG}_l7 SPARK_GRAFT_CPUS=7
 run sf01  /root/testdata/sf0.1  /tmp/verify_sf01_${TAG}
